@@ -294,7 +294,7 @@ def rabitq_search_adaptive(
     converged queries BITWISE the fixed-``nprobe_lo`` rows, and
     margin→∞ reproduces the fixed-``nprobe_hi`` search everywhere.
     ``search_kw`` forwards to :func:`rabitq.rabitq_search` (estimator,
-    refine, refine_mode, scorer, ...)."""
+    refine, refine_mode, ...)."""
     probes_hi = select_probes(
         queries, centroids.select("cluster_id", "centroid"), nprobe_hi,
         qid=qid, qvec=qvec,

@@ -722,18 +722,18 @@ def _ann_self_join_scored_pairs(
     id_: str,
     vec: str,
     n_clusters: int,
-    rerank_route: str = "broadcast",
 ) -> DataFrame:
     """Shared core of the ANN near-dup pair finders → (id_a, id_b, cos)
     candidate pairs with exact cosine, id_a < id_b, deduped.
 
     Pipeline: L2-normalize (cosine ≡ L2 on the unit sphere,
     python/utils/preprocess.py:3-5) → build the IVF+RaBitQ index →
-    every vector queries the index (cogroup Arrow scorer: the query
-    side is a DataFrame end-to-end, NO driver collect — this is what
-    lets the self-join run with N = corpus size) → exact re-rank on
-    raw vectors → pair normalization (a<b) → exact cosine per pair.
-    Callers apply their own selection (global top-N / threshold)."""
+    every vector queries the index (rabitq_search plans the routes by
+    size: a corpus-sized query side gets the cogroup scorer — NO driver
+    collect — and the shuffle rerank, which is what lets the self-join
+    run with N = corpus size) → exact re-rank on raw vectors → pair
+    normalization (a<b) → exact cosine per pair.  Callers apply their
+    own selection (global top-N / threshold)."""
     from .ivf import sampled_kmeans_centroids
     from .rabitq import build_index, centroids_with_rotation, rabitq_search
 
@@ -744,10 +744,10 @@ def _ann_self_join_scored_pairs(
     cents = sampled_kmeans_centroids(norm, k=n_clusters, vec="vec")
     index_df, meta = build_index(norm, cents, total_bits=total_bits)
     # r11: the eager index checkpoint is GONE.  After the r11 plan
-    # reshapes (fused query prep, prune_codes=False, single rerank
-    # chain) the codes subtree is consumed by exactly ONE action — the
-    # scored-shortlist evaluation — so the barrier bought nothing and
-    # cost a standalone driver-blocking job + block store per run
+    # reshapes (fused query prep, no codes semi-join at full probes,
+    # single rerank chain) the codes subtree is consumed by exactly ONE
+    # action — the scored-shortlist evaluation — so the barrier bought
+    # nothing and cost a standalone driver-blocking job + block store per run
     # (measured 1.7s of a ~5.3s warm wall at sf0.1).  Production
     # serving still persists indexes (save_index / save_index_bucketed);
     # a REUSED in-session index should be staged by the caller.
@@ -762,20 +762,6 @@ def _ann_self_join_scored_pairs(
         nprobe=nprobe,
         k=k_per_query + 1,  # +1: self-match rides along and is dropped
         rerank_base=norm,
-        scorer="arrow_cogroup",
-        # at nprobe ≥ K the scorer can skip probe selection wholesale —
-        # three fewer shuffles on the query side (see _arrow_scored_cogroup)
-        full_probes=nprobe >= n_clusters,
-        # self-join: every non-empty cluster is probed by its own members
-        # (a member's rank-1 probe is its assigned centroid), so the
-        # probed-cluster semi-join prunes nothing — skip it (r11)
-        prune_codes=False,
-        # 'broadcast' (default) fits fixture/bench batches; 100 TB
-        # deployments pass 'shuffle' — queries = corpus here, and the
-        # broadcast route would ship the whole corpus's (qid, id)
-        # shortlist + query vectors to every executor (r11, VERDICT r10
-        # what's-wrong #5; routes are result-identical, pinned in tests)
-        rerank_route=rerank_route,
     )
     pairs = (
         res.where(F.col("qid") != F.col("id"))
@@ -812,7 +798,6 @@ def embedding_ann_pairs(
     id_: str = "vec_id",
     vec: str = "embedding",
     n_clusters: int = 16,
-    rerank_route: str = "broadcast",
 ) -> DataFrame:
     """Embedding near-dup via a distributed ANN self-join — the scale path
     of :func:`embedding_cosine_pairs` → (rnk, id_a, id_b, cos_r) global
@@ -820,10 +805,11 @@ def embedding_ann_pairs(
 
     Pipeline: L2-normalize (cosine ≡ L2 on the unit sphere,
     python/utils/preprocess.py:3-5) → build the IVF+RaBitQ index → every
-    vector queries the index (cogroup Arrow scorer: the query side is a
-    DataFrame end-to-end, NO driver collect — this is what lets the
-    self-join run with N = corpus size) → exact re-rank on raw vectors → pair
-    normalization (a<b) → global top-N by exact cosine.
+    vector queries the index (the search planner gives a corpus-sized
+    query side the cogroup scorer — NO driver collect — and the shuffle
+    rerank, so the self-join runs with N = corpus size) → exact re-rank
+    on raw vectors → pair normalization (a<b) → global top-N by exact
+    cosine.
 
     Losslessness at full probes: a pair in the global top-N has fewer
     than N pairs above it, so each endpoint has < N nearer neighbors —
@@ -844,8 +830,7 @@ def embedding_ann_pairs(
     if k_per_query is None:
         k_per_query = top_n + 1
     scored = _ann_self_join_scored_pairs(
-        emb, k_per_query, nprobe, total_bits, id_, vec, n_clusters,
-        rerank_route=rerank_route,
+        emb, k_per_query, nprobe, total_bits, id_, vec, n_clusters
     )
     # Global top-N in two phases: TakeOrderedAndProject (per-partition
     # partial top-N, parallel — this stage also evaluates the exact
@@ -873,7 +858,6 @@ def embedding_threshold_pairs_ann(
     id_: str = "vec_id",
     vec: str = "embedding",
     n_clusters: int = 16,
-    rerank_route: str = "broadcast",
 ) -> DataFrame:
     """THRESHOLD-form ANN near-dup pairs → (id_a, id_b, cos_r) with
     cosine ≥ threshold — the scale twin of
@@ -881,8 +865,8 @@ def embedding_threshold_pairs_ann(
     that prune on a similarity cutoff rather than a global top-N.
 
     Same distributed self-join as :func:`embedding_ann_pairs` (normalize
-    → IVF+RaBitQ index → every vector queries, cogroup Arrow scorer so
-    the query side never collects → exact re-rank), then pairs keep cos ≥ τ.
+    → IVF+RaBitQ index → every vector queries, routes planned by size
+    → exact re-rank), then pairs keep cos ≥ τ.
     Each pair has TWO chances to surface (both endpoints query); a pair
     is missed only if BOTH endpoints have ≥ k_per_query strictly nearer
     neighbors AND (when nprobe < n_clusters) both probes miss — on
@@ -890,8 +874,7 @@ def embedding_threshold_pairs_ann(
     both lists, so modest k_per_query suffices; fixture equality with
     the exact form is value-tested."""
     scored = _ann_self_join_scored_pairs(
-        emb, k_per_query, nprobe, total_bits, id_, vec, n_clusters,
-        rerank_route=rerank_route,
+        emb, k_per_query, nprobe, total_bits, id_, vec, n_clusters
     )
     return (
         scored.where(F.col("cos") >= threshold)

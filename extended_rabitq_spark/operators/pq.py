@@ -52,14 +52,16 @@ def _require_width(df: DataFrame, vec: str, dim: int, ctx: str) -> DataFrame:
     must cover the whole vector — ``m * dsub == size(vec)``.  A wider
     vector would silently truncate every dim-specialized distance and
     every subspace slice downstream (the "exact"-looking ADC estimates
-    would quietly ignore the tail).  ``assert_true`` is NULL on success,
-    so the filter keeps every row (results and hashes unchanged for
-    valid data) and THROWS on the first mismatching row; cost is one
-    O(1) ``size()`` per row, no shuffle, no extra pass."""
+    would quietly ignore the tail).  The CASE is NULL on valid rows, so
+    the filter keeps every row (results and hashes unchanged for valid
+    data) and THROWS on the first bad one, naming its defect: a NULL
+    vector or a wrong width; cost is one O(1) ``size()`` per row, no
+    shuffle, no extra pass."""
     return df.where(
         F.expr(
-            f"assert_true(size({vec}) = {dim}, "
-            f"'{ctx}: vector width != m*dsub = {dim}') IS NULL"
+            f"CASE WHEN {vec} IS NULL THEN raise_error('{ctx}: vector NULL') "
+            f"WHEN size({vec}) != {dim} THEN "
+            f"raise_error('{ctx}: vector width != m*dsub = {dim}') END IS NULL"
         )
     )
 
@@ -149,11 +151,10 @@ def pq_adc_knn(
         .where(F.col("crank") <= coarse_k)
     )
     wf = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    # Exact rerank stays FULL-WIDTH (no dim hint): m*dsub equals the true
-    # vector width for every registered caller, but the generic contract
-    # allows m*dsub < size(vec), and an unrolled dim would silently
-    # truncate the "exact" distances (ADVICE r10).  The shortlist is
-    # qid×coarse_k rows, so the HOF kernel costs nothing here.
+    # Exact rerank stays FULL-WIDTH (no dim hint) as defense in depth:
+    # _require_width already rejects m*dsub != size(vec), the one case
+    # where an unrolled dim would truncate the "exact" distances.  The
+    # shortlist is qid×coarse_k rows, so the HOF kernel costs nothing.
     out = (
         base.join(F.broadcast(cand.select("qid", "id", "qvec")), "id")
         .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))
@@ -236,13 +237,16 @@ def ivfpq_knn(
     base = _require_width(base, "vec", dim, "ivfpq_knn")
     queries = _require_width(queries, "qvec", dim, "ivfpq_knn")
     assigned = assign_clusters(base, centroids, dim=dim)  # (id, vec, cluster_id)
-    # Pinned (localCheckpoint): the residual table feeds THREE plan
+    # Staged lazily (_stage_lazy): the residual table feeds THREE plan
     # branches (codebook derivation, the encode join, and the
-    # cluster_id join under `approx`) — without a barrier the argmin
-    # assignment chain (a K-way unrolled-l2 scan of the base) re-runs
-    # once per branch and the analyzed plan tops 1,000 lines.  One row
-    # per base vector (id, cluster_id, rvec) — the same "write the
-    # index, then search it" staging save_ivfpq_index does on disk.
+    # cluster_id join under `approx`), and the analyzed plan would top
+    # 1,000 lines if each re-derived it.  The checkpoint fills on the
+    # first action that reads it — the eager codebook job when
+    # codebooks=None; with caller-supplied codebooks that is the final
+    # search job itself, whose concurrent stages may each run the argmin
+    # scan before the checkpoint is filled (perf only).  One row per
+    # base vector (id, cluster_id, rvec) — the same "write the index,
+    # then search it" staging save_ivfpq_index does on disk.
     res = assigned.join(F.broadcast(centroids), "cluster_id").select(
         "id", "cluster_id", F.expr(V.sub("vec", "centroid")).alias("rvec")
     ).transform(_stage_lazy)
@@ -294,9 +298,10 @@ def ivfpq_knn(
         .where(F.col("crank") <= coarse_k)
     )
     wf = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    # Exact rerank stays FULL-WIDTH (no dim hint) — see pq_adc_knn: an
-    # unrolled dim=m*dsub would silently truncate the exact distances
-    # whenever m*dsub < size(vec) (ADVICE r10); shortlist is tiny.
+    # Exact rerank stays FULL-WIDTH (no dim hint) as defense in depth:
+    # _require_width already rejects m*dsub != size(vec), the one case
+    # where an unrolled dim=m*dsub would truncate the exact distances;
+    # the shortlist is tiny, so the HOF kernel costs nothing.
     return (
         base.join(F.broadcast(cand.select("qid", "id", "qvec")), "id")
         .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))

@@ -39,18 +39,19 @@ nprobe.
 
 Scale design: the build is ``repartition(cluster_id)`` + Arrow-batched
 ``mapInPandas`` (1 Spark task per cluster group ≡ the reference's OpenMP
-task per cluster, inc/index/IVF.hpp:142-148); the search is pure JVM
-column arithmetic (zip_with/aggregate inside whole-stage codegen) over a
-``cluster_id``-partitioned parquet index — no Python in the query hot
-path, partition pruning on the probe join.
+task per cluster, inc/index/IVF.hpp:142-148); the search scores each
+probed cluster with one BLAS matmul in an Arrow batch over a
+``cluster_id``-partitioned parquet index, on a broadcast or a cogroup
+route that :func:`_plan_search` picks from the batch size.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
-from typing import Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -432,19 +433,9 @@ def save_index(
 def _save_side_artifacts(spark, centroids: DataFrame, meta: dict, path: str) -> None:
     """Rotated-centroid side table + meta.json (shared by the
     partitioned and bucketed index sinks)."""
-    P = rotation_matrix(meta["D"], meta["seed"])
-    rows = centroids.collect()
-    dim = meta["dim"]
-    data = []
-    for r in rows:
-        c = np.zeros(meta["D"])
-        c[:dim] = np.array(r["centroid"], dtype=np.float64)
-        crot = c @ P.T
-        data.append((int(r["cluster_id"]), [float(x) for x in r["centroid"]],
-                     [float(x) for x in crot]))
-    spark.createDataFrame(
-        data, "cluster_id int, centroid array<double>, centroid_rot array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    centroids_with_rotation(spark, centroids, meta).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids")
     os.makedirs(path, exist_ok=True)
     with open(f"{path}/meta.json", "w") as f:
         json.dump(meta, f)
@@ -784,7 +775,6 @@ def rebalance_index(
     new_codes.repartition("cluster_id").write.mode("overwrite").partitionBy(
         "cluster_id"
     ).parquet(tmp)
-    rows_moved = 0
     graveyard = f"{path}/codes_old_rebalance"
     os.makedirs(graveyard, exist_ok=True)
     for cid in hot:
@@ -891,7 +881,7 @@ def search_index(
       same decision the reference makes by K at build time
       (inc/index/IVF.hpp:157-161); ``False`` forces exact W1 probes.
     - any :func:`rabitq_search` knob passes through (``refine``,
-      ``estimator``, ``scorer``...).
+      ``estimator``, ``refine_mode``...).
     - index-kind dispatch: a ``meta.json`` with ``kind: "ivfpq"`` (from
       ``pq.save_ivfpq_index``) routes to :func:`pq.search_ivfpq_index`
       with the same (queries, k, nprobe, rerank_base) contract — one
@@ -1057,12 +1047,40 @@ _SCORED_SCHEMA = "qid long, id long, est_dist double, est_lb double"
 # probe rank so ONE scored pool serves every nprobe ≤ the scored maximum
 _SCORED_SCHEMA_PR = _SCORED_SCHEMA + ", probe_rank long"
 
-# the micro-batch contract: batches at or under this size may use the
-# driver-prepped broadcast scorer; anything larger auto-routes to the
-# cogroup scorer (no driver collect of the query side).  Exposed as a
-# module constant so callers that PIN the broadcast scorer (the serving
-# benchmark) can enforce the same bound they bypass (ADVICE r8).
-_BROADCAST_MAX_QUERIES_DEFAULT = 4096
+
+def _scored_columns(
+    est: np.ndarray,
+    lb: np.ndarray,
+    qg: np.ndarray,
+    ids: np.ndarray,
+    pr: np.ndarray | None,
+    per_cluster_cut: int | None,
+) -> dict[str, np.ndarray]:
+    """One (n codes) × (g queries) block of both Arrow scorers → flat
+    candidate columns (+ ``probe_rank`` when ``pr`` is given).
+
+    With ``per_cluster_cut`` below n, the map-side E2 pre-cut keeps, per
+    query, every row at or below the cut-th smallest est_lb (ties
+    included → a SUPERSET of the global (est_lb, id) rank cut, so
+    _finalize_topk returns identical results) — the shuffle into the
+    global window carries ≤ cut·g rows per block instead of n·g."""
+    n, g = est.shape
+    if per_cluster_cut is not None and n > per_cluster_cut:
+        kth = np.partition(lb, per_cluster_cut - 1, axis=0)[per_cluster_cut - 1, :]
+        xi, qi = np.nonzero(lb <= kth[None, :])
+        cols = {"qid": qg[qi], "id": ids[xi], "est_dist": est[xi, qi], "est_lb": lb[xi, qi]}
+        if pr is not None:
+            cols["probe_rank"] = pr[qi]
+        return cols
+    cols = {
+        "qid": np.broadcast_to(qg, (n, g)).ravel(),
+        "id": np.repeat(ids, g),
+        "est_dist": est.ravel(),
+        "est_lb": lb.ravel(),
+    }
+    if pr is not None:  # skip the n·g alloc on the hot path
+        cols["probe_rank"] = np.broadcast_to(pr, (n, g)).ravel()
+    return cols
 
 
 def _arrow_scored_broadcast(
@@ -1086,11 +1104,12 @@ def _arrow_scored_broadcast(
     Probe selection runs driver-side in numpy (the same move as the
     reference materializing the probe list, inc/index/IVF.hpp:303-304),
     producing a broadcast ``cluster_id → (qids, QR matrix, y2)`` map.
-    This bounds NQ by driver memory — rabitq_search auto-routes batches
-    above ``broadcast_max_queries`` to the cogroup scorer, which has no
-    driver bound.  Codes are LEFT-SEMI-joined with the tiny
-    distinct-probed-cluster table (no row duplication) and scored per
-    cluster with one BLAS matmul against the whole probing-query matrix.
+    That map bounds NQ by driver memory — :func:`_plan_search` picks
+    this scorer only while the map fits the broadcast threshold; bigger
+    batches go to the cogroup scorer, which has no driver bound.  Codes
+    are LEFT-SEMI-joined with the tiny distinct-probed-cluster table (no
+    row duplication) and scored per cluster with one BLAS matmul against
+    the whole probing-query matrix.
     """
     spark = queries.sparkSession
     D = meta["D"]
@@ -1118,9 +1137,9 @@ def _arrow_scored_broadcast(
     # blocking (same diff/square/axis-2 reduction per (q, c) pair), so
     # d2 is BITWISE what the one-shot form produced — probe orders and
     # every pinned expected table are unaffected; the temp is bounded to
-    # ~0.5 GB regardless of NQ (the auto-route already caps NQ at
-    # broadcast_max_queries, but 4096 queries × 4096 cells × 1536 dims
-    # would still be 200 GB unblocked).
+    # ~0.5 GB regardless of NQ (the planner already bounds NQ·nprobe·D,
+    # but not NQ·K·dim: 4096 queries × 4096 cells × 1536 dims would
+    # still be 200 GB unblocked).
     d2 = np.empty((len(qids), len(cids)))
     blk = max(1, int(5e8) // (cmat.shape[0] * cmat.shape[1] * 8))
     for s in range(0, len(qids), blk):
@@ -1170,43 +1189,17 @@ def _arrow_scored_broadcast(
             fip = pdf["f_ip_ex"].to_numpy()
             ferr = pdf["f_err"].to_numpy()
             ids = pdf["id"].to_numpy()
-            out_q, out_i, out_e, out_l, out_r = [], [], [], [], []
+            outs = []
             for cid, idx in pdf.groupby("cluster_id", sort=False).indices.items():
                 qg, QR, y2, pr = qr_[int(cid)]
-                n, g = len(idx), len(qg)
                 est, lb = _score_cluster_np(
                     S[idx], x2[idx], fip[idx], ferr[idx], QR, y2, estimator, D
                 )
-                if per_cluster_cut is not None and n > per_cluster_cut:
-                    # map-side E2 pre-cut (ties kept → superset of the
-                    # global rank cut; identical final results — see
-                    # the cogroup scorer)
-                    kth = np.partition(lb, per_cluster_cut - 1, axis=0)[
-                        per_cluster_cut - 1, :
-                    ]
-                    xi, qi = np.nonzero(lb <= kth[None, :])
-                    out_q.append(qg[qi])
-                    out_i.append(ids[idx][xi])
-                    out_e.append(est[xi, qi])
-                    out_l.append(lb[xi, qi])
-                    if with_probe_rank:
-                        out_r.append(pr[qi])
-                    continue
-                out_q.append(np.broadcast_to(qg, (n, g)).ravel())
-                out_i.append(np.repeat(ids[idx], g))
-                out_e.append(est.ravel())
-                out_l.append(lb.ravel())
-                if with_probe_rank:  # skip the n·g alloc on the hot path
-                    out_r.append(np.broadcast_to(pr, (n, g)).ravel())
-            cols = {
-                "qid": np.concatenate(out_q),
-                "id": np.concatenate(out_i),
-                "est_dist": np.concatenate(out_e),
-                "est_lb": np.concatenate(out_l),
-            }
-            if with_probe_rank:
-                cols["probe_rank"] = np.concatenate(out_r)
-            yield pd.DataFrame(cols)
+                outs.append(_scored_columns(
+                    est, lb, qg, ids[idx], pr if with_probe_rank else None,
+                    per_cluster_cut,
+                ))
+            yield pd.DataFrame({c: np.concatenate([o[c] for o in outs]) for c in outs[0]})
 
     return cand.mapInPandas(
         score, _SCORED_SCHEMA_PR if with_probe_rank else _SCORED_SCHEMA
@@ -1220,13 +1213,16 @@ def _fused_qprobe(
     nprobe: int,
     qid: str,
     qvec: str,
-    full_probes: bool,
     with_probe_rank: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """Query-side prep of the cogroup scorer fused into ONE Arrow pass →
-    (qid, cluster_id, qr ARRAY<DOUBLE> [, probe_rank]) — pad+rotate (P2),
-    probe selection (W1) and the per-(query, cluster) rotated residual,
-    map-only (r11, guide §2.4/§4.1).
+    ((qid, cluster_id, qr ARRAY<DOUBLE> [, probe_rank]), full) —
+    pad+rotate (P2), probe selection (W1) and the per-(query, cluster)
+    rotated residual, map-only.
+
+    ``full`` is ``nprobe ≥ K`` (K from the centroid rows collected
+    here) unless probe ranks are asked for: every query then probes every
+    cluster in cluster_id order and probe selection is skipped.
 
     Replaces, per evaluation of the qprobe subtree: the separate
     ``rotate_queries`` Python pass, the crossJoin→``row_number`` probe
@@ -1260,7 +1256,8 @@ def _fused_qprobe(
     crot = np.stack([v for _, _, v in cent_rows])      # K × D (rotated)
     bC = spark.sparkContext.broadcast((cids, cmat, crot, P))
     K = len(cent_rows)
-    take = K if full_probes else min(nprobe, K)
+    full = nprobe >= K and not with_probe_rank
+    take = min(nprobe, K)
     # bound the emitted block: take rows per query × D doubles each
     qblk = max(64, 2_000_000 // max(take * D, 1))
 
@@ -1276,7 +1273,7 @@ def _fused_qprobe(
                 Qpad = np.zeros((g, D))
                 Qpad[:, :dim] = Qraw
                 QR = Qpad @ P_.T  # ≡ rotate_queries
-                if full_probes:
+                if full:
                     sel = np.broadcast_to(np.arange(K), (g, K))
                 else:
                     # W1: unrolled-fold L2², accumulated left-to-right so
@@ -1303,7 +1300,34 @@ def _fused_qprobe(
     schema = "qid long, cluster_id int, qr array<double>"
     if with_probe_rank:
         schema += ", probe_rank long"
-    return queries.select(qid, qvec).mapInPandas(prep, schema)
+    return queries.select(qid, qvec).mapInPandas(prep, schema), full
+
+
+def _probe_residuals(
+    queries: DataFrame,
+    probes: DataFrame,
+    centroids: DataFrame,
+    meta: dict,
+    qid: str,
+    qvec: str,
+    with_probe_rank: bool = False,
+) -> DataFrame:
+    """Declarative query prep for a probe DataFrame → (qid, cluster_id,
+    qr [, probe_rank]): rotate the queries (P2), join them to their
+    probes and subtract each probed cluster's rotated centroid."""
+    qrot = rotate_queries(queries, meta, qid=qid, qvec=qvec)
+    rank_cols = [F.col("probe_rank")] if with_probe_rank else []
+    return (
+        probes.select(F.col(qid).alias("qid"), "cluster_id", *rank_cols)
+        .join(qrot, on="qid")
+        .join(F.broadcast(centroids.select("cluster_id", "centroid_rot")), on="cluster_id")
+        .select(
+            "qid",
+            "cluster_id",
+            F.expr("zip_with(qrot, centroid_rot, (a, b) -> a - b)").alias("qr"),
+            *rank_cols,
+        )
+    )
 
 
 def _arrow_scored_cogroup(
@@ -1317,14 +1341,11 @@ def _arrow_scored_cogroup(
     estimator: str,
     probes: DataFrame | None = None,
     per_cluster_cut: int | None = None,
-    full_probes: bool = False,
     with_probe_rank: bool = False,
-    prune_codes: bool = True,
 ) -> DataFrame:
     """Unbounded-batch Arrow scorer → (qid, id, est_dist, est_lb)
     (+ ``probe_rank`` when ``with_probe_rank`` — see the broadcast
-    scorer; requires rank-bearing probes, so not with ``full_probes``
-    and only with injected ``probes`` that carry a probe_rank column).
+    scorer; injected ``probes`` must then carry a probe_rank column).
 
     NO driver collect of the query side: probe selection (W1) and
     per-(query, cluster) rotated residuals run as DataFrames (the same
@@ -1336,12 +1357,11 @@ def _arrow_scored_cogroup(
     100k-query broadcast dict (~25 GB at D=1536, nprobe=20) never
     exists.
 
-    ``full_probes=True`` (caller asserts nprobe ≥ K, e.g. the lossless
-    ANN self-join dedup): probe selection degenerates to "every query
-    probes every cluster", so the W1 rank window, the probes→qrot join,
-    and the distinct-probed-keys semi-join all drop out of the plan —
-    the query side becomes scan → rotate → broadcast-crossjoin, with
-    zero query-side shuffles before the cogroup exchange.
+    Full probes (nprobe ≥ K, e.g. the lossless ANN self-join dedup;
+    decided in :func:`_fused_qprobe`): probe selection degenerates to
+    "every query probes every cluster", so the probe sort and the
+    distinct-probed-keys semi-join on the codes both drop out of the
+    plan — nothing is left to prune.
 
     Cost vs the broadcast scorer: the probed codes shuffle once for the
     cogroup (the broadcast path reads them in place) — UNLESS the index
@@ -1352,63 +1372,39 @@ def _arrow_scored_cogroup(
     exactly like the reference's per-cluster OpenMP loop).
     """
     D = meta["D"]
-    if with_probe_rank and full_probes:
-        raise ValueError("with_probe_rank: probe ranks are undefined at full_probes")
     if with_probe_rank and probes is not None and "probe_rank" not in probes.columns:
         raise ValueError("with_probe_rank: injected probes lack a probe_rank column")
     if probes is None:
         # W1 exact probes: fused map-only prep (rotate + probe + residual
         # in one Arrow pass, zero query-side shuffles — see _fused_qprobe;
         # bitwise-identical to the rotate/window/join chain it replaced)
-        qprobe = _fused_qprobe(
-            queries, centroids, meta, nprobe, qid, qvec, full_probes,
+        qprobe, full = _fused_qprobe(
+            queries, centroids, meta, nprobe, qid, qvec,
             with_probe_rank=with_probe_rank,
         )
-        if full_probes or not prune_codes:
-            # full probes: every cluster probed, nothing to prune.
-            # prune_codes=False: caller asserts the probed-cluster set
-            # covers every non-empty cluster (e.g. the ANN SELF-join,
-            # where each member's rank-1 probe is its own cluster) —
-            # skipping the semi-join saves a second evaluation of the
-            # qprobe subtree plus a distinct + broadcast build.  Always
-            # result-safe: unprobed clusters cogroup with an empty query
-            # side and emit nothing.
-            cand = codes
-        else:
-            # partition pruning: only probed clusters' codes are read
-            keys = qprobe.select("cluster_id").distinct()
-            cand = codes.join(F.broadcast(keys), on="cluster_id", how="leftsemi")
     else:
-        qrot = rotate_queries(queries, meta, qid=qid, qvec=qvec)
-        rank_cols = [F.col("probe_rank")] if with_probe_rank else []
-        probes = probes.select(F.col(qid).alias("qid"), "cluster_id", *rank_cols)
-        qprobe = (
-            probes.join(qrot, on="qid")
-            .join(F.broadcast(centroids.select("cluster_id", "centroid_rot")), on="cluster_id")
-            .select(
-                "qid",
-                "cluster_id",
-                F.expr("zip_with(qrot, centroid_rot, (a, b) -> a - b)").alias("qr"),
-                *rank_cols,
-            )
-        )
-        # partition pruning: only probed clusters' codes are read at all
+        qprobe, full = _probe_residuals(
+            queries, probes, centroids, meta, qid, qvec, with_probe_rank
+        ), False
+    cand = codes
+    if not full:
+        # partition pruning: only probed clusters' codes are read.  At
+        # full probes nothing is left to prune, and skipping the
+        # semi-join saves a second evaluation of the qprobe subtree plus
+        # a distinct + broadcast build.
         keys = qprobe.select("cluster_id").distinct()
         cand = codes.join(F.broadcast(keys), on="cluster_id", how="leftsemi")
 
     packed = "code_packed" in codes.columns
     total_bits = meta["total_bits"]
+    schema = _SCORED_SCHEMA_PR if with_probe_rank else _SCORED_SCHEMA
+    empty = {
+        name: pd.Series(dtype="int64" if kind == "long" else "float64")
+        for name, kind in (col.split() for col in schema.split(", "))
+    }
 
     def score(key, code_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(code_pdf) == 0 or len(q_pdf) == 0:
-            empty = {
-                "qid": pd.Series(dtype="int64"),
-                "id": pd.Series(dtype="int64"),
-                "est_dist": pd.Series(dtype="float64"),
-                "est_lb": pd.Series(dtype="float64"),
-            }
-            if with_probe_rank:
-                empty["probe_rank"] = pd.Series(dtype="int64")
             return pd.DataFrame(empty)
         QR = np.array(q_pdf["qr"].tolist(), dtype=np.float64)  # g × D
         y2 = (QR * QR).sum(axis=1)
@@ -1419,84 +1415,25 @@ def _arrow_scored_cogroup(
         fip = code_pdf["f_ip_ex"].to_numpy()
         ferr = code_pdf["f_err"].to_numpy()
         ids = code_pdf["id"].to_numpy()
-        n, g = len(ids), len(qg)
         # chunk the code side so est/lb temporaries stay ≤ ~32 MB even for
         # a hot cluster × huge query batch (memory, not correctness)
-        chunk = max(1, 4_000_000 // max(g, 1))
+        chunk = max(1, 4_000_000 // max(len(qg), 1))
         outs = []
-        for i in range(0, n, chunk):
+        for i in range(0, len(ids), chunk):
             est, lb = _score_cluster_np(
                 S[i : i + chunk], x2[i : i + chunk], fip[i : i + chunk],
                 ferr[i : i + chunk], QR, y2, estimator, D,
             )
-            m = est.shape[0]
-            if per_cluster_cut is not None and m > per_cluster_cut:
-                # map-side E2 pre-cut: per query, keep every row at or
-                # below the cut-th smallest est_lb (ties included → a
-                # SUPERSET of the global (est_lb, id) rank cut, so
-                # _finalize_topk returns identical results) — the
-                # shuffle into the global window carries ≤ cut·g rows
-                # per chunk instead of m·g.
-                kth = np.partition(lb, per_cluster_cut - 1, axis=0)[
-                    per_cluster_cut - 1, :
-                ]
-                xi, qi = np.nonzero(lb <= kth[None, :])
-                cut_cols = {
-                    "qid": qg[qi],
-                    "id": ids[i : i + chunk][xi],
-                    "est_dist": est[xi, qi],
-                    "est_lb": lb[xi, qi],
-                }
-                if pr is not None:
-                    cut_cols["probe_rank"] = pr[qi]
-                outs.append(pd.DataFrame(cut_cols))
-                continue
-            full_cols = {
-                "qid": np.broadcast_to(qg, (m, g)).ravel(),
-                "id": np.repeat(ids[i : i + chunk], g),
-                "est_dist": est.ravel(),
-                "est_lb": lb.ravel(),
-            }
-            if pr is not None:
-                full_cols["probe_rank"] = np.broadcast_to(pr, (m, g)).ravel()
-            outs.append(pd.DataFrame(full_cols))
+            outs.append(pd.DataFrame(_scored_columns(
+                est, lb, qg, ids[i : i + chunk], pr, per_cluster_cut
+            )))
         return pd.concat(outs, ignore_index=True)
 
     return (
         cand.groupby("cluster_id")
         .cogroup(qprobe.groupby("cluster_id"))
-        .applyInPandas(
-            score, _SCORED_SCHEMA_PR if with_probe_rank else _SCORED_SCHEMA
-        )
+        .applyInPandas(score, schema)
     )
-
-
-def rabitq_search_arrow(
-    queries: DataFrame,
-    codes: DataFrame,
-    centroids: DataFrame,
-    meta: dict,
-    nprobe: int,
-    k: int,
-    qid: str = "qid",
-    qvec: str = "qvec",
-    refine: int | None = None,
-    estimator: str = "searcher",
-) -> DataFrame:
-    """Back-compat wrapper: broadcast Arrow scorer + top-k finalize.
-
-    ``refine=None`` (default) keeps the historical single-phase behavior
-    (exact top-k by est_dist over ALL probed candidates — a superset of
-    the two-phase result); pass an int to apply the same est_lb rank cut
-    as the SQL scorer.  Prefer :func:`rabitq_search`, which routes by
-    batch size."""
-    if qid != "qid" or qvec != "qvec":
-        queries = queries.select(F.col(qid).alias("qid"), F.col(qvec).alias("qvec"))
-        qid, qvec = "qid", "qvec"
-    scored = _arrow_scored_broadcast(
-        queries, codes, centroids, meta, nprobe, qid, qvec, estimator
-    )
-    return _finalize_topk(scored, queries, k, refine, None, qid, qvec)
 
 
 def _threshold_marked(scored: DataFrame, k: int) -> DataFrame:
@@ -1542,7 +1479,7 @@ def _finalize_topk(
     qvec: str,
     refine_mode: str = "rank",
     dim: int | None = None,
-    rerank_route: str = "broadcast",
+    broadcast_rerank: bool = True,
 ) -> DataFrame:
     """Shared phase-2: E2 cut → optional exact re-rank (E4) → final
     top-k (W3) → (qid, rank, id, est_dist).
@@ -1564,22 +1501,18 @@ def _finalize_topk(
     shortlist, so the 100 TB vector table is scanned in place, never
     shuffled.
 
-    ``rerank_route``: ``'broadcast'`` (default) broadcasts the
-    (qid, id) shortlist and the query vectors into the exact-rerank
-    joins — right when the query batch is serving-sized.  ``'shuffle'``
-    is the queries=corpus route (the ANN SELF-join, where the query
-    side IS the 100 TB corpus and both broadcasts would exceed the 8 GB
-    relation cap): plain equi-joins — base⋈shortlist co-partitioned by
-    id, then one exchange by qid that doubles as the final top-k
-    window's partitioning.  Same rows, same values; routes are
-    result-identical (asserted in tests)."""
+    ``broadcast_rerank`` (the planner's rerank route): True broadcasts
+    the (qid, id) shortlist and the query vectors into the exact-rerank
+    joins — right when the query batch is serving-sized.  False is the
+    queries=corpus route (the ANN SELF-join, where the query side IS the
+    100 TB corpus and both broadcasts would exceed the 8 GB relation
+    cap): plain equi-joins — base⋈shortlist co-partitioned by id, then
+    one exchange by qid that doubles as the final top-k window's
+    partitioning.  Same rows, same values; routes are result-identical
+    (asserted in tests)."""
     if refine_mode not in ("rank", "threshold"):
         raise ValueError(
             f"refine_mode must be 'rank' or 'threshold', got {refine_mode!r}"
-        )
-    if rerank_route not in ("broadcast", "shuffle"):
-        raise ValueError(
-            f"rerank_route must be 'broadcast' or 'shuffle', got {rerank_route!r}"
         )
     shortlist = scored
     if refine_mode == "threshold":
@@ -1594,7 +1527,7 @@ def _finalize_topk(
     if rerank_base is not None:
         from .knn import distance_col
 
-        if rerank_route == "shuffle":
+        if not broadcast_rerank:
             # queries=corpus: nothing broadcasts.  base⋈shortlist is a
             # plain equi-join on id; the join on qid then establishes
             # hashpartitioning(qid), which the top-k window below
@@ -1647,7 +1580,9 @@ def _sql_scored(
     estimator: str,
     probes: DataFrame | None = None,
 ) -> DataFrame:
-    """Pure-JVM candidate scorer → (qid, id, est_dist, est_lb).
+    """Pure-JVM candidate scorer → (qid, id, est_dist, est_lb) — the
+    declarative reference the Arrow scorers are tested against; no
+    search entry point routes to it.
 
     Stage 0: probe selection (W1) on raw centroids — exact top-nprobe.
     Stage 1: per (query, probed cluster): rotated residual qr, y2, Σqr —
@@ -1659,29 +1594,18 @@ def _sql_scored(
     """
     M = 1 << (meta["total_bits"] - 1)
     D = meta["D"]
-    qrot = rotate_queries(queries, meta, qid=qid, qvec=qvec)
     if probes is None:  # W1 exact; callers may inject graph_probes (W2)
         probes = select_probes(
             queries, centroids.select("cluster_id", "centroid"), nprobe,
             qid=qid, qvec=qvec, dim=int(meta["dim"]),
         )
-    probes = probes.select(F.col(qid).alias("qid"), "cluster_id")
     # Stage 1: per-(qid, cluster) rotated residual + moments
-    qprobe = (
-        probes.join(qrot, on="qid")
-        .join(F.broadcast(centroids.select("cluster_id", "centroid_rot")), on="cluster_id")
-        .select(
-            "qid",
-            "cluster_id",
-            F.expr("zip_with(qrot, centroid_rot, (a, b) -> a - b)").alias("qr"),
-        )
-        .select(
-            "qid",
-            "cluster_id",
-            "qr",
-            F.expr(V.l2sq_self("qr")).alias("y2"),
-            F.expr(V.vec_sum("qr")).alias("sum_qr"),
-        )
+    qprobe = _probe_residuals(queries, probes, centroids, meta, qid, qvec).select(
+        "qid",
+        "cluster_id",
+        "qr",
+        F.expr(V.l2sq_self("qr")).alias("y2"),
+        F.expr(V.vec_sum("qr")).alias("sum_qr"),
     )
     cand = codes.join(qprobe, on="cluster_id", how="inner")
     # ⟨s, qr⟩ = Σ (code+0.5−M)·qr.  The C++ decomposes this into a bit-IP
@@ -1722,16 +1646,27 @@ def _prepare_search_inputs(
     meta: dict,
     qid: str,
     qvec: str,
-) -> tuple[DataFrame, DataFrame | None, str, str]:
-    """Shared search-entry prep (rabitq_search AND rabitq_search_sweep —
-    one definition so the sweep's row-identical contract can't drift):
-    canonicalize qid/qvec column names, apply the metric-aware query
-    transform (cosine: unit-sphere L2 ≡ cosine ranking, dist =
-    2·(1−cos); ip: MIPS augmentation ‖q'−x'‖² = ‖q‖² + M² − 2⟨q,x⟩ —
-    both monotone, tie-preserving), and move the rerank base into the
-    same geometry."""
+    probes: DataFrame | None = None,
+    query_rows: list | None = None,
+) -> tuple[DataFrame, DataFrame | None, DataFrame | None, str, str]:
+    """Shared search-entry prep (every search entry point — one
+    definition so their row-identical contracts can't drift):
+    canonicalize qid/qvec column names (on injected probes too), apply
+    the metric-aware query transform (cosine: unit-sphere L2 ≡ cosine
+    ranking, dist = 2·(1−cos); ip: MIPS augmentation ‖q'−x'‖² = ‖q‖² +
+    M² − 2⟨q,x⟩ — both monotone, tie-preserving), and move the rerank
+    base into the same geometry.  Driver-resident ``query_rows`` bypass
+    the query transform, so they need an L2-metric index."""
+    if query_rows is not None and meta.get("metric") not in (None, "l2"):
+        raise ValueError(
+            "query_rows requires an L2-metric index "
+            f"(this index: {meta.get('metric')!r}) — the cosine/ip "
+            "query transforms would be bypassed on the raw rows"
+        )
     if qid != "qid" or qvec != "qvec":
         queries = queries.select(F.col(qid).alias("qid"), F.col(qvec).alias("qvec"))
+        if probes is not None and qid != "qid" and qid in probes.columns:
+            probes = probes.withColumnRenamed(qid, "qid")
         qid, qvec = "qid", "qvec"
     queries = prepare_queries_for_metric(queries, meta, qvec)
     if rerank_base is not None:
@@ -1743,7 +1678,96 @@ def _prepare_search_inputs(
             rerank_base = rerank_base.withColumn(
                 "vec", F.expr(_mips_aug_expr("vec", float(meta["mips_norm"])))
             )
-    return queries, rerank_base, qid, qvec
+    return queries, rerank_base, probes, qid, qvec
+
+
+class _SearchPlan(NamedTuple):
+    """The physical routes of one search (see :func:`_plan_search`)."""
+
+    broadcast_scorer: bool  # False: the cogroup scorer
+    broadcast_rerank: bool  # False: the shuffle equi-join rerank
+
+
+def _plan_search(
+    nq: int | Callable[[], int],
+    nprobe: int,
+    meta: dict,
+    shortlist: int | None,
+    threshold: int,
+    probes_injected: bool = False,
+) -> _SearchPlan:
+    """Choose every route of a RaBitQ search from sizes alone.
+
+    ``nq`` is the query count, or a callable that counts them (a Spark
+    job), called at most once and only when a rule reads it;
+    ``shortlist`` is the rerank rows per query (``refine·k``; k, its
+    floor, without a rank cut; None without an exact rerank);
+    ``threshold`` is T =
+    ``spark.sql.autoBroadcastJoinThreshold`` (negative: never
+    broadcast).  D and dim come from ``meta``.
+
+    - scorer: the cogroup scorer when ``probes`` are injected (its
+      probe prep is DataFrame-native); otherwise the broadcast scorer
+      iff its per-(query, probe) residual map fits:
+      nq·nprobe·(8·D + 24) ≤ T.
+    - rerank: broadcast iff the (qid, id) shortlist plus the query
+      vectors fit: nq·(8·dim + 16·shortlist) ≤ T; else the shuffle
+      equi-joins (see :func:`_finalize_topk`).
+    - full probes (nprobe ≥ K, probe selection and the codes semi-join
+      skipped) are decided inside the cogroup scorer, which is where K
+      is known (:func:`_fused_qprobe`).
+    """
+    size = functools.cache(nq) if callable(nq) else lambda: nq
+
+    def fits(bytes_per_query: int) -> bool:
+        return threshold >= 0 and size() * bytes_per_query <= threshold
+
+    return _SearchPlan(
+        not probes_injected and fits(nprobe * (8 * meta["D"] + 24)),
+        shortlist is not None and fits(8 * meta["dim"] + 16 * shortlist),
+    )
+
+
+def _scored_candidates(
+    queries: DataFrame,
+    codes: DataFrame,
+    centroids: DataFrame,
+    meta: dict,
+    nprobe: int,
+    estimator: str,
+    shortlist: int | None = None,
+    probes: DataFrame | None = None,
+    per_cluster_cut: int | None = None,
+    with_probe_rank: bool = False,
+    centroid_rows: list | None = None,
+    query_rows: list | None = None,
+) -> tuple[DataFrame, _SearchPlan]:
+    """Phase 1 of every search entry point, on canonical (qid, qvec)
+    queries: plan the routes (:func:`_plan_search`; nq is
+    ``len(query_rows)`` or one count() job) and score on the planned
+    scorer → ((qid, id, est_dist, est_lb [, probe_rank]), plan).
+    ``centroid_rows``/``query_rows`` only feed the broadcast scorer's
+    driver-side prep; the cogroup scorer ignores them."""
+    # T in bytes, as Spark's own join planner reads the setting
+    conf = queries.sparkSession._jsparkSession.sessionState().conf()
+    plan = _plan_search(
+        len(query_rows) if query_rows is not None else queries.count,
+        nprobe, meta, shortlist, int(conf.autoBroadcastJoinThreshold()),
+        probes_injected=probes is not None,
+    )
+    if plan.broadcast_scorer:
+        return _arrow_scored_broadcast(
+            queries, codes, centroids, meta, nprobe, "qid", "qvec", estimator,
+            per_cluster_cut=per_cluster_cut,
+            with_probe_rank=with_probe_rank,
+            centroid_rows=centroid_rows,
+            query_rows=query_rows,
+        ), plan
+    return _arrow_scored_cogroup(
+        queries, codes, centroids, meta, nprobe, "qid", "qvec", estimator, probes,
+        per_cluster_cut=per_cluster_cut,
+        with_probe_rank=with_probe_rank,
+    ), plan
 
 
 def rabitq_search(
@@ -1757,165 +1781,74 @@ def rabitq_search(
     rerank_base: DataFrame | None = None,
     qid: str = "qid",
     qvec: str = "qvec",
-    scorer: str = "arrow",
     estimator: str = "searcher",
-    broadcast_max_queries: int = _BROADCAST_MAX_QUERIES_DEFAULT,
     probes: DataFrame | None = None,
-    full_probes: bool = False,
     centroid_rows: list | None = None,
     refine_mode: str = "rank",
     query_rows: list | None = None,
-    prune_codes: bool = True,
-    rerank_route: str = "broadcast",
 ) -> DataFrame:
     """Full two-phase Extended-RaBitQ search → (qid, rank, id, est_dist).
 
-    ``prune_codes=False`` (cogroup scorer only): skip the
-    probed-cluster semi-join on the codes side — for callers that know
-    the probe set covers every non-empty cluster (the ANN SELF-join:
-    each vector's rank-1 probe is its own cluster).  Always
-    result-safe; purely a plan choice.
-
-    ``rerank_route='shuffle'``: the exact rerank joins run as plain
-    equi-joins instead of broadcasting the shortlist + query vectors —
-    REQUIRED when the query side is corpus-sized (see _finalize_topk);
-    result-identical either way.
-
-    ``full_probes=True`` is a caller assertion that nprobe ≥ the cluster
-    count (e.g. the lossless ANN self-join dedup): the cogroup scorer
-    then skips probe selection entirely (see _arrow_scored_cogroup).
-
-    ``centroid_rows``: pre-collected ``centroids.select("cluster_id",
-    "centroid").collect()`` for the broadcast scorer — serving loops
-    that query one index repeatedly collect once and skip a per-call
-    collect job (ignored by the cogroup/sql scorers, which never
-    collect centroids).
-
-    ``query_rows``: driver-resident (qid, qvec) pairs for the broadcast
-    scorer — the serving shape where the batch arrives OUTSIDE Spark
-    (an RPC handler) and is already on the driver: skips the
-    construction-time query-side collect job, making a no-rerank
-    serving call exactly ONE Spark job.  Must mirror ``queries``
-    (which is still required for the rerank join) and is only valid for
-    L2-metric indexes (cosine/ip apply a query transform the raw rows
-    would bypass) with the broadcast scorer; both are enforced.
-
-    Scorers (all produce identical (est_dist, est_lb) candidates, so the
-    result is rank-identical across them — asserted in tests):
-
-    - ``'arrow'`` (default): auto-route by batch size — the broadcast
-      Arrow scorer for NQ ≤ ``broadcast_max_queries`` (driver-prepped
-      probe map, the reference's own move at contract-sized NQ), the
-      cogroup Arrow scorer above it (DataFrame-native probe prep, no
-      driver collect of the query side — flagship batch serving scales
-      to unbounded NQ).  Routing costs one count() job over the qid
-      column.
-    - ``'arrow_broadcast'`` / ``'arrow_cogroup'``: force a variant.
-    - ``'sql'``: pure-JVM column pipeline (declarative plan end-to-end).
+    Phase 1 scores the candidates of the ``nprobe`` nearest clusters
+    (or of the injected ``probes``, e.g. graph_probes — W2).  Phase 2
+    keeps the ``refine``·k best est_lb per query (E2 as a rank cut — a
+    superset of the reference's sequential distk threshold at
+    refine≥1, §4.2.2), then ranks by the B-bit estimate (E3) — or by
+    the EXACT distance when ``rerank_base`` (id, vec) is given (E4; the
+    base scan stays in place).  ``refine=None`` disables the cut:
+    single-phase exact-over-candidates ranking (a superset of the
+    two-phase result).  ``refine_mode='threshold'`` replaces the rank
+    cut by the adaptive distk analog (see :func:`_finalize_topk`).
 
     ``estimator='searcher'`` is the default Searcher estimator;
     ``'high_acc'`` is the published exhaf4 configuration's HASearcher
     phase-1 bound (HIGH_ACC compiled in, src/test_search.cpp:1) — the
     re-rank estimate is algebraically identical (see _score_cluster_np).
 
-    Phase 2 (shared): keep the ``refine``·k best est_lb per query (E2 as
-    a rank cut — a superset of the reference's sequential distk
-    threshold at refine≥1, §4.2.2), then rank by the B-bit estimate (E3)
-    — or by the EXACT distance when ``rerank_base`` (id, vec) is given
-    (E4; the base joins only the broadcast shortlist, so the 100 TB
-    vector table never shuffles).  ``refine=None`` disables the cut:
-    single-phase exact-over-candidates ranking (a superset of the
-    two-phase result; marginally higher recall, more est evaluations
-    kept through the top-k window).
+    Routes are not caller choices: :func:`_plan_search` picks them from
+    the batch size and ``spark.sql.autoBroadcastJoinThreshold`` (T), and
+    every route returns the same rows (asserted in tests):
+
+    - the broadcast Arrow scorer (driver-side probe prep, the
+      reference's own move) iff nq·nprobe·(8·D + 24) ≤ T and no
+      ``probes`` are injected; else the cogroup Arrow scorer (no driver
+      collect of the query side — unbounded NQ);
+    - the cogroup scorer skips probe selection and the codes semi-join
+      when nprobe ≥ K;
+    - the exact rerank broadcasts the shortlist and query vectors iff
+      nq·(8·dim + 16·refine·k) ≤ T; else plain equi-joins.
+
+    nq is ``len(query_rows)`` when given, else one count() job, paid
+    only when a rule needs it.
+
+    ``centroid_rows`` / ``query_rows``: driver-resident
+    ``centroids.select("cluster_id", "centroid").collect()`` and (qid,
+    qvec) pairs for the broadcast scorer — serving loops that hold them
+    already skip a collect job each (a no-rerank serving call is then
+    exactly ONE Spark job).  ``query_rows`` must mirror ``queries``
+    (still used by the rerank and the cogroup scorer) and needs an
+    L2-metric index; both are unused when the plan picks the cogroup
+    scorer.
     """
-    if probes is not None and qid != "qid" and qid in probes.columns:
-        probes = probes.withColumnRenamed(qid, "qid")
-    if query_rows is not None:
-        if meta.get("metric") not in (None, "l2"):
-            raise ValueError(
-                "rabitq_search(query_rows=...) requires an L2-metric index "
-                f"(this index: {meta.get('metric')!r}) — the cosine/ip "
-                "query transforms would be bypassed on the raw rows"
-            )
-        if scorer not in ("arrow", "arrow_broadcast"):
-            raise ValueError(
-                "rabitq_search(query_rows=...) is a broadcast-scorer "
-                f"serving path, got scorer={scorer!r}"
-            )
-        if len(query_rows) > broadcast_max_queries:
-            raise ValueError(
-                f"rabitq_search(query_rows=...): {len(query_rows)} rows "
-                f"exceeds broadcast_max_queries={broadcast_max_queries}"
-            )
-        scorer = "arrow_broadcast"  # skip the auto-route count() job too
-    queries, rerank_base, qid, qvec = _prepare_search_inputs(
-        queries, rerank_base, meta, qid, qvec
+    queries, rerank_base, probes, qid, qvec = _prepare_search_inputs(
+        queries, rerank_base, meta, qid, qvec, probes, query_rows
     )
     if refine_mode == "threshold":
         # the adaptive distk threshold is defined over the FULL candidate
         # pool — disable the per-cluster pre-cut so the k-th estimate and
         # the lb filter see every probed candidate
         refine = None
-    scored = _scored_candidates(
-        queries, codes, centroids, meta, nprobe, qid, qvec, scorer,
-        estimator, broadcast_max_queries, probes, full_probes,
-        centroid_rows, per_cluster_cut=None if refine is None else refine * k,
-        query_rows=query_rows, prune_codes=prune_codes,
+    scored, plan = _scored_candidates(
+        queries, codes, centroids, meta, nprobe, estimator,
+        shortlist=None if rerank_base is None else (refine or 1) * k,
+        probes=probes, per_cluster_cut=None if refine is None else refine * k,
+        centroid_rows=centroid_rows, query_rows=query_rows,
     )
     return _finalize_topk(
         scored, queries, k, refine, rerank_base, qid, qvec, refine_mode,
         dim=int(meta["dim"]),  # ip: meta dim is already the augmented width
-        rerank_route=rerank_route,
+        broadcast_rerank=plan.broadcast_rerank,
     )
-
-
-def _scored_candidates(
-    queries: DataFrame,
-    codes: DataFrame,
-    centroids: DataFrame,
-    meta: dict,
-    nprobe: int,
-    qid: str,
-    qvec: str,
-    scorer: str,
-    estimator: str,
-    broadcast_max_queries: int,
-    probes: DataFrame | None,
-    full_probes: bool,
-    centroid_rows: list | None,
-    per_cluster_cut: int | None,
-    query_rows: list | None = None,
-    prune_codes: bool = True,
-) -> DataFrame:
-    """Phase-1 scorer routing shared by :func:`rabitq_search` and
-    :func:`rabitq_threshold_stats` → (qid, id, est_dist, est_lb)."""
-    if probes is not None and scorer in ("arrow", "arrow_broadcast"):
-        # the broadcast scorer's probe prep is driver-side by design;
-        # injected probe DataFrames (e.g. graph_probes, W2) route to the
-        # DataFrame-native cogroup scorer
-        scorer = "arrow_cogroup"
-    if scorer == "arrow":
-        nq = queries.select(qid).count()
-        scorer = "arrow_broadcast" if nq <= broadcast_max_queries else "arrow_cogroup"
-    if scorer == "arrow_broadcast":
-        return _arrow_scored_broadcast(
-            queries, codes, centroids, meta, nprobe, qid, qvec, estimator,
-            per_cluster_cut=per_cluster_cut,
-            centroid_rows=centroid_rows,
-            query_rows=query_rows,
-        )
-    if scorer == "arrow_cogroup":
-        return _arrow_scored_cogroup(
-            queries, codes, centroids, meta, nprobe, qid, qvec, estimator, probes,
-            per_cluster_cut=per_cluster_cut,
-            full_probes=full_probes,
-            prune_codes=prune_codes,
-        )
-    if scorer == "sql":
-        return _sql_scored(
-            queries, codes, centroids, meta, nprobe, qid, qvec, estimator, probes
-        )
-    raise ValueError(f"rabitq_search: unknown scorer {scorer!r}")
 
 
 def rabitq_threshold_stats(
@@ -1927,9 +1860,7 @@ def rabitq_threshold_stats(
     k: int,
     qid: str = "qid",
     qvec: str = "qvec",
-    scorer: str = "arrow",
     estimator: str = "searcher",
-    broadcast_max_queries: int = _BROADCAST_MAX_QUERIES_DEFAULT,
 ) -> DataFrame:
     """Adaptive-prune activity attestation → (qid, n_pool, n_kept):
     per query, the scored candidate pool size and the survivors of the
@@ -1945,12 +1876,8 @@ def rabitq_threshold_stats(
     outcomes are reproducible (same argument as rabitq_recall_counts).
     One pass over the pool — the marking windows and the counts share
     a single hashpartitioning(qid) exchange, no persist needed."""
-    queries, _, qid, qvec = _prepare_search_inputs(queries, None, meta, qid, qvec)
-    scored = _scored_candidates(
-        queries, codes, centroids, meta, nprobe, qid, qvec, scorer,
-        estimator, broadcast_max_queries, probes=None, full_probes=False,
-        centroid_rows=None, per_cluster_cut=None,
-    )
+    queries = _prepare_search_inputs(queries, None, meta, qid, qvec)[0]
+    scored, _ = _scored_candidates(queries, codes, centroids, meta, nprobe, estimator)
     return _threshold_marked(scored, k).groupBy("qid").agg(
         F.count("*").cast("long").alias("n_pool"),
         F.sum(F.col("_keep").cast("long")).cast("long").alias("n_kept"),
@@ -1968,11 +1895,10 @@ def rabitq_search_sweep(
     rerank_base: DataFrame | None = None,
     qid: str = "qid",
     qvec: str = "qvec",
-    scorer: str = "arrow",
     estimator: str = "searcher",
-    broadcast_max_queries: int = _BROADCAST_MAX_QUERIES_DEFAULT,
     refine_mode: str = "rank",
     centroid_rows: list | None = None,
+    query_rows: list | None = None,
 ) -> tuple[dict[int, DataFrame], DataFrame]:
     """Amortized nprobe sweep →
     ``({nprobe: (qid, rank, id, est_dist)}, scored_pool)``.
@@ -1999,29 +1925,18 @@ def rabitq_search_sweep(
     """
     if not nprobes:
         raise ValueError("rabitq_search_sweep: empty nprobe grid")
-    queries, rerank_base, qid, qvec = _prepare_search_inputs(
-        queries, rerank_base, meta, qid, qvec
+    queries, rerank_base, _, qid, qvec = _prepare_search_inputs(
+        queries, rerank_base, meta, qid, qvec, query_rows=query_rows
     )
     np_max = max(nprobes)
     if refine_mode == "threshold":
         refine = None  # see rabitq_search: threshold is pool-wide
-    cut = None if refine is None else refine * k
-    if scorer == "arrow":
-        nq = queries.select(qid).count()
-        scorer = "arrow_broadcast" if nq <= broadcast_max_queries else "arrow_cogroup"
-    if scorer == "arrow_broadcast":
-        scored = _arrow_scored_broadcast(
-            queries, codes, centroids, meta, np_max, qid, qvec, estimator,
-            per_cluster_cut=cut, with_probe_rank=True,
-            centroid_rows=centroid_rows,
-        )
-    elif scorer == "arrow_cogroup":
-        scored = _arrow_scored_cogroup(
-            queries, codes, centroids, meta, np_max, qid, qvec, estimator,
-            per_cluster_cut=cut, with_probe_rank=True,
-        )
-    else:
-        raise ValueError(f"rabitq_search_sweep: unsupported scorer {scorer!r}")
+    scored, plan = _scored_candidates(
+        queries, codes, centroids, meta, np_max, estimator,
+        shortlist=None if rerank_base is None else (refine or 1) * k,
+        per_cluster_cut=None if refine is None else refine * k,
+        with_probe_rank=True, centroid_rows=centroid_rows, query_rows=query_rows,
+    )
     scored = scored.persist()
     out: dict[int, DataFrame] = {}
     for np_ in sorted(set(int(n) for n in nprobes)):
@@ -2029,6 +1944,7 @@ def rabitq_search_sweep(
         out[np_] = _finalize_topk(
             pool, queries, k, refine, rerank_base, qid, qvec, refine_mode,
             dim=int(meta["dim"]),  # ip: meta dim is already the augmented width
+            broadcast_rerank=plan.broadcast_rerank,
         )
     return out, scored
 
@@ -2043,7 +1959,6 @@ def rabitq_range_search(
     rerank_base: DataFrame,
     qid: str = "qid",
     qvec: str = "qvec",
-    scorer: str = "arrow_cogroup",
     estimator: str = "searcher",
     probes: DataFrame | None = None,
     slack: float = 3.0,
@@ -2074,33 +1989,17 @@ def rabitq_range_search(
     thresholds on knn_ip instead."""
     from .knn import distance_col
 
-    if qid != "qid" or qvec != "qvec":
-        # canonicalize: the scorers/finalize stages emit literal
-        # qid/qvec column names internally
-        queries = queries.select(F.col(qid).alias("qid"), F.col(qvec).alias("qvec"))
-        if probes is not None and qid in probes.columns:
-            probes = probes.withColumnRenamed(qid, "qid")
-        qid, qvec = "qid", "qvec"
-    metric = meta.get("metric", "l2")
-    if metric == "ip":
+    if meta.get("metric", "l2") == "ip":
         raise ValueError(
             "rabitq_range_search: metric='ip' indexes have no global "
             "radius semantics (per-query MIPS offset); use top-k search"
         )
-    if metric == "cosine":
-        queries = queries.withColumn(qvec, F.expr(V.l2_normalize(qvec)))
-        rerank_base = rerank_base.withColumn("vec", F.expr(V.l2_normalize("vec")))
-
-    if scorer == "arrow_cogroup":
-        scored = _arrow_scored_cogroup(
-            queries, codes, centroids, meta, nprobe, qid, qvec, estimator, probes
-        )
-    elif scorer == "sql":
-        scored = _sql_scored(
-            queries, codes, centroids, meta, nprobe, qid, qvec, estimator, probes
-        )
-    else:
-        raise ValueError(f"rabitq_range_search: unknown scorer {scorer!r}")
+    queries, rerank_base, probes, qid, qvec = _prepare_search_inputs(
+        queries, rerank_base, meta, qid, qvec, probes
+    )
+    scored, _ = _scored_candidates(
+        queries, codes, centroids, meta, nprobe, estimator, probes=probes
+    )
     widened = F.col("est_dist") - slack * (F.col("est_dist") - F.col("est_lb"))
     cand = scored.where(widened <= radius2).select(qid, "id")
     return (

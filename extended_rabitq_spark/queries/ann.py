@@ -294,7 +294,7 @@ def knn_filtered_rabitq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_clusters = cents.count()
     res = rabitq.rabitq_search(
         qs, index_f, cents_full, meta, nprobe=n_clusters, k=K,
-        refine=None, rerank_base=base_f, full_probes=True,
+        refine=None, rerank_base=base_f,
     )
     return res.select("qid", "rank", "id", F.col("est_dist").alias("dist"))
 
@@ -378,7 +378,7 @@ def _metric_twin_result(spark, sf_dir, metric: str, final_dist):
     cents_full = rabitq.centroids_with_rotation(spark, cents, meta)
     res = rabitq.rabitq_search(
         qs, index_df, cents_full, meta, nprobe=cents.count(), k=K,
-        refine=None, rerank_base=base, full_probes=True,
+        refine=None, rerank_base=base,
     )
     return (
         res.select("qid", "rank", "id")

@@ -260,8 +260,9 @@ def dedup_embedding_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_embedding_ann", _COS_ORACLE)
 def dedup_embedding_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup via the distributed ANN self-join (SQL scorer,
-    no driver collect of the query side) — the scale path of
+    """Embedding near-dup via the distributed ANN self-join (routes
+    planned by size: at corpus scale the cogroup scorer, no driver
+    collect of the query side) — the scale path of
     dedup_embedding_cosine.  Run here at full probes + exact re-rank, so
     the global top-N pairs are provably those of the all-pairs form and
     the oracle is the SAME SQL."""

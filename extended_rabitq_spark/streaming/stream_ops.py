@@ -163,22 +163,6 @@ def synthetic_query_stream(
     )
 
 
-def _pick_serving_scorer(rows_per_batch: int) -> str:
-    """The serving benchmark's scorer pin (ADVICE r8): the broadcast
-    Arrow scorer is only pinned while the micro-batch size respects
-    rabitq_search's ``broadcast_max_queries`` contract — an explicit
-    scorer bypasses the auto-route, so the bound is enforced here.
-    Oversized batches keep the auto-route ('arrow': one extra count()
-    job per batch, but never a whole-batch driver collect)."""
-    from ..operators.rabitq import _BROADCAST_MAX_QUERIES_DEFAULT
-
-    return (
-        "arrow_broadcast"
-        if rows_per_batch <= _BROADCAST_MAX_QUERIES_DEFAULT
-        else "arrow"
-    )
-
-
 def serve_latency_benchmark(
     spark: SparkSession,
     index_path: str,
@@ -242,20 +226,20 @@ def serve_latency_benchmark(
     stream = synthetic_query_stream(spark, rows_per_batch, dim)
     stats: list[dict] = []
 
-    # micro-batches are contract-bounded (rows_per_batch ≤ thousands), so
-    # pin the broadcast Arrow scorer: the default 'arrow' auto-route runs
-    # a count() job per batch just to pick a scorer — a whole extra
-    # scheduling floor per micro-batch on the serving path (r8, VERDICT
-    # r7 item 7).  _pick_serving_scorer enforces the
-    # broadcast_max_queries contract the pin would otherwise bypass.
-    _scorer = _pick_serving_scorer(rows_per_batch)
+    # the batch rows are collected inside the timed region and passed as
+    # query_rows: without them the search planner would count the batch
+    # (one more scheduling floor per micro-batch) and the broadcast
+    # scorer collect it anyway.  query_rows skip the cosine/ip query
+    # transforms, so only an L2 index takes them.
+    l2 = meta.get("metric", "l2") == "l2"
 
     def _serve(batch_df: DataFrame, epoch: int) -> None:
         t0 = time.perf_counter()
+        rows = batch_df.select("qid", "qvec").collect() if l2 else None
         if single_job:
             res = rabitq_search(
                 batch_df, codes, centroids, meta, nprobe=nprobe, k=k,
-                scorer=_scorer, centroid_rows=cent_rows,
+                centroid_rows=cent_rows, query_rows=rows,
             )
             agg = res.agg(
                 SF.count("*").alias("n_r"),
@@ -270,7 +254,7 @@ def serve_latency_benchmark(
                 return
             res = rabitq_search(
                 batch_df, codes, centroids, meta, nprobe=nprobe, k=k,
-                scorer=_scorer, centroid_rows=cent_rows,
+                centroid_rows=cent_rows, query_rows=rows,
             )
             n_r = res.count()
         stats.append(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 from pathlib import Path
@@ -15,6 +16,27 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+# values of spark.sql.autoBroadcastJoinThreshold, the RaBitQ search
+# planner's T: every fixture batch fits the first (broadcast scorer and
+# broadcast rerank); nothing fits the second (cogroup scorer and shuffle
+# rerank)
+FITS_ALL = 1 << 40
+FITS_NONE = -1
+
+
+@contextlib.contextmanager
+def broadcast_threshold(spark, value: int):
+    """Set ``spark.sql.autoBroadcastJoinThreshold`` for one block, so the
+    searches constructed inside it take the routes that size implies."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 @pytest.fixture(scope="session")

@@ -101,6 +101,13 @@ class TestWidthGuard:
         with pytest.raises(Exception, match="vector width"):
             pq.ivfpq_knn(q, b, cents, m=2, dsub=16, nprobe=2, coarse_k=10, k=5).collect()
 
+    def test_null_vector_reports_null(self, spark):
+        """A NULL vector is its own defect, not a width error."""
+        q, b, cb = _frames(spark, nq=5)
+        b = b.withColumn("vec", F.when(F.col("id") != 5, F.col("vec")))  # id 5: NULL
+        with pytest.raises(Exception, match="pq_adc_knn: vector NULL"):
+            pq.pq_adc_knn(q, b, cb, M, DSUB, coarse_k=10, k=5).collect()
+
     def test_matching_width_unchanged(self, spark):
         """The guard keeps every row: results identical to brute force
         at full coarse_k (the exactness theorem test, re-asserted with

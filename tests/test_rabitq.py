@@ -12,6 +12,7 @@ import math
 
 import numpy as np
 import pytest
+from conftest import FITS_ALL, FITS_NONE, broadcast_threshold
 
 from extended_rabitq_spark.operators.rabitq import (
     fast_quantize_batch,
@@ -535,8 +536,8 @@ class TestArrowScorer:
         idx, meta = rabitq.build_index(base, cents, total_bits=4)
         idx = idx.persist()
         cents_full = rabitq.centroids_with_rotation(spark, cents, meta)
-        a = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3, k=10, scorer="arrow")
-        s = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3, k=10, scorer="sql")
+        a = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3, k=10)
+        s = _sql_search(qs, idx, cents_full, meta, nprobe=3, k=10)
         arows = {(r.qid, r.rank): (r.id, r.est_dist) for r in a.collect()}
         srows = {(r.qid, r.rank): (r.id, r.est_dist) for r in s.collect()}
         assert set(arows) == set(srows) and len(arows) == 100
@@ -571,12 +572,86 @@ def _res_map(df):
     return {(r.qid, r.rank): (r.id, r.est_dist) for r in df.collect()}
 
 
+def _search_at(spark, threshold, *args, **kw):
+    """rabitq_search planned under broadcast threshold ``threshold``."""
+    from extended_rabitq_spark.operators import rabitq
+
+    with broadcast_threshold(spark, threshold):
+        return rabitq.rabitq_search(*args, **kw)
+
+
+def _sql_search(qs, idx, cents_full, meta, nprobe, k, refine=4,
+                rerank_base=None, estimator="searcher"):
+    """The declarative reference search: _sql_scored + the shared phase 2."""
+    from extended_rabitq_spark.operators import rabitq
+
+    q, rb, _, qid, qvec = rabitq._prepare_search_inputs(
+        qs, rerank_base, meta, "qid", "qvec"
+    )
+    scored = rabitq._sql_scored(q, idx, cents_full, meta, nprobe, qid, qvec, estimator)
+    return rabitq._finalize_topk(
+        scored, q, k, refine, rb, qid, qvec, dim=int(meta["dim"])
+    )
+
+
 def _assert_rank_identical(a, b, tol=1e-9):
     assert set(a) == set(b) and len(a) > 0
     for key, (aid, ad) in a.items():
         bid, bd = b[key]
         assert aid == bid, key
         assert abs(ad - bd) <= tol * max(1.0, abs(bd)), key
+
+
+class TestSearchPlanner:
+    def test_routes_follow_sizes(self):
+        """_plan_search (Spark-free) on the shapes the engine serves, at
+        Spark's default 10 MB broadcast threshold: (broadcast scorer,
+        broadcast rerank)."""
+        from extended_rabitq_spark.operators.rabitq import _plan_search
+
+        T = 10 * 1024 * 1024
+        d128 = {"D": 128, "dim": 128}
+        d64 = {"D": 64, "dim": 64}
+        # benchmark ann_batch (1000 q) and ingest_mixed (200 q): np8, k10, refine 4
+        assert _plan_search(1000, 8, d128, 40, T) == (True, True)
+        assert _plan_search(200, 8, d128, 40, T) == (True, True)
+        # bench.py: 500 and 1990 queries at np3/np6, no rerank
+        for nq in (500, 1990):
+            for nprobe in (3, 6):
+                assert _plan_search(nq, nprobe, d64, None, T) == (True, False)
+        # dedup_embedding_ann: every vector queries K=16 clusters, k=22
+        assert _plan_search(500, 16, d64, 88, T) == (True, True)  # sf0.01
+        assert _plan_search(2000, 16, d64, 88, T) == (False, True)  # sf0.1
+        assert _plan_search(10**6, 16, d64, 88, T) == (False, False)
+        # the boundary is inclusive: nq·nprobe·(8·D + 24) ≤ T
+        assert _plan_search(T // 1048, 1, d128, None, T).broadcast_scorer
+        assert not _plan_search(T // 1048 + 1, 1, d128, None, T).broadcast_scorer
+        # injected probes always take the cogroup scorer
+        assert _plan_search(10, 3, d64, 40, T, probes_injected=True) == (False, True)
+        # T = -1 never broadcasts
+        assert _plan_search(1, 1, d64, 40, -1) == (False, False)
+
+    def test_counts_queries_only_when_a_rule_needs_them(self):
+        """A callable nq (the count() job) runs at most once, and not at
+        all when no rule reads it; query_rows callers pass len(rows)."""
+        from extended_rabitq_spark.operators.rabitq import _plan_search
+
+        calls = []
+
+        def count():
+            calls.append(1)
+            return 10
+
+        d64 = {"D": 64, "dim": 64}
+        assert _plan_search(count, 3, d64, 40, 1 << 20) == (True, True)
+        assert len(calls) == 1
+        assert _plan_search(count, 3, d64, None, 1 << 20, probes_injected=True) == (
+            False, False
+        )
+        assert _plan_search(count, 3, d64, 40, -1) == (False, False)
+        assert len(calls) == 1
+        rows = [(q, [0.0] * 64) for q in range(10)]
+        assert _plan_search(len(rows), 3, d64, 40, 1 << 20) == (True, True)
 
 
 class TestCogroupScorer:
@@ -586,8 +661,6 @@ class TestCogroupScorer:
         import numpy as np
         import pyspark.sql.functions as F
 
-        from extended_rabitq_spark.operators import rabitq
-
         base, _, idx, cents_full, meta = _search_fixture(spark)
         rng = np.random.default_rng(11)
         dim = meta["dim"]
@@ -595,12 +668,8 @@ class TestCogroupScorer:
             [(int(i), [float(x) for x in rng.standard_normal(dim)]) for i in range(5000)],
             "qid long, qvec array<float>",
         ).repartition(8)
-        a = rabitq.rabitq_search(
-            big_q, idx, cents_full, meta, nprobe=3, k=5, scorer="arrow_broadcast"
-        )
-        c = rabitq.rabitq_search(
-            big_q, idx, cents_full, meta, nprobe=3, k=5, scorer="arrow_cogroup"
-        )
+        a = _search_at(spark, FITS_ALL, big_q, idx, cents_full, meta, nprobe=3, k=5)
+        c = _search_at(spark, FITS_NONE, big_q, idx, cents_full, meta, nprobe=3, k=5)
         am, cm = _res_map(a), _res_map(c)
         assert len(am) == 5000 * 5
         _assert_rank_identical(am, cm, tol=1e-6)  # float64 matmul assoc noise
@@ -610,19 +679,20 @@ class TestCogroupScorer:
         """rabitq_search_sweep (ONE scored pool at max nprobe, tagged by
         probe_rank) must be row-identical to standalone rabitq_search at
         every grid point — with the refine cut AND exact rerank engaged,
-        on both Arrow scorers (VERDICT r4 item 8)."""
+        on both Arrow scorers and both rerank routes."""
         from extended_rabitq_spark.operators import rabitq
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
-        for scorer in ("arrow_broadcast", "arrow_cogroup"):
-            res, scored_pool = rabitq.rabitq_search_sweep(
-                qs, idx, cents_full, meta, nprobes=[2, 4], k=5,
-                refine=4, rerank_base=base, scorer=scorer,
-            )
+        for threshold in (FITS_ALL, FITS_NONE):
+            with broadcast_threshold(spark, threshold):
+                res, scored_pool = rabitq.rabitq_search_sweep(
+                    qs, idx, cents_full, meta, nprobes=[2, 4], k=5,
+                    refine=4, rerank_base=base,
+                )
             for np_ in (2, 4):
-                single = rabitq.rabitq_search(
-                    qs, idx, cents_full, meta, nprobe=np_, k=5,
-                    refine=4, rerank_base=base, scorer=scorer,
+                single = _search_at(
+                    spark, threshold, qs, idx, cents_full, meta, nprobe=np_,
+                    k=5, refine=4, rerank_base=base,
                 )
                 _assert_rank_identical(
                     _res_map(res[np_]), _res_map(single), tol=1e-9
@@ -633,13 +703,10 @@ class TestCogroupScorer:
     def test_cogroup_plan_has_no_driver_query_collect(self, spark):
         """The query side must appear INSIDE the plan (cogroup node over
         the probe-prep subtree), not as a driver-collected broadcast."""
-        from extended_rabitq_spark.operators import rabitq
         from extended_rabitq_spark.plans import inspect as I
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
-        res = rabitq.rabitq_search(
-            qs, idx, cents_full, meta, nprobe=3, k=10, scorer="arrow_cogroup"
-        )
+        res = _search_at(spark, FITS_NONE, qs, idx, cents_full, meta, nprobe=3, k=10)
         plan = I.physical_plan(res)
         assert "FlatMapCoGroupsInPandas" in plan
         # probe selection (fused map-only query prep, r11) is part of the
@@ -661,9 +728,10 @@ class TestCogroupScorer:
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
         for nprobe, full in ((3, False), (99, True)):
-            fused = rabitq._fused_qprobe(
-                qs, cents_full, meta, nprobe, "qid", "qvec", full
+            fused, fused_full = rabitq._fused_qprobe(
+                qs, cents_full, meta, nprobe, "qid", "qvec"
             )
+            assert fused_full == full
             qrot = rabitq.rotate_queries(qs, meta)
             if full:
                 old = qrot.crossJoin(
@@ -688,30 +756,42 @@ class TestCogroupScorer:
         idx.unpersist()
 
     def test_rerank_routes_identical(self, spark):
-        """rerank_route='shuffle' (the queries=corpus scale route, r11)
-        must be row-identical to the broadcast rerank."""
+        """The shuffle rerank (the queries=corpus scale route) must
+        be row-identical to the broadcast rerank.  Both runs take the
+        cogroup scorer: a threshold of exactly the rerank's bytes fits
+        the rerank but not the scorer's residual map."""
         from extended_rabitq_spark.operators import rabitq
+        from extended_rabitq_spark.plans import inspect as I
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
-        kw = dict(nprobe=3, k=5, refine=4, rerank_base=base,
-                  scorer="arrow_cogroup")
-        bc = rabitq.rabitq_search(qs, idx, cents_full, meta, **kw)
-        sh = rabitq.rabitq_search(
-            qs, idx, cents_full, meta, rerank_route="shuffle", **kw
+        nq, nprobe, k, refine = 10, 3, 5, 4
+        rerank_only = nq * (8 * meta["dim"] + 16 * refine * k)
+        assert rabitq._plan_search(nq, nprobe, meta, refine * k, rerank_only) == (
+            False, True
         )
+        assert rabitq._plan_search(nq, nprobe, meta, refine * k, FITS_NONE) == (
+            False, False
+        )
+        kw = dict(nprobe=nprobe, k=k, refine=refine, rerank_base=base)
+        bc = _search_at(spark, rerank_only, qs, idx, cents_full, meta, **kw)
+        sh = _search_at(spark, FITS_NONE, qs, idx, cents_full, meta, **kw)
+        for df in (bc, sh):
+            assert "FlatMapCoGroupsInPandas" in I.physical_plan(df)
         _assert_rank_identical(_res_map(bc), _res_map(sh), tol=0.0)
         idx.unpersist()
 
     def test_auto_routing_by_batch_size(self, spark):
-        """scorer='arrow' routes small batches to broadcast, big ones to
-        cogroup; both produce the same results."""
-        from extended_rabitq_spark.operators import rabitq
+        """The planner sends a batch whose residual map fits the broadcast
+        threshold to the broadcast scorer and any other to the cogroup
+        scorer; both produce the same results."""
+        from extended_rabitq_spark.plans import inspect as I
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
-        small = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3, k=10,
-                                     scorer="arrow", broadcast_max_queries=4096)
-        forced_cg = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3, k=10,
-                                         scorer="arrow", broadcast_max_queries=3)
+        small = _search_at(spark, FITS_ALL, qs, idx, cents_full, meta, nprobe=3, k=10)
+        forced_cg = _search_at(spark, FITS_NONE, qs, idx, cents_full, meta,
+                               nprobe=3, k=10)
+        assert "FlatMapCoGroupsInPandas" not in I.physical_plan(small)
+        assert "FlatMapCoGroupsInPandas" in I.physical_plan(forced_cg)
         _assert_rank_identical(_res_map(small), _res_map(forced_cg), tol=1e-6)
         idx.unpersist()
 
@@ -723,11 +803,9 @@ class TestCogroupScorer:
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
         rows = cents_full.select("cluster_id", "centroid").collect()
-        plain = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3,
-                                     k=10, scorer="arrow_broadcast")
+        plain = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3, k=10)
         pre = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=3,
-                                   k=10, scorer="arrow_broadcast",
-                                   centroid_rows=rows)
+                                   k=10, centroid_rows=rows)
         _assert_rank_identical(_res_map(plain), _res_map(pre), tol=0.0)
         idx.unpersist()
 
@@ -807,12 +885,10 @@ class TestCogroupScorer:
             ).collect()
         }
         # independent recount straight off the scored pool + shortlist
-        q2, _, qid, qvec = _prepare_search_inputs(qs, None, meta, "qid", "qvec")
+        q2 = _prepare_search_inputs(qs, None, meta, "qid", "qvec")[0]
         scored = _scored_candidates(
-            q2, idx, cents_full, meta, nprobe, qid, qvec, "arrow",
-            "searcher", 4096, probes=None, full_probes=False,
-            centroid_rows=None, per_cluster_cut=None,
-        ).persist()
+            q2, idx, cents_full, meta, nprobe, "searcher"
+        )[0].persist()
         pool = {r.qid: r.n for r in scored.groupBy("qid").count()
                 .withColumnRenamed("count", "n").collect()}
         kept = {r.qid: r.n for r in _threshold_shortlist(scored, k)
@@ -832,50 +908,48 @@ class TestCogroupScorer:
     def test_arrow_rerank_matches_sql_rerank(self, spark):
         """VERDICT r1 #6: exact re-rank now works behind the Arrow paths
         and matches the SQL scorer's re-ranked output exactly."""
-        from extended_rabitq_spark.operators import rabitq
-
         base, qs, idx, cents_full, meta = _search_fixture(spark)
         kw = dict(nprobe=4, k=10, refine=4, rerank_base=base)
-        a = rabitq.rabitq_search(qs, idx, cents_full, meta, scorer="arrow_broadcast", **kw)
-        c = rabitq.rabitq_search(qs, idx, cents_full, meta, scorer="arrow_cogroup", **kw)
-        s = rabitq.rabitq_search(qs, idx, cents_full, meta, scorer="sql", **kw)
+        a = _search_at(spark, FITS_ALL, qs, idx, cents_full, meta, **kw)
+        c = _search_at(spark, FITS_NONE, qs, idx, cents_full, meta, **kw)
+        s = _sql_search(qs, idx, cents_full, meta, **kw)
         am, cm, sm = _res_map(a), _res_map(c), _res_map(s)
         _assert_rank_identical(am, sm, tol=1e-9)  # exact dists: declarative both
         _assert_rank_identical(cm, sm, tol=1e-9)
         idx.unpersist()
 
     def test_full_probes_fast_path_is_rank_identical(self, spark):
-        """Round-4 fast path: at nprobe >= K, full_probes=True skips probe
-        selection (broadcast cross-join instead of the W1 window) — the
-        results must be identical to the regular cogroup path, and the
+        """Round-4 fast path: at nprobe >= K the cogroup scorer skips
+        probe selection and the codes semi-join — the results must be
+        identical to the regular cogroup path (the sweep's, which keeps
+        probe ranks and so never takes the fast path), and the
         probe-selection window must be gone from the plan."""
         from extended_rabitq_spark.operators import rabitq
         from extended_rabitq_spark.plans import inspect as I
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
-        kw = dict(nprobe=64, k=10, refine=4, scorer="arrow_cogroup")
-        plain = rabitq.rabitq_search(qs, idx, cents_full, meta, **kw)
-        fast = rabitq.rabitq_search(
-            qs, idx, cents_full, meta, full_probes=True, **kw
-        )
-        _assert_rank_identical(_res_map(plain), _res_map(fast), tol=1e-9)
-        # W1 window dropped; cogroup kernel still present
+        for rerank_base in (None, base):  # exact re-rank rides the fast path too
+            with broadcast_threshold(spark, FITS_NONE):
+                plain, pool = rabitq.rabitq_search_sweep(
+                    qs, idx, cents_full, meta, nprobes=[64], k=10, refine=4,
+                    rerank_base=rerank_base,
+                )
+                fast = rabitq.rabitq_search(
+                    qs, idx, cents_full, meta, nprobe=64, k=10, refine=4,
+                    rerank_base=rerank_base,
+                )
+            _assert_rank_identical(_res_map(plain[64]), _res_map(fast), tol=1e-9)
+            pool.unpersist()
+        # W1 window and codes semi-join dropped; cogroup kernel still present
         plan = I.physical_plan(
-            rabitq.rabitq_search(
-                qs, idx, cents_full, meta, nprobe=64, k=10, refine=None,
-                scorer="arrow_cogroup", full_probes=True,
-            )
+            _search_at(spark, FITS_NONE, qs, idx, cents_full, meta, nprobe=64,
+                       k=10, refine=None)
         )
         assert "FlatMapCoGroupsInPandas" in plan
+        assert "LeftSemi" not in plan
         # W1's rank column never appears; the only window left is the
         # final top-k (W3)
         assert "probe_rank" not in plan
-        # exact re-rank rides the fast path too
-        pr = rabitq.rabitq_search(qs, idx, cents_full, meta, rerank_base=base, **kw)
-        fr = rabitq.rabitq_search(
-            qs, idx, cents_full, meta, rerank_base=base, full_probes=True, **kw
-        )
-        _assert_rank_identical(_res_map(pr), _res_map(fr), tol=1e-9)
         idx.unpersist()
 
 
@@ -930,13 +1004,11 @@ class TestHighAccEstimator:
         assert np.allclose(lb, low_dist, rtol=1e-12, atol=1e-9)
 
     def test_ha_rank_identical_across_scorers(self, spark):
-        from extended_rabitq_spark.operators import rabitq
-
         base, qs, idx, cents_full, meta = _search_fixture(spark)
         kw = dict(nprobe=3, k=10, estimator="high_acc")
-        a = rabitq.rabitq_search(qs, idx, cents_full, meta, scorer="arrow_broadcast", **kw)
-        c = rabitq.rabitq_search(qs, idx, cents_full, meta, scorer="arrow_cogroup", **kw)
-        s = rabitq.rabitq_search(qs, idx, cents_full, meta, scorer="sql", **kw)
+        a = _search_at(spark, FITS_ALL, qs, idx, cents_full, meta, **kw)
+        c = _search_at(spark, FITS_NONE, qs, idx, cents_full, meta, **kw)
+        s = _sql_search(qs, idx, cents_full, meta, **kw)
         am, cm, sm = _res_map(a), _res_map(c), _res_map(s)
         _assert_rank_identical(am, sm, tol=1e-6)
         _assert_rank_identical(cm, sm, tol=1e-6)
@@ -948,14 +1020,14 @@ class TestHighAccEstimator:
         import pyspark.sql.functions as F
 
         from extended_rabitq_spark import metrics
-        from extended_rabitq_spark.operators import knn, rabitq
+        from extended_rabitq_spark.operators import knn
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
         gt = knn.exact_knn(qs, base, k=10)
         recalls = {}
         for est in ("searcher", "high_acc"):
-            res = rabitq.rabitq_search(qs, idx, cents_full, meta, nprobe=4, k=10,
-                                       estimator=est, scorer="sql")
+            res = _sql_search(qs, idx, cents_full, meta, nprobe=4, k=10,
+                              estimator=est)
             r = metrics.recall_per_query(res, gt, 10).agg(F.avg("recall")).first()[0]
             recalls[est] = float(r)
         assert recalls["high_acc"] >= recalls["searcher"] - 0.1, recalls
@@ -983,8 +1055,8 @@ class TestPackedCogroup:
         p = str(tmp_path / "packed")
         rabitq.save_index(index_df, cents, meta, p, packed=True)
         codes, cf, m = rabitq.load_index(spark, p)
-        b = rabitq.rabitq_search(queries, codes, cf, m, 3, 10, scorer="arrow_broadcast")
-        c = rabitq.rabitq_search(queries, codes, cf, m, 3, 10, scorer="arrow_cogroup")
+        b = _search_at(spark, FITS_ALL, queries, codes, cf, m, 3, 10)
+        c = _search_at(spark, FITS_NONE, queries, codes, cf, m, 3, 10)
         _assert_rank_identical(_res_map(b), _res_map(c), tol=1e-6)
 
 
@@ -1012,7 +1084,7 @@ class TestCogroupPlan:
         p = str(tmp_path / "idx")
         rabitq.save_index(idx, cents, meta, p)
         codes, cf, m = rabitq.load_index(spark, p)
-        res = rabitq.rabitq_search(qs, codes, cf, m, nprobe=3, k=10, scorer="arrow_cogroup")
+        res = _search_at(spark, FITS_NONE, qs, codes, cf, m, nprobe=3, k=10)
         plan = I.physical_plan(res)
         assert "dynamicpruning" in plan, "codes scan lost partition pruning"
         assert I.has_partial_topk(res)
@@ -1317,6 +1389,10 @@ class TestCosineMetricIndex:
             for r in knn.exact_knn(queries, base, k=10, metric="cosine").collect()
         )
         assert got == exp
+        # driver-resident query_rows would bypass the normalization
+        with pytest.raises(ValueError, match="L2-metric"):
+            rabitq.rabitq_search(queries, idx, cf, meta, nprobe=K, k=10,
+                                 query_rows=[(0, [1.0] * meta["dim"])])
 
     def test_l2_meta_unchanged_by_default(self, spark):
         """Default metric stays 'l2' and search does NOT normalize."""

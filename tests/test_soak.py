@@ -75,7 +75,7 @@ def test_rerank_lifts_recall_above_est_plateau(spark, harness):
     recalls = {}
     for tag, rb in (("est", None), ("rerank", base)):
         res = rabitq.rabitq_search(qs, idx, cf, meta, nprobe=4, k=10,
-                                   rerank_base=rb, scorer="arrow_broadcast")
+                                   rerank_base=rb)
         r = metrics.recall_per_query(res, gt, 10).agg(F.avg("recall")).first()[0]
         recalls[tag] = float(r)
     gt.unpersist()
@@ -85,11 +85,14 @@ def test_rerank_lifts_recall_above_est_plateau(spark, harness):
 
 def test_cogroup_scorer_at_scale(spark, harness):
     """Cogroup scorer == broadcast scorer on the 100k index."""
+    from conftest import FITS_ALL, FITS_NONE, broadcast_threshold
     from extended_rabitq_spark.operators import rabitq
 
     base, qs, idx, cf, meta = harness
-    b = rabitq.rabitq_search(qs, idx, cf, meta, nprobe=4, k=10, scorer="arrow_broadcast")
-    c = rabitq.rabitq_search(qs, idx, cf, meta, nprobe=4, k=10, scorer="arrow_cogroup")
+    with broadcast_threshold(spark, FITS_ALL):
+        b = rabitq.rabitq_search(qs, idx, cf, meta, nprobe=4, k=10)
+    with broadcast_threshold(spark, FITS_NONE):
+        c = rabitq.rabitq_search(qs, idx, cf, meta, nprobe=4, k=10)
     bm = {(r.qid, r.rank): r.id for r in b.collect()}
     cm = {(r.qid, r.rank): r.id for r in c.collect()}
     assert bm == cm and len(bm) == NQ * 10

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import SF_SMOKE
+from conftest import FITS_NONE, SF_SMOKE, broadcast_threshold
 from extended_rabitq_spark.streaming.stream_ops import (
     batch_windowed_event_counts,
     read_events_stream,
@@ -211,11 +211,11 @@ def test_serve_latency_benchmark(spark, tmp_path):
 def test_serve_local_batches_matches_stream_results(spark, tmp_path):
     """r10 one-job serving floor: the driver-local batch mode returns the
     SAME per-query results as a plain rabitq_search over the same
-    deterministic query load, and query_rows misuse is rejected."""
+    deterministic query load, and a cogroup-planned batch ignores its
+    query_rows."""
     import math
 
     import pyspark.sql.functions as F
-    import pytest
 
     from extended_rabitq_spark.operators import ivf, rabitq
     from extended_rabitq_spark.streaming.stream_ops import serve_local_batches
@@ -249,32 +249,18 @@ def test_serve_local_batches_matches_stream_results(spark, tmp_path):
         qdf, codes, centroids, meta2, nprobe=3, k=5, query_rows=rows
     ).collect()
     via_df = rabitq.rabitq_search(
-        qdf, codes, centroids, meta2, nprobe=3, k=5, scorer="arrow_broadcast"
+        qdf, codes, centroids, meta2, nprobe=3, k=5
     ).collect()
-    key = lambda r: (r["qid"], r["rank"])  # noqa: E731
     assert sorted(map(tuple, via_rows)) == sorted(map(tuple, via_df))
-
-    # misuse is rejected at the boundary
-    with pytest.raises(ValueError, match="broadcast-scorer"):
-        rabitq.rabitq_search(qdf, codes, centroids, meta2, nprobe=3, k=5,
-                             query_rows=rows, scorer="arrow_cogroup")
-    with pytest.raises(ValueError, match="exceeds broadcast_max_queries"):
-        rabitq.rabitq_search(qdf, codes, centroids, meta2, nprobe=3, k=5,
-                             query_rows=rows, broadcast_max_queries=5)
-
-
-def test_serving_scorer_respects_broadcast_bound():
-    """ADVICE r8: the serving benchmark's broadcast-scorer pin must honor
-    rabitq_search's broadcast_max_queries contract — batches above the
-    bound keep the auto-route instead of collecting driver-side."""
-    from extended_rabitq_spark.operators.rabitq import (
-        _BROADCAST_MAX_QUERIES_DEFAULT,
+    # a batch the planner sends to the cogroup scorer simply leaves the
+    # rows unused
+    with broadcast_threshold(spark, FITS_NONE):
+        via_cogroup = rabitq.rabitq_search(
+            qdf, codes, centroids, meta2, nprobe=3, k=5, query_rows=rows
+        )
+    assert sorted(r[:3] for r in via_cogroup.collect()) == sorted(
+        r[:3] for r in via_rows
     )
-    from extended_rabitq_spark.streaming.stream_ops import _pick_serving_scorer
-
-    assert _pick_serving_scorer(50) == "arrow_broadcast"
-    assert _pick_serving_scorer(_BROADCAST_MAX_QUERIES_DEFAULT) == "arrow_broadcast"
-    assert _pick_serving_scorer(_BROADCAST_MAX_QUERIES_DEFAULT + 1) == "arrow"
 
 
 def test_streaming_index_ingest(spark, tmp_path):

@@ -97,7 +97,6 @@ def main() -> int:
         # k mirrors the operator's theorem-tight default: top_n(20)+1
         # per-query candidates, +1 for the self-match (milestone 65)
         nprobe=a.nprobe, k=22, rerank_base=norm,
-        scorer="arrow_cogroup", full_probes=False,
     ).localCheckpoint(eager=True)
     rows.append(("p3_self_join_search_rerank", time.perf_counter() - t0))
 

@@ -70,12 +70,12 @@ def main() -> None:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     add(
-        "rabitq_search on a saved index (E1-E3, SQL scorer)",
-        rabitq.rabitq_search(qs, codes, cf, meta2, nprobe=3, k=10, scorer="sql"),
-        "Pure-JVM candidate pipeline: the only Python node is the tiny "
-        "query-rotation mapInPandas (NQ rows); codes scan carries the "
-        "cluster_id probe filter (partition pruning / DPP); est/est_lb are "
-        "codegen column expressions; two-phase rank cut + final top-k are "
+        "rabitq_search on a saved index (E1-E3, broadcast scorer)",
+        rabitq.rabitq_search(qs, codes, cf, meta2, nprobe=3, k=10),
+        "The planner's small-batch route: probes are picked driver-side, "
+        "the codes scan is left-semi-joined with the broadcast probed-"
+        "cluster list (partition pruning) and scored per cluster by one "
+        "`MapInPandas` BLAS pass; two-phase rank cut + final top-k are "
         "partial-`WindowGroupLimit` windows.",
     )
     add(
@@ -103,8 +103,7 @@ def main() -> None:
     add(
         "rabitq_search refine_mode='threshold' (adaptive distk prune)",
         rabitq.rabitq_search(
-            qs, codes, cf, meta2, nprobe=3, k=10, scorer="sql",
-            refine_mode="threshold",
+            qs, codes, cf, meta2, nprobe=3, k=10, refine_mode="threshold",
         ),
         "The two phase-2 windows (k-th best estimate, then the est_lb ≤ "
         "dist_k filter) share ONE hashpartitioning(qid) exchange — the "
@@ -112,8 +111,7 @@ def main() -> None:
     )
     add(
         "rabitq_threshold_stats (adaptive-prune activity attestation)",
-        rabitq.rabitq_threshold_stats(qs, codes, cf, meta2, nprobe=3, k=10,
-                                      scorer="sql"),
+        rabitq.rabitq_threshold_stats(qs, codes, cf, meta2, nprobe=3, k=10),
         "Same _threshold_marked windows as the search path (shared "
         "hashpartitioning(qid) exchange), then ONE partial-aggregated "
         "count per query — n_pool/n_kept come from a single pass over "
@@ -127,19 +125,20 @@ def main() -> None:
         "re-scored declaratively -> broadcast anti-join.",
     )
 
+    # a corpus-sized batch gets the cogroup scorer; at fixture scale the
+    # route is forced the same way, by a broadcast threshold it exceeds
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     add(
         "rabitq_search full-probes fast path (cogroup scorer)",
-        rabitq.rabitq_search(
-            qs, codes, cf, meta2, nprobe=64, k=10, scorer="arrow_cogroup",
-            full_probes=True,
-        ),
-        "nprobe >= K: probe selection degenerates to a broadcast "
-        "cross-join of rotated queries x rotated centroids — no W1 rank "
-        "window (`probe_rank` absent), no distinct-keys semi-join; the "
-        "cogroup exchange pairs each cluster's codes with its probing "
-        "queries for the Arrow BLAS kernel.  This is the ANN self-join "
-        "dedup configuration.",
+        rabitq.rabitq_search(qs, codes, cf, meta2, nprobe=64, k=10),
+        "nprobe >= K: the fused query prep emits every (query, cluster) "
+        "residual with no probe sort (`probe_rank` absent) and the "
+        "codes need no distinct-keys semi-join; the cogroup exchange "
+        "pairs each cluster's codes with its probing queries for the "
+        "Arrow BLAS kernel.  This is the ANN self-join dedup route at "
+        "corpus scale (shown with autoBroadcastJoinThreshold=-1).",
     )
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     add(
         "tpch_q21 (correlated EXISTS / NOT EXISTS)",
@@ -184,7 +183,7 @@ def main() -> None:
     )
 
     sweep, sweep_scored = rabitq.rabitq_search_sweep(
-        qs, codes, cf, meta2, nprobes=[3, 6], k=10, scorer="arrow_cogroup"
+        qs, codes, cf, meta2, nprobes=[3, 6], k=10
     )
     add(
         "rabitq_search_sweep grid point (amortized sweep, np=3 of max 6)",

@@ -60,8 +60,7 @@ def main() -> None:
     res = t("rabitq_search construct", lambda: rabitq_search(
         norm.select(F.col("id").alias("qid"), F.col("vec").alias("qvec")),
         index_df, cents_full, meta, nprobe=nprobe, k=k_per_query + 1,
-        rerank_base=norm, scorer="arrow_cogroup",
-        full_probes=nprobe >= n_clusters, prune_codes=False,
+        rerank_base=norm,
     ))
     t("search noop (scored+rerank+topk)", lambda: res.write.format("noop")
       .mode("overwrite").save())
