@@ -39,7 +39,11 @@ def _unrolled_fold(term_fn, dim: int) -> str:
     l2sq 2.8× FASTER (0.19s vs 0.53s median); unrolled dot/cosine
     SLOWER (dot 2.0s vs 0.37s) — the repeated (a[i]−b[i]) term
     splits/JITs well, plain-product folds do not — so production call
-    sites (operators.knn.distance_col) unroll the l2 kernel only."""
+    sites unroll the l2 kernel only (``operators.knn.distance_col`` and
+    ``l2sq`` with a ``dim``: exact KNN, IVF assignment and probe
+    windows, PQ ADC).  The RaBitQ exact rerank and the Arrow scorers'
+    probe selection run this same fold in numpy
+    (``operators.rabitq._l2_fold``), bitwise equal."""
     e = "CAST(0.0 AS DOUBLE)"
     for i in range(dim):
         e = f"({e} + {term_fn(i)})"

@@ -780,9 +780,8 @@ def _ann_self_join_scored_pairs(
     # repartition the thin pair list before the exact-cosine projection:
     # with a/b broadcast the join chain is narrow, and AQE coalesces the
     # tiny post-distinct exchange to ~1 partition — which would serialize
-    # every pair's array-fold cosine into one task (same effect as the
-    # rerank chain in rabitq._finalize_topk).  The extra exchange carries
-    # two BIGINTs per row.
+    # every pair's array-fold cosine into one task.  The extra exchange
+    # carries two BIGINTs per row.
     return pairs.repartition("id_a").join(a, on="id_a").join(b, on="id_b").select(
         "id_a", "id_b",
         F.expr(V.cosine_sim_staged("va", "vb", "na", "nb")).alias("cos"),

@@ -55,8 +55,11 @@ from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions import vector as V
 from ..localdf import local_rows_df
@@ -1083,19 +1086,115 @@ def _scored_columns(
     return cols
 
 
+def _l2_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Squared L2 over the last axis of two broadcastable float64 arrays,
+    as ``functions.vector.l2sq(a, b, dim)``'s IEEE operations in their
+    order — ((0.0 + (a₀−b₀)²) + (a₁−b₁)²) + … — so the value is bitwise
+    the SQL one (a pairwise ``.sum()`` is not)."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        d = a[..., j] - b[..., j]
+        acc += d * d
+    return acc
+
+
+def _probe_order(
+    Q: np.ndarray, cmat: np.ndarray, cids: np.ndarray, take: int
+) -> np.ndarray:
+    """W1 for a block of queries Q (g × dim) → g × min(take, K) indices
+    into ``cids`` of each query's nearest centroids (``cmat``, K × dim),
+    ties to the lowest cluster_id: the order of ``ivf.select_probes``'
+    window, bitwise (see :func:`_l2_fold`).  Both Arrow scorers probe
+    through here.  Blocked over queries to bound the g·K temporaries."""
+    take = min(take, len(cids))
+    blk = max(1, (1 << 22) // max(len(cids), 1))
+    order = np.empty((len(Q), take), dtype=np.int64)
+    for s in range(0, len(Q), blk):
+        d2 = _l2_fold(Q[s : s + blk, None, :], cmat[None, :, :])
+        order[s : s + blk] = np.lexsort(
+            (np.broadcast_to(cids, d2.shape), d2), axis=1
+        )[:, :take]
+    return order
+
+
+def _vector_matrix(col: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """An Arrow list<float|double> column → (n × dim float64, ok).
+
+    ``ok`` is False where the SQL fold over ``get(v, j)``, j < dim, is
+    NULL: a NULL vector, one shorter than dim, or one with a NULL among
+    its first dim coordinates; the values of those rows are meaningless.
+    Coordinates past dim are dropped — that fold never reads them."""
+    off = col.offsets.to_numpy()
+    ok = np.diff(off) >= dim
+    if col.null_count:
+        ok &= col.is_valid().to_numpy(zero_copy_only=False)
+    values = col.values
+    rows = np.flatnonzero(ok)
+    idx = off[rows][:, None] + np.arange(dim)
+    if values.null_count:
+        ok[rows[values.is_null().to_numpy(zero_copy_only=False)[idx].any(axis=1)]] = False
+    out = np.zeros((len(col), dim))
+    out[rows] = values.to_numpy(zero_copy_only=False)[idx]
+    return out, ok
+
+
+def _driver_queries(rows: list, dim: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Collected (qid, qvec) rows → (qids, Q n × dim, ok), in row order.
+    The broadcast scorer probes from Q and the broadcast rerank folds
+    against it, so a batch is converted once per search."""
+    qids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    Q, ok = _vector_matrix(pa.array([r[1] for r in rows], pa.list_(pa.float64())), dim)
+    return qids, Q, ok
+
+
+def _exact_rerank(
+    pairs: DataFrame, dim: int, queries: Broadcast | None = None
+) -> DataFrame:
+    """Exact squared L2 of each (qid, id) pair in one map-side Arrow pass
+    → (qid, id, est_dist): only distances leave the task, never vectors.
+
+    ``pairs`` holds each pair's base vector ``vec`` and, unless
+    ``queries`` (a Spark broadcast of :func:`_driver_queries`) supplies
+    it by qid, its query vector ``qvec``.  The value is bitwise
+    ``knn.distance_col('l2', qvec, vec, dim)``: NULL where either
+    vector is NULL, shorter than dim or has a NULL coordinate; the first
+    dim coordinates of a longer one; NaN and inf as IEEE values (Arrow
+    out, not pandas, which would turn NaN into NULL)."""
+    schema = StructType([
+        pairs.schema["qid"], pairs.schema["id"], StructField("est_dist", DoubleType())
+    ])
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        if queries is not None:
+            qids, qmat, qok = queries.value
+            by_qid = np.argsort(qids, kind="stable")
+            sorted_qids = qids[by_qid]
+        for b in batches:
+            qid = b.column("qid")
+            v, ok = _vector_matrix(b.column("vec"), dim)
+            if queries is None:
+                q, q_ok = _vector_matrix(b.column("qvec"), dim)
+            else:
+                pos = by_qid[np.searchsorted(sorted_qids, qid.to_numpy())]
+                q, q_ok = qmat[pos], qok[pos]
+            dist = pa.array(_l2_fold(q, v), mask=~(ok & q_ok))
+            yield pa.RecordBatch.from_arrays(
+                [qid, b.column("id"), dist], names=schema.fieldNames()
+            )
+
+    return pairs.mapInArrow(fold, schema)
+
+
 def _arrow_scored_broadcast(
-    queries: DataFrame,
     codes: DataFrame,
     centroids: DataFrame,
     meta: dict,
     nprobe: int,
-    qid: str,
-    qvec: str,
+    queries: tuple[np.ndarray, np.ndarray, np.ndarray],
     estimator: str,
     per_cluster_cut: int | None = None,
     with_probe_rank: bool = False,
     centroid_rows: list | None = None,
-    query_rows: list | None = None,
 ) -> DataFrame:
     """Small-batch Arrow scorer → (qid, id, est_dist, est_lb) candidates
     (+ ``probe_rank`` when ``with_probe_rank`` — the 1-based rank of the
@@ -1109,16 +1208,18 @@ def _arrow_scored_broadcast(
     batches go to the cogroup scorer, which has no driver bound.  Codes
     are LEFT-SEMI-joined with the tiny distinct-probed-cluster table (no
     row duplication) and scored per cluster with one BLAS matmul against
-    the whole probing-query matrix.
+    the whole probing-query matrix.  ``queries`` is the batch as
+    :func:`_driver_queries` converted it.
     """
-    spark = queries.sparkSession
+    spark = codes.sparkSession
     D = meta["D"]
     dim = meta["dim"]
     P = rotation_matrix(D, meta["seed"])
-    # driver-resident serving batches (rabitq_search(query_rows=...))
-    # skip the construction-time collect job — the RPC-serving shape
-    q_rows = (query_rows if query_rows is not None
-              else queries.select(qid, qvec).collect())
+    qids, qmat, q_ok = queries
+    if not q_ok.all():
+        raise ValueError(
+            f"rabitq_search: every query vector needs {dim} non-NULL coordinates"
+        )
     # serving loops hit the same index every micro-batch: a pre-collected
     # centroid list (rabitq_search(centroid_rows=...)) skips one
     # collect JOB per batch — at micro-batch sizes the scheduling floor,
@@ -1127,26 +1228,7 @@ def _arrow_scored_broadcast(
                  else centroids.select("cluster_id", "centroid").collect())
     cids = np.array([int(r[0]) for r in cent_rows])
     cmat = np.stack([np.array(r[1], dtype=np.float64) for r in cent_rows])  # K × dim
-    qids = np.array([int(r[0]) for r in q_rows])
-    qmat = np.stack([np.array(r[1], dtype=np.float64) for r in q_rows])  # NQ × dim
-    # W1 driver-side: top-nprobe clusters per query (ties → lowest cid).
-    # Blocked over queries: the one-shot qmat[:,None,:] - cmat[None,:,:]
-    # materializes an NQ × K × dim float64 temp — 50 GB at the published
-    # 1M operating point (NQ=1000, K=4096, dim=1536), which OOM-killed
-    # the sweep driver (r9).  Per-element arithmetic is unchanged by the
-    # blocking (same diff/square/axis-2 reduction per (q, c) pair), so
-    # d2 is BITWISE what the one-shot form produced — probe orders and
-    # every pinned expected table are unaffected; the temp is bounded to
-    # ~0.5 GB regardless of NQ (the planner already bounds NQ·nprobe·D,
-    # but not NQ·K·dim: 4096 queries × 4096 cells × 1536 dims would
-    # still be 200 GB unblocked).
-    d2 = np.empty((len(qids), len(cids)))
-    blk = max(1, int(5e8) // (cmat.shape[0] * cmat.shape[1] * 8))
-    for s in range(0, len(qids), blk):
-        diff = qmat[s:s + blk, None, :] - cmat[None, :, :]
-        np.square(diff, out=diff)
-        d2[s:s + blk] = diff.sum(axis=2)
-    order = np.lexsort((np.broadcast_to(cids, d2.shape), d2), axis=1)[:, :nprobe]
+    order = _probe_order(qmat, cmat, cids, nprobe)  # W1, driver-side
     qpad = np.zeros((len(qids), D))
     qpad[:, :dim] = qmat
     cpad = np.zeros((len(cids), D))
@@ -1233,11 +1315,10 @@ def _fused_qprobe(
 
     Bitwise contract (everything downstream is pinned by oracle hashes):
 
-    - probe order: cdist replicates ``knn.distance_col('l2', ..,
-      dim=meta['dim'])``'s unrolled fold — (q_i−c_i)² terms accumulated
-      LEFT-TO-RIGHT from 0.0 (a dim-step loop over (g×K) planes, not a
-      pairwise ``.sum()``), ties to the lowest cluster_id exactly like
-      the ``row_number`` window it replaces;
+    - probe order: :func:`_probe_order`, the unrolled fold of
+      ``knn.distance_col('l2', .., dim=meta['dim'])`` with ties to the
+      lowest cluster_id, exactly like the ``row_number`` window it
+      replaces;
     - qrot: the same zero-pad + ``Q @ P.T`` matmul ``rotate_queries``
       performs;
     - qr: the same elementwise float64 subtract against the same
@@ -1276,15 +1357,7 @@ def _fused_qprobe(
                 if full:
                     sel = np.broadcast_to(np.arange(K), (g, K))
                 else:
-                    # W1: unrolled-fold L2², accumulated left-to-right so
-                    # cdist is BITWISE the SQL kernel's value
-                    acc = np.zeros((g, K))
-                    for j in range(dim):
-                        d = Qraw[:, j, None] - cmat_[None, :, j]
-                        acc += d * d
-                    sel = np.lexsort(
-                        (np.broadcast_to(cids_, acc.shape), acc), axis=1
-                    )[:, :take]
+                    sel = _probe_order(Qraw, cmat_, cids_, take)
                 qr = QR[:, None, :] - crot_[sel]  # g × take × D
                 cols = {
                     "qid": np.repeat(blk[qid].to_numpy(), take),
@@ -1475,14 +1548,13 @@ def _finalize_topk(
     k: int,
     refine: int | None,
     rerank_base: DataFrame | None,
-    qid: str,
-    qvec: str,
+    dim: int,
     refine_mode: str = "rank",
-    dim: int | None = None,
-    broadcast_rerank: bool = True,
+    rerank_queries: Broadcast | None = None,
 ) -> DataFrame:
-    """Shared phase-2: E2 cut → optional exact re-rank (E4) → final
-    top-k (W3) → (qid, rank, id, est_dist).
+    """Shared phase-2 on canonical (qid, qvec) queries: E2 cut →
+    optional exact re-rank (E4) → final top-k (W3) → (qid, rank, id,
+    est_dist).
 
     ``refine_mode='rank'`` (default) keeps the γ·k best error-bound
     lower bounds per query — a superset of the reference's sequential
@@ -1497,19 +1569,23 @@ def _finalize_topk(
     < k candidates keep everything.  Both windows share one
     hashpartitioning(qid) exchange.
 
-    With ``rerank_base`` the raw vectors join ONLY the broadcast
-    shortlist, so the 100 TB vector table is scanned in place, never
-    shuffled.
+    With ``rerank_base`` (id, vec) the shortlist's exact squared L2 over
+    the first ``dim`` coordinates replaces est_dist, computed by
+    :func:`_exact_rerank` in the task that holds the base vector — the
+    exchange into the top-k window carries (qid, id, est_dist), never a
+    vector.  The planner's rerank route decides where the query vectors
+    come from:
 
-    ``broadcast_rerank`` (the planner's rerank route): True broadcasts
-    the (qid, id) shortlist and the query vectors into the exact-rerank
-    joins — right when the query batch is serving-sized.  False is the
-    queries=corpus route (the ANN SELF-join, where the query side IS the
-    100 TB corpus and both broadcasts would exceed the 8 GB relation
-    cap): plain equi-joins — base⋈shortlist co-partitioned by id, then
-    one exchange by qid that doubles as the final top-k window's
-    partitioning.  Same rows, same values; routes are result-identical
-    (asserted in tests)."""
+    - broadcast (``rerank_queries``, a Spark broadcast of the driver
+      query matrix): the (qid, id) shortlist broadcasts into the base
+      scan, which is read in place — serving-sized batches;
+    - shuffle (``rerank_queries`` None): the queries=corpus route (the
+      ANN SELF-join, where the query side IS the corpus and no side
+      fits a broadcast): base⋈shortlist on id, then ⋈queries on qid,
+      both plain equi-joins.
+
+    Same rows, same values; routes are result-identical (asserted in
+    tests)."""
     if refine_mode not in ("rank", "threshold"):
         raise ValueError(
             f"refine_mode must be 'rank' or 'threshold', got {refine_mode!r}"
@@ -1525,35 +1601,14 @@ def _finalize_topk(
             .drop("_r")
         )
     if rerank_base is not None:
-        from .knn import distance_col
-
-        if not broadcast_rerank:
-            # queries=corpus: nothing broadcasts.  base⋈shortlist is a
-            # plain equi-join on id; the join on qid then establishes
-            # hashpartitioning(qid), which the top-k window below
-            # REUSES — the matched vectors cross the network exactly
-            # once (guide §8: heavy bytes move once, after the
-            # lightweight shortlist decided what moves).
-            exact = (
-                rerank_base.select("id", "vec")
-                .join(shortlist.select("qid", "id"), on="id")
-                .join(queries.select(qid, qvec), on=qid)
+        pairs = rerank_base.select("id", "vec")
+        if rerank_queries is None:
+            pairs = pairs.join(shortlist.select("qid", "id"), on="id").join(
+                queries.select("qid", "qvec"), on="qid"
             )
         else:
-            exact = rerank_base.join(
-                F.broadcast(shortlist.select("qid", "id")), on="id"
-            ).join(F.broadcast(queries.select(qid, qvec)), on=qid)
-        # repartition BEFORE evaluating the exact distance: the top-k
-        # window below requires hashpartitioning(qid) anyway, so this is
-        # the SAME single exchange, just moved under the distance
-        # projection — otherwise the whole broadcast-join + array-fold
-        # chain is narrow on the base scan and collapses into as few
-        # tasks as the scan has partitions (ONE at fixture scale:
-        # measured 3.4s single-task; at production scale it also
-        # rebalances the per-row array math independent of scan layout).
-        shortlist = exact.repartition("qid").select(
-            "qid", "id", distance_col("l2", qvec, "vec", dim).alias("est_dist")
-        )
+            pairs = pairs.join(F.broadcast(shortlist.select("qid", "id")), on="id")
+        shortlist = _exact_rerank(pairs, dim, rerank_queries)
     w = Window.partitionBy("qid").orderBy(F.col("est_dist").asc(), F.col("id").asc())
     # rank + output order in one projection (r11): one fewer eager plan
     # analysis per search build (the withColumn/where/select chain
@@ -1741,33 +1796,48 @@ def _scored_candidates(
     with_probe_rank: bool = False,
     centroid_rows: list | None = None,
     query_rows: list | None = None,
-) -> tuple[DataFrame, _SearchPlan]:
+) -> tuple[DataFrame, Broadcast | None]:
     """Phase 1 of every search entry point, on canonical (qid, qvec)
     queries: plan the routes (:func:`_plan_search`; nq is
     ``len(query_rows)`` or one count() job) and score on the planned
-    scorer → ((qid, id, est_dist, est_lb [, probe_rank]), plan).
-    ``centroid_rows``/``query_rows`` only feed the broadcast scorer's
-    driver-side prep; the cogroup scorer ignores them."""
+    scorer → ((qid, id, est_dist, est_lb [, probe_rank]),
+    rerank_queries).
+
+    A broadcast route collects the batch once — ``query_rows`` when
+    given, else one collect job — and the scorer and the exact rerank
+    share it: ``rerank_queries`` is the Spark broadcast of that query
+    matrix for :func:`_finalize_topk` when the plan broadcasts the
+    rerank, else None.  ``centroid_rows`` only feeds the broadcast
+    scorer; the cogroup scorer ignores it and ``query_rows``."""
+    spark = queries.sparkSession
     # T in bytes, as Spark's own join planner reads the setting
-    conf = queries.sparkSession._jsparkSession.sessionState().conf()
+    conf = spark._jsparkSession.sessionState().conf()
     plan = _plan_search(
         len(query_rows) if query_rows is not None else queries.count,
         nprobe, meta, shortlist, int(conf.autoBroadcastJoinThreshold()),
         probes_injected=probes is not None,
     )
+    q = None
+    if plan.broadcast_scorer or plan.broadcast_rerank:
+        q = _driver_queries(
+            query_rows if query_rows is not None
+            else queries.select("qid", "qvec").collect(),
+            int(meta["dim"]),
+        )
     if plan.broadcast_scorer:
-        return _arrow_scored_broadcast(
-            queries, codes, centroids, meta, nprobe, "qid", "qvec", estimator,
+        scored = _arrow_scored_broadcast(
+            codes, centroids, meta, nprobe, q, estimator,
             per_cluster_cut=per_cluster_cut,
             with_probe_rank=with_probe_rank,
             centroid_rows=centroid_rows,
-            query_rows=query_rows,
-        ), plan
-    return _arrow_scored_cogroup(
-        queries, codes, centroids, meta, nprobe, "qid", "qvec", estimator, probes,
-        per_cluster_cut=per_cluster_cut,
-        with_probe_rank=with_probe_rank,
-    ), plan
+        )
+    else:
+        scored = _arrow_scored_cogroup(
+            queries, codes, centroids, meta, nprobe, "qid", "qvec", estimator,
+            probes, per_cluster_cut=per_cluster_cut,
+            with_probe_rank=with_probe_rank,
+        )
+    return scored, (spark.sparkContext.broadcast(q) if plan.broadcast_rerank else None)
 
 
 def rabitq_search(
@@ -1815,20 +1885,24 @@ def rabitq_search(
       collect of the query side — unbounded NQ);
     - the cogroup scorer skips probe selection and the codes semi-join
       when nprobe ≥ K;
-    - the exact rerank broadcasts the shortlist and query vectors iff
-      nq·(8·dim + 16·refine·k) ≤ T; else plain equi-joins.
+    - the exact rerank broadcasts the shortlist into the base scan and
+      ships the query vectors the driver holds iff
+      nq·(8·dim + 16·refine·k) ≤ T; else plain equi-joins.  Either way
+      the distance is computed map-side and the top-k exchange carries
+      distances, not vectors.
 
     nq is ``len(query_rows)`` when given, else one count() job, paid
-    only when a rule needs it.
+    only when a rule needs it.  A broadcast route collects the queries
+    once (one job) unless ``query_rows`` holds them.
 
     ``centroid_rows`` / ``query_rows``: driver-resident
     ``centroids.select("cluster_id", "centroid").collect()`` and (qid,
-    qvec) pairs for the broadcast scorer — serving loops that hold them
+    qvec) pairs for the broadcast routes — serving loops that hold them
     already skip a collect job each (a no-rerank serving call is then
     exactly ONE Spark job).  ``query_rows`` must mirror ``queries``
-    (still used by the rerank and the cogroup scorer) and needs an
-    L2-metric index; both are unused when the plan picks the cogroup
-    scorer.
+    (still used by the cogroup scorer and the shuffle rerank) and needs
+    an L2-metric index; ``centroid_rows`` is unused when the plan picks
+    the cogroup scorer.
     """
     queries, rerank_base, probes, qid, qvec = _prepare_search_inputs(
         queries, rerank_base, meta, qid, qvec, probes, query_rows
@@ -1838,16 +1912,16 @@ def rabitq_search(
         # pool — disable the per-cluster pre-cut so the k-th estimate and
         # the lb filter see every probed candidate
         refine = None
-    scored, plan = _scored_candidates(
+    scored, rerank_queries = _scored_candidates(
         queries, codes, centroids, meta, nprobe, estimator,
         shortlist=None if rerank_base is None else (refine or 1) * k,
         probes=probes, per_cluster_cut=None if refine is None else refine * k,
         centroid_rows=centroid_rows, query_rows=query_rows,
     )
     return _finalize_topk(
-        scored, queries, k, refine, rerank_base, qid, qvec, refine_mode,
+        scored, queries, k, refine, rerank_base,
         dim=int(meta["dim"]),  # ip: meta dim is already the augmented width
-        broadcast_rerank=plan.broadcast_rerank,
+        refine_mode=refine_mode, rerank_queries=rerank_queries,
     )
 
 
@@ -1931,7 +2005,7 @@ def rabitq_search_sweep(
     np_max = max(nprobes)
     if refine_mode == "threshold":
         refine = None  # see rabitq_search: threshold is pool-wide
-    scored, plan = _scored_candidates(
+    scored, rerank_queries = _scored_candidates(
         queries, codes, centroids, meta, np_max, estimator,
         shortlist=None if rerank_base is None else (refine or 1) * k,
         per_cluster_cut=None if refine is None else refine * k,
@@ -1942,9 +2016,9 @@ def rabitq_search_sweep(
     for np_ in sorted(set(int(n) for n in nprobes)):
         pool = scored.where(F.col("probe_rank") <= np_).drop("probe_rank")
         out[np_] = _finalize_topk(
-            pool, queries, k, refine, rerank_base, qid, qvec, refine_mode,
+            pool, queries, k, refine, rerank_base,
             dim=int(meta["dim"]),  # ip: meta dim is already the augmented width
-            broadcast_rerank=plan.broadcast_rerank,
+            refine_mode=refine_mode, rerank_queries=rerank_queries,
         )
     return out, scored
 

@@ -73,3 +73,24 @@ def exchange_count(df: DataFrame) -> int:
         for line in plan_tree(df).splitlines()
         if "Exchange" in line and "BroadcastExchange" not in line and "Reused" not in line
     )
+
+
+def exchange_column_types(df: DataFrame) -> list[tuple[str, list[str]]]:
+    """(node name, output column types) of every exchange — shuffle and
+    broadcast — in the physical plan as first planned (AQE's initial
+    plan), so a test can assert what crosses the network."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.nodeName():
+            out = node.output()
+            found.append((
+                node.nodeName(),
+                [out.apply(i).dataType().simpleString() for i in range(out.size())],
+            ))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found

@@ -329,6 +329,68 @@ class TestExactRerank:
         }
         assert got == want and len(got) == 100
 
+    def test_kernel_matches_sql_fold_on_edge_rows(self, spark):
+        """The Arrow rerank kernel, with the query vector in the row (the
+        shuffle route) and from the driver broadcast (the broadcast
+        route), returns distance_col('l2', qvec, vec, dim) on every edge
+        row: NULL for a NULL or short vector, the first dim coordinates
+        of a long one, IEEE NaN and inf (not NULL)."""
+        from extended_rabitq_spark.operators import rabitq
+        from extended_rabitq_spark.operators.knn import distance_col
+
+        dim = 4
+        q = [0.5, -1.25, 2.0, 3.0]
+        vecs = {
+            10: [1.0, 2.0, -3.5, 0.25],  # normal
+            20: None,  # NULL vector
+            30: [1.0, 2.0, 3.0],  # shorter than dim
+            40: [1.0, 2.0, -3.5, 0.25, 99.0],  # longer than dim
+            50: [1.0, float("nan"), 3.0, 4.0],
+            60: [1.0, float("inf"), 3.0, 4.0],
+        }
+        rows = [(i, i * 10, q, v) for i, v in enumerate(vecs.values(), 1)]
+        df = spark.createDataFrame(
+            rows, "qid long, id long, qvec array<float>, vec array<float>"
+        )
+        want = {
+            (r.qid, r.id): r.d
+            for r in df.select(
+                "qid", "id", distance_col("l2", "qvec", "vec", dim).alias("d")
+            ).collect()
+        }
+        fold = 0.0
+        for a, b in zip(q, vecs[10]):
+            fold += (a - b) * (a - b)
+        assert want[(1, 10)] == want[(4, 40)] == fold
+        assert want[(2, 20)] is None and want[(3, 30)] is None
+        assert math.isnan(want[(5, 50)]) and want[(6, 60)] == math.inf
+        queries = spark.sparkContext.broadcast(
+            rabitq._driver_queries([(r[0], r[2]) for r in rows], dim)
+        )
+        for got in (
+            rabitq._exact_rerank(df, dim),
+            rabitq._exact_rerank(df.drop("qvec"), dim, queries),
+        ):
+            got = {(r.qid, r.id): r.est_dist for r in got.collect()}
+            assert got.keys() == want.keys()
+            for key in want:
+                assert repr(got[key]) == repr(want[key]), key
+
+    def test_reranked_plan_shuffles_no_vectors(self, spark):
+        """A reranked search on the broadcast routes computes the exact
+        distance map-side: no exchange in its plan carries an array."""
+        from extended_rabitq_spark.plans import inspect as I
+
+        base, qs, idx, cents_full, meta = _search_fixture(spark)
+        res = _search_at(spark, FITS_ALL, qs, idx, cents_full, meta,
+                         nprobe=3, k=5, refine=4, rerank_base=base)
+        assert "MapInArrow" in I.plan_tree(res)
+        exchanges = I.exchange_column_types(res)
+        assert ("Exchange", ["bigint", "bigint", "double"]) in exchanges
+        for name, types in exchanges:
+            assert not any(t.startswith("array") for t in types), (name, types)
+        idx.unpersist()
+
 
 class TestCompaction:
     def test_compact_preserves_results_reduces_files(self, spark, tmp_path):
@@ -589,9 +651,7 @@ def _sql_search(qs, idx, cents_full, meta, nprobe, k, refine=4,
         qs, rerank_base, meta, "qid", "qvec"
     )
     scored = rabitq._sql_scored(q, idx, cents_full, meta, nprobe, qid, qvec, estimator)
-    return rabitq._finalize_topk(
-        scored, q, k, refine, rb, qid, qvec, dim=int(meta["dim"])
-    )
+    return rabitq._finalize_topk(scored, q, k, refine, rb, dim=int(meta["dim"]))
 
 
 def _assert_rank_identical(a, b, tol=1e-9):
@@ -753,6 +813,35 @@ class TestCogroupScorer:
             f = {(r.qid, r.cluster_id): tuple(r.qr) for r in fused.collect()}
             o = {(r.qid, r.cluster_id): tuple(r.qr) for r in old.collect()}
             assert f == o and len(f) > 0, f"nprobe={nprobe} full={full}"
+        idx.unpersist()
+
+    def test_scorers_share_probe_lists(self, spark):
+        """Both Arrow scorers probe the same clusters in the same order
+        as ivf.select_probes' SQL window (the probe_rank each candidate
+        carries, mapped to its cluster)."""
+        from extended_rabitq_spark.operators import rabitq
+        from extended_rabitq_spark.operators.ivf import select_probes
+
+        base, qs, idx, cents_full, meta = _search_fixture(spark)
+        nprobe = 5
+        clusters = idx.select("id", "cluster_id")
+        lists = []
+        for threshold in (FITS_ALL, FITS_NONE):
+            with broadcast_threshold(spark, threshold):
+                scored, _ = rabitq._scored_candidates(
+                    qs, idx, cents_full, meta, nprobe, "searcher",
+                    with_probe_rank=True,
+                )
+            lists.append(sorted(
+                tuple(r) for r in scored.join(clusters, on="id")
+                .select("qid", "probe_rank", "cluster_id").distinct().collect()
+            ))
+        sql = select_probes(
+            qs, cents_full.select("cluster_id", "centroid"), nprobe,
+            dim=int(meta["dim"]),
+        ).join(clusters.select("cluster_id").distinct(), on="cluster_id")
+        sql = sorted(tuple(r) for r in sql.select("qid", "probe_rank", "cluster_id").collect())
+        assert lists[0] == lists[1] == sql and len(sql) == 10 * nprobe
         idx.unpersist()
 
     def test_rerank_routes_identical(self, spark):

@@ -21,9 +21,10 @@ HDR = (
     "What to look for: `BroadcastHashJoin`/`BroadcastNestedLoopJoin` "
     "(small sides broadcast, big sides never shuffle), `WindowGroupLimit` "
     "(map-side partial top-k), `PushedFilters`/`PartitionFilters` on scans, "
-    "and the absence of Python eval nodes on query hot paths (the one "
-    "`MapInPandas`/`FlatMapCoGroupsInPandas` in ANN plans is the Arrow "
-    "batch stage described in the README).\n\n"
+    "and the absence of Python eval nodes on query hot paths.  ANN plans "
+    "carry the Arrow batch stages described in the README: the scorer "
+    "(`MapInPandas` or `FlatMapCoGroupsInPandas`) and, in a reranked "
+    "plan, the exact rerank's `MapInArrow` on the raw-vector scan.\n\n"
 )
 
 
