@@ -74,7 +74,7 @@ def cmd_create_index(spark: SparkSession, a: argparse.Namespace) -> int:
     index_df, meta = rabitq.build_index(
         base, cents, total_bits=a.b, metric=a.metric, mips_m=mips_m
     )
-    rabitq.save_index(index_df, cents, meta, a.index, packed=a.packed)
+    rabitq.save_index(index_df, cents, meta, a.index)
     if a.graph:
         ivf.save_centroid_graph(
             spark, ivf.build_centroid_graph(cents), a.index
@@ -82,7 +82,7 @@ def cmd_create_index(spark: SparkSession, a: argparse.Namespace) -> int:
     dt = time.perf_counter() - t0
     n = spark.read.parquet(f"{a.index}/codes").count()
     print(f"index built: {n} vectors, K={a.k}, B={a.b}, "
-          f"packed={a.packed}, graph={a.graph}, {dt:.1f}s -> {a.index}")
+          f"graph={a.graph}, {dt:.1f}s -> {a.index}")
     if a.results_dir:
         save_indexing_time_csv(a.results_dir, a.dataset, dt / 60.0)  # minutes
     return 0
@@ -562,7 +562,6 @@ def build_parser() -> argparse.ArgumentParser:
              "the MIPS augmented-coordinate reduction (both recorded "
              "in index meta and honored by search)",
     )
-    s.add_argument("--packed", action="store_true", help="Q4 BINARY codes")
     s.add_argument(
         "--train-sample", type=int, default=25_000,
         help="k-means training sample size (faiss-style subsample; "

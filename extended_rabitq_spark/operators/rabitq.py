@@ -208,24 +208,6 @@ def quantize_rows(
     return {"code": code, "x2": x2, "f_ip_ex": f_ip_ex, "f_err": f_err}
 
 
-def pack_codes(codes: np.ndarray, total_bits: int) -> np.ndarray:
-    """Q4 code compaction: (n, D) int codes in [0, 2^B−1] → (n, D·B/8)
-    uint8 rows (bit-planes via packbits).  The reference packs for SIMD
-    shuffle layout (inc/index/Quantizer.hpp:491-631); here the payoff is
-    storage: ARRAY<SMALLINT> parquet rows are ~4× larger than BINARY at
-    B=4, which is real money at 100 TB."""
-    n, D = codes.shape
-    bits = ((codes[:, :, None] >> np.arange(total_bits)[None, None, :]) & 1).astype(np.uint8)
-    return np.packbits(bits.reshape(n, D * total_bits), axis=1)
-
-
-def unpack_codes(packed: np.ndarray, total_bits: int, D: int) -> np.ndarray:
-    """Inverse of :func:`pack_codes` → (n, D) int32."""
-    n = packed.shape[0]
-    bits = np.unpackbits(packed, axis=1, count=D * total_bits).reshape(n, D, total_bits)
-    return (bits.astype(np.int32) << np.arange(total_bits)[None, None, :]).sum(axis=2)
-
-
 # --------------------------------------------------------------------------
 # Index build / save / load (S4/S5)
 # --------------------------------------------------------------------------
@@ -390,47 +372,83 @@ def build_index(
     return index_df, meta
 
 
-def _pack_index_df(index_df: DataFrame, total_bits: int) -> DataFrame:
-    """Q4 compaction as a map-only pass: ARRAY<SMALLINT> codes → BINARY."""
-
-    def _pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.array(pdf["code"].tolist(), dtype=np.int32)
-            pb = pack_codes(codes, total_bits)
-            yield pd.DataFrame(
-                {
-                    "cluster_id": pdf["cluster_id"].to_numpy(),
-                    "id": pdf["id"].to_numpy(),
-                    "code_packed": [row.tobytes() for row in pb],
-                    "x2": pdf["x2"].to_numpy(),
-                    "f_ip_ex": pdf["f_ip_ex"].to_numpy(),
-                    "f_err": pdf["f_err"].to_numpy(),
-                }
-            )
-
-    return index_df.mapInPandas(
-        _pack,
-        "cluster_id int, id long, code_packed binary, x2 double, f_ip_ex double, f_err double",
-    )
-
-
 def save_index(
-    index_df: DataFrame, centroids: DataFrame, meta: dict, path: str, packed: bool = False
+    index_df: DataFrame, centroids: DataFrame, meta: dict, path: str
 ) -> None:
     """S4: persist codes partitioned by cluster_id (partition pruning ≡
     cluster pointer slicing, inc/index/IVF.hpp:219-252) + rotated-centroid
     side table + meta JSON.
 
-    ``packed=True`` stores Q4-compacted BINARY codes (~4× smaller at B=4).
-    Packed indexes are searched by the Arrow scorer (the default), which
-    unpacks batches vectorized; the SQL scorer needs unpacked arrays.
+    Codes stay ``ARRAY<SMALLINT>``: the reference bit-packs them (Q4) for
+    its SIMD kernels, but parquet's dictionary/RLE encoding already
+    stores the arrays smaller than packed BINARY (COVERAGE.md, Q4).
     """
-    out = _pack_index_df(index_df, meta["total_bits"]) if packed else index_df
-    meta = dict(meta, packed=packed)
-    out.write.mode("overwrite").partitionBy("cluster_id").parquet(f"{path}/codes")
+    index_df.write.mode("overwrite").partitionBy("cluster_id").parquet(f"{path}/codes")
     _save_side_artifacts(index_df.sparkSession, centroids, meta, path)
+
+
+def _read_meta(path: str) -> dict:
+    """A saved index's ``meta.json`` — the one reader every entry point
+    uses, so an index whose codes were saved bit-packed (a retired BINARY
+    layout, ``"packed": true``) fails here with a named error instead of
+    inside a search worker."""
+    with open(f"{path}/meta.json") as f:
+        meta = json.load(f)
+    if meta.get("packed"):
+        raise ValueError(
+            f"index at {path} stores bit-packed BINARY codes, a layout "
+            "that is no longer read — rebuild the index"
+        )
+    return meta
+
+
+def _partition_ids(path: str) -> list[int]:
+    """cluster_id values of the ``{path}/codes`` partition directories."""
+    return [
+        int(name.split("=", 1)[1])
+        for name in os.listdir(f"{path}/codes")
+        if name.startswith("cluster_id=")
+    ]
+
+
+def _replace_partitions(path: str, rows: DataFrame, cluster_ids) -> None:
+    """Replace the ``cluster_id`` partitions ``cluster_ids`` of
+    ``{path}/codes`` with ``rows`` — their complete new contents, which
+    may add partitions (rebalance's new ids) or leave some empty (a
+    delete that removes every row of a cluster).  Every maintenance
+    rewrite (compact, delete, rebalance) goes through here.
+
+    ``rows.repartition("cluster_id")`` is written to one staging
+    directory, one file per partition; then only the named partition
+    directories move out and the staged ones move in.  Partitions not
+    named are never opened or rewritten.  When no partition is left, a
+    schema-only table is written so the next load still infers the
+    schema.
+
+    The swap is renames, so no *torn* partition is ever visible on a
+    POSIX FS, but it is not atomic: a reader listing between the renames
+    sees a partition missing, and a scan in flight can lose files.  Run
+    maintenance in a quiescent reader window (on object stores, prefer a
+    table format with an atomic replace, Iceberg/Delta)."""
+    import shutil
+
+    codes, stage = f"{path}/codes", f"{path}/codes_staging"
+    rows.repartition("cluster_id").write.mode("overwrite").partitionBy(
+        "cluster_id"
+    ).parquet(stage)
+    os.makedirs(f"{stage}/_replaced")
+    for cid in cluster_ids:
+        part = f"cluster_id={cid}"
+        if os.path.isdir(f"{codes}/{part}"):
+            os.rename(f"{codes}/{part}", f"{stage}/_replaced/{part}")
+    for name in os.listdir(stage):
+        if name.startswith("cluster_id="):
+            os.rename(f"{stage}/{name}", f"{codes}/{name}")
+    shutil.rmtree(stage)
+    if not _partition_ids(path):
+        rows.sparkSession.createDataFrame([], rows.schema).write.mode(
+            "overwrite"
+        ).parquet(codes)
 
 
 def _save_side_artifacts(spark, centroids: DataFrame, meta: dict, path: str) -> None:
@@ -467,17 +485,14 @@ def save_index_bucketed(
     index_df.write.mode("overwrite").format("parquet").bucketBy(
         n_buckets, "cluster_id"
     ).sortBy("cluster_id").saveAsTable(table)
-    _save_side_artifacts(
-        index_df.sparkSession, centroids, dict(meta, packed=False), path
-    )
+    _save_side_artifacts(index_df.sparkSession, centroids, meta, path)
 
 
 def load_index_bucketed(
     spark: SparkSession, table: str, path: str
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Load the bucketed-table index: (codes, centroids_full, meta)."""
-    with open(f"{path}/meta.json") as f:
-        meta = json.load(f)
+    meta = _read_meta(path)
     return spark.table(table), spark.read.parquet(f"{path}/centroids"), meta
 
 
@@ -495,8 +510,7 @@ def append_to_index(
     Periodic centroid retraining is a rebuild, as it is for every IVF
     system."""
     spark = new_vectors.sparkSession
-    with open(f"{path}/meta.json") as f:
-        meta = json.load(f)
+    meta = _read_meta(path)
     centroids = spark.read.parquet(f"{path}/centroids").select("cluster_id", "centroid")
     # metric rides with the index: a cosine index normalizes appended
     # vectors exactly like the original build did; an ip index augments
@@ -507,8 +521,6 @@ def append_to_index(
         id_=id_, vec=vec, metric=meta.get("metric", "l2"),
         mips_m=meta.get("mips_norm"),
     )
-    if meta.get("packed"):
-        index_df = _pack_index_df(index_df, meta["total_bits"])
     index_df.write.mode("append").partitionBy("cluster_id").parquet(f"{path}/codes")
 
 
@@ -549,26 +561,11 @@ def compact_index(spark: SparkSession, path: str) -> None:
     classic streaming-ingest small-files problem; at 100 TB unbounded
     file counts degrade scan planning and open() overhead.  Search
     results are unchanged (same rows, same values) — verified by test.
-    Writes to a temp subdir then swaps via two renames, so no *torn*
-    table is ever visible on a POSIX FS — but the swap is not atomic:
-    a reader listing between the renames sees no codes directory, and a
-    scan in flight across the rmtree can lose files.  Run compaction in
-    a quiescent reader window (or on object stores, write to a new
-    versioned prefix and flip a pointer)."""
-    import shutil
-
-    codes = spark.read.parquet(f"{path}/codes")
-    tmp = f"{path}/codes_compacting"
-    (
-        codes.repartition("cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(tmp)
+    The swap is :func:`_replace_partitions` (see its non-atomicity
+    caveat)."""
+    _replace_partitions(
+        path, spark.read.parquet(f"{path}/codes"), _partition_ids(path)
     )
-    old = f"{path}/codes_old"
-    os.rename(f"{path}/codes", old)
-    os.rename(tmp, f"{path}/codes")
-    shutil.rmtree(old)
 
 
 def delete_from_index(
@@ -578,19 +575,14 @@ def delete_from_index(
     its index is immutable).  Returns the number of rows removed.
 
     Only the cluster partitions that actually contain deleted ids are
-    rewritten (dynamic partition overwrite): the delete set joins
-    broadcast against the codes scan to find affected ``cluster_id``
-    values, then an anti-join rewrites just those partitions.  At 100 TB
-    a delete touches O(affected clusters), not the whole index — and the
-    codes scan of unaffected partitions never runs (partition pruning on
-    the IN filter).  A partition whose every row is deleted is removed
-    outright (dynamic overwrite cannot express an empty partition).
-    Same non-atomicity caveat as :func:`compact_index`: run in a
-    quiescent reader window; on object stores prefer a table format
-    with ACID replace (Iceberg/Delta) for the swap.
+    rewritten: the delete set joins broadcast against the codes scan to
+    find affected ``cluster_id`` values, then an anti-join rewrites just
+    those partitions through :func:`_replace_partitions` (see its
+    non-atomicity caveat).  At 100 TB a delete touches O(affected
+    clusters), not the whole index — and the codes scan of unaffected
+    partitions never runs (partition pruning on the IN filter).  A
+    partition whose every row is deleted is removed outright.
     """
-    import shutil
-
     del_ids = ids.select(F.col(id_).alias("id")).distinct()
     codes = spark.read.parquet(f"{path}/codes")
     hit = (
@@ -602,43 +594,11 @@ def delete_from_index(
     if not hit:
         return 0
     affected = [int(r["cluster_id"]) for r in hit]
-    n_deleted = sum(int(r["n_del"]) for r in hit)
     remaining = codes.where(F.col("cluster_id").isin(affected)).join(
         F.broadcast(del_ids), "id", "left_anti"
     )
-    kept_parts = {
-        int(r["cluster_id"])
-        for r in remaining.select("cluster_id").distinct().collect()
-    }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if kept_parts:
-            (
-                remaining.repartition("cluster_id")
-                .write.mode("overwrite")
-                .partitionBy("cluster_id")
-                .parquet(f"{path}/codes")
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    for cid in affected:
-        if cid not in kept_parts:
-            part_dir = f"{path}/codes/cluster_id={cid}"
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-    # If the delete emptied EVERY cluster, leave a readable empty table
-    # (schema-only parquet): a codes dir with no partition dirs would
-    # fail schema inference on the next load.
-    if not any(
-        name.startswith("cluster_id=") for name in os.listdir(f"{path}/codes")
-    ):
-        # schema captured up front: writing `codes.limit(0)` back to its
-        # own source path would trip Spark's overwrite-while-reading check
-        spark.createDataFrame([], codes.schema).write.mode("overwrite").parquet(
-            f"{path}/codes"
-        )
-    return n_deleted
+    _replace_partitions(path, remaining, affected)
+    return sum(int(r["n_del"]) for r in hit)
 
 
 def rebalance_index(
@@ -659,8 +619,9 @@ def rebalance_index(
     :func:`index_stats` flags via ``imbalance_r``) are each split by a
     driver-side 2-means on a bounded per-cluster sample; their vectors
     re-quantize against the sub-centroids (one fused assign+quantize
-    pass over ONLY the hot vectors) and rewrite in place — one
-    sub-centroid keeps the old cluster_id, the other gets a fresh id.
+    pass over ONLY the hot vectors) and rewrite in place through
+    :func:`_replace_partitions` — one sub-centroid keeps the old
+    cluster_id, the other gets a fresh id.
     Cold partitions and their codes are untouched: sub-centroids lie
     inside the old Voronoi cell, so this is a local refinement, the
     standard incremental-IVF maintenance move (a periodic full retrain
@@ -675,10 +636,7 @@ def rebalance_index(
 
     Returns ``{"split": [old_ids...], "new_ids": [...], "rows_moved": n}``.
     """
-    import shutil
-
-    with open(f"{path}/meta.json") as f:
-        meta = json.load(f)
+    meta = _read_meta(path)
     codes = spark.read.parquet(f"{path}/codes")
     sizes = codes.groupBy("cluster_id").agg(F.count("*").alias("n")).collect()
     if not sizes:
@@ -769,26 +727,7 @@ def rebalance_index(
         metric=metric,  # cosine: idempotent re-normalize; ip: augment
         mips_m=meta.get("mips_norm"),
     )
-    if meta.get("packed"):
-        new_codes = _pack_index_df(new_codes, meta["total_bits"])
-
-    # Swap the hot partitions: stage new codes, rename old dirs out,
-    # move new ones in (compact_index's documented non-atomic posture).
-    tmp = f"{path}/codes_rebalancing"
-    new_codes.repartition("cluster_id").write.mode("overwrite").partitionBy(
-        "cluster_id"
-    ).parquet(tmp)
-    graveyard = f"{path}/codes_old_rebalance"
-    os.makedirs(graveyard, exist_ok=True)
-    for cid in hot:
-        old_dir = f"{path}/codes/cluster_id={cid}"
-        if os.path.isdir(old_dir):
-            os.rename(old_dir, f"{graveyard}/cluster_id={cid}")
-    for name in os.listdir(tmp):
-        if name.startswith("cluster_id="):
-            os.rename(f"{tmp}/{name}", f"{path}/codes/cluster_id={name.split('=')[1]}")
-    shutil.rmtree(tmp)
-    shutil.rmtree(graveyard)
+    _replace_partitions(path, new_codes, hot + new_ids)
     rows_moved = int(
         spark.read.parquet(f"{path}/codes")
         .where(F.col("cluster_id").isin(hot + new_ids))
@@ -850,8 +789,7 @@ def index_stats(codes: DataFrame) -> DataFrame:
 
 def load_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """S5: reload (codes, centroids, meta) (inc/index/IVF.hpp:254-293)."""
-    with open(f"{path}/meta.json") as f:
-        meta = json.load(f)
+    meta = _read_meta(path)
     codes = spark.read.parquet(f"{path}/codes")
     centroids = spark.read.parquet(f"{path}/centroids")
     return codes, centroids, meta
@@ -890,15 +828,9 @@ def search_index(
       with the same (queries, k, nprobe, rerank_base) contract — one
       serving entry point regardless of which codec built the index.
     """
-    import json as _json
     import warnings
 
-    try:
-        with open(f"{path}/meta.json") as _f:
-            _kind = _json.load(_f).get("kind")
-    except FileNotFoundError:
-        _kind = None
-    if _kind == "ivfpq":
+    if _read_meta(path).get("kind") == "ivfpq":
         from . import pq
 
         if use_graph:
@@ -991,12 +923,9 @@ def rotate_queries(queries: DataFrame, meta: dict, qid: str = "qid", qvec: str =
 _HA_CONST_BOUND = 0.58
 
 
-def _decode_s(pdf: pd.DataFrame, packed: bool, total_bits: int, D: int) -> np.ndarray:
+def _decode_s(pdf: pd.DataFrame, total_bits: int) -> np.ndarray:
     """Candidate batch → reconstruction matrix S = code + 0.5 − M."""
     M = 1 << (total_bits - 1)
-    if packed:
-        pb = np.stack([np.frombuffer(b, dtype=np.uint8) for b in pdf["code_packed"]])
-        return unpack_codes(pb, total_bits, D).astype(np.float64) + 0.5 - M
     return np.array(pdf["code"].tolist(), dtype=np.float64) + 0.5 - M
 
 
@@ -1258,7 +1187,6 @@ def _arrow_scored_broadcast(
     )
     cand = codes.join(keys_df, on="cluster_id", how="leftsemi")
 
-    packed = "code_packed" in codes.columns
     total_bits = meta["total_bits"]
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1266,7 +1194,7 @@ def _arrow_scored_broadcast(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            S = _decode_s(pdf, packed, total_bits, D)
+            S = _decode_s(pdf, total_bits)
             x2 = pdf["x2"].to_numpy()
             fip = pdf["f_ip_ex"].to_numpy()
             ferr = pdf["f_err"].to_numpy()
@@ -1468,7 +1396,6 @@ def _arrow_scored_cogroup(
         keys = qprobe.select("cluster_id").distinct()
         cand = codes.join(F.broadcast(keys), on="cluster_id", how="leftsemi")
 
-    packed = "code_packed" in codes.columns
     total_bits = meta["total_bits"]
     schema = _SCORED_SCHEMA_PR if with_probe_rank else _SCORED_SCHEMA
     empty = {
@@ -1483,7 +1410,7 @@ def _arrow_scored_cogroup(
         y2 = (QR * QR).sum(axis=1)
         qg = q_pdf["qid"].to_numpy()
         pr = q_pdf["probe_rank"].to_numpy() if with_probe_rank else None
-        S = _decode_s(code_pdf, packed, total_bits, D)
+        S = _decode_s(code_pdf, total_bits)
         x2 = code_pdf["x2"].to_numpy()
         fip = code_pdf["f_ip_ex"].to_numpy()
         ferr = code_pdf["f_err"].to_numpy()

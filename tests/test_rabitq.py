@@ -165,49 +165,6 @@ class TestCosineMetric:
         assert via_l2 == direct
 
 
-class TestPackedCodes:
-    def test_pack_unpack_roundtrip(self):
-        from extended_rabitq_spark.operators.rabitq import pack_codes, unpack_codes
-
-        for B in [2, 3, 4, 8]:
-            codes = RNG.integers(0, 1 << B, (17, 64)).astype(np.int32)
-            packed = pack_codes(codes, B)
-            assert packed.shape == (17, 64 * B // 8)
-            assert (unpack_codes(packed, B, 64) == codes).all()
-
-    def test_packed_index_search_identical(self, spark, tmp_path):
-        """A packed (Q4) index must return the exact same top-k as the
-        unpacked one, at ~1/4 the storage."""
-        import pyspark.sql.functions as F
-
-        from conftest import SF_SMOKE
-        from extended_rabitq_spark.operators import ivf, rabitq
-
-        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        base = emb.where(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
-        queries = emb.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-        )
-        index_df, meta = rabitq.build_index(base, cents, total_bits=4)
-        index_df = index_df.persist()
-        p1, p2 = str(tmp_path / "plain"), str(tmp_path / "packed")
-        rabitq.save_index(index_df, cents, meta, p1, packed=False)
-        rabitq.save_index(index_df, cents, meta, p2, packed=True)
-        c1, cf1, m1 = rabitq.load_index(spark, p1)
-        c2, cf2, m2 = rabitq.load_index(spark, p2)
-        r1 = {(r.qid, r.rank): r.id for r in rabitq.rabitq_search(queries, c1, cf1, m1, 3, 10).collect()}
-        r2 = {(r.qid, r.rank): r.id for r in rabitq.rabitq_search(queries, c2, cf2, m2, 3, 10).collect()}
-        assert r1 == r2 and len(r1) == 100
-        # NOTE: no size assertion — measured at 100k vectors, parquet's
-        # dict/RLE encoding stores the unpacked SMALLINT codes at 62 B/vec
-        # vs 64 B/vec for the (incompressible) packed binary, and packed
-        # search pays unpack overhead.  Q4 packing exists for format
-        # parity; plain arrays are the recommended layout (COVERAGE.md).
-
-
 class TestIncrementalIndex:
     def test_append_equals_full_build(self, spark, tmp_path):
         """Index built on 80% + appended 20% must answer queries exactly
@@ -239,15 +196,6 @@ class TestIncrementalIndex:
         r1 = {(r.qid, r.rank): r.id for r in rabitq.rabitq_search(queries, c1, cf1, m1, 3, 10).collect()}
         r2 = {(r.qid, r.rank): r.id for r in rabitq.rabitq_search(queries, c2, cf2, m2, 3, 10).collect()}
         assert r1 == r2
-        # packed variant: append must pack the new rows the same way
-        pp = str(tmp_path / "inc_packed")
-        rabitq.save_index(idx1, cents, meta, pp, packed=True)
-        rabitq.append_to_index(part2, pp)
-        c3, cf3, m3 = rabitq.load_index(spark, pp)
-        assert m3["packed"] and c3.count() == 490
-        assert "code_packed" in c3.columns and "code" not in c3.columns
-        r3 = {(r.qid, r.rank): r.id for r in rabitq.rabitq_search(queries, c3, cf3, m3, 3, 10).collect()}
-        assert r3 == r1
 
 
 class TestSampledKMeans:
@@ -1121,32 +1069,6 @@ class TestHighAccEstimator:
             recalls[est] = float(r)
         assert recalls["high_acc"] >= recalls["searcher"] - 0.1, recalls
         idx.unpersist()
-
-
-class TestPackedCogroup:
-    def test_packed_index_cogroup_matches_broadcast(self, spark, tmp_path):
-        """The cogroup scorer must decode packed (Q4) codes identically to
-        the broadcast scorer."""
-        import pyspark.sql.functions as F
-
-        from conftest import SF_SMOKE
-        from extended_rabitq_spark.operators import ivf, rabitq
-
-        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        base = emb.where(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
-        queries = emb.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-        )
-        index_df, meta = rabitq.build_index(base, cents, total_bits=4)
-        p = str(tmp_path / "packed")
-        rabitq.save_index(index_df, cents, meta, p, packed=True)
-        codes, cf, m = rabitq.load_index(spark, p)
-        b = _search_at(spark, FITS_ALL, queries, codes, cf, m, 3, 10)
-        c = _search_at(spark, FITS_NONE, queries, codes, cf, m, 3, 10)
-        _assert_rank_identical(_res_map(b), _res_map(c), tol=1e-6)
 
 
 class TestCogroupPlan:

@@ -662,7 +662,7 @@ class TestCleanopsPlans:
 
 
 class TestIndexMaintenance:
-    def _skewed_index(self, spark, tmp_path, n_hot=40, n_cold=8, packed=False):
+    def _skewed_index(self, spark, tmp_path, n_hot=40, n_cold=8):
         """Index with one deliberately hot cluster: a tight blob of
         n_hot vectors plus n_cold spread singletons, K=4."""
         from extended_rabitq_spark.operators import ivf, rabitq
@@ -677,8 +677,33 @@ class TestIndexMaintenance:
         cents = ivf.sampled_kmeans_centroids(base, k=4, vec="vec")
         index_df, meta = rabitq.build_index(base, cents, total_bits=4)
         path = str(tmp_path / "idx")
-        rabitq.save_index(index_df, cents, meta, path, packed=packed)
+        rabitq.save_index(index_df, cents, meta, path)
         return base, path
+
+    @staticmethod
+    def _partition_mtimes(path):
+        import glob
+        import os
+
+        return {
+            d: os.path.getmtime(d) for d in glob.glob(f"{path}/codes/cluster_id=*")
+        }
+
+    @staticmethod
+    def _assert_untouched(mtimes_before, rewritten):
+        """Partitions outside ``rewritten`` keep their directory mtime."""
+        import os
+
+        for d, t in mtimes_before.items():
+            if int(d.split("=")[1]) not in rewritten:
+                assert os.path.getmtime(d) == t, d
+
+    @staticmethod
+    def _assert_no_staging(path):
+        """A maintenance rewrite leaves nothing beside the index artifacts."""
+        import os
+
+        assert sorted(os.listdir(path)) == ["centroids", "codes", "meta.json"]
 
     def _full_probe_results(self, spark, path, base, k=5):
         from extended_rabitq_spark.operators import rabitq
@@ -703,11 +728,7 @@ class TestIndexMaintenance:
         hit_ids = {t[2] for t in before}
         victims = [i for i in range(48) if i not in hit_ids][:6]
         codes0 = spark.read.parquet(f"{path}/codes")
-        import glob
-        import os
-        mtimes_before = {
-            d: os.path.getmtime(d) for d in glob.glob(f"{path}/codes/cluster_id=*")
-        }
+        mtimes_before = self._partition_mtimes(path)
         victims_df = spark.createDataFrame([(v,) for v in victims], "id long")
         affected = {
             int(r["cluster_id"])
@@ -720,10 +741,8 @@ class TestIndexMaintenance:
         assert codes1.count() == 48 - len(victims)
         assert codes1.join(victims_df, "id", "left_semi").count() == 0
         # untouched partitions were not rewritten
-        for d, t in mtimes_before.items():
-            cid = int(d.split("=")[1])
-            if cid not in affected:
-                assert os.path.getmtime(d) == t, d
+        self._assert_untouched(mtimes_before, affected)
+        self._assert_no_staging(path)
         after = self._full_probe_results(spark, path, base, k=5)
         assert before == after
 
@@ -758,9 +777,16 @@ class TestIndexMaintenance:
         codes = spark.read.parquet(f"{path}/codes")
         stats0 = rabitq.index_stats(codes).collect()[0]
         before = self._full_probe_results(spark, path, base, k=5)
+        mtimes_before = self._partition_mtimes(path)
         out = rabitq.rebalance_index(spark, path, base, max_ratio=2.0)
         assert out["split"], "fixture must produce a hot cluster"
         assert out["new_ids"] and out["rows_moved"] > 0
+        # cold partitions are untouched
+        assert set(mtimes_before) - {
+            f"{path}/codes/cluster_id={c}" for c in out["split"]
+        }, "fixture must keep a cold partition"
+        self._assert_untouched(mtimes_before, out["split"])
+        self._assert_no_staging(path)
         codes1 = spark.read.parquet(f"{path}/codes")
         # no rows lost, every code row's cluster exists in the centroids
         assert codes1.count() == 48
@@ -796,21 +822,6 @@ class TestIndexMaintenance:
         out = rabitq.rebalance_index(spark, path, base, max_ratio=10.0)
         assert out == {"split": [], "new_ids": [], "rows_moved": 0}
 
-    def test_rebalance_packed_index_preserves_results(self, spark, tmp_path):
-        """rebalance_index on a PACKED index (Q4 BINARY codes) must
-        repack the rewritten partitions and keep full-probe results
-        bitwise identical."""
-        from extended_rabitq_spark.operators import rabitq
-
-        base, path = self._skewed_index(spark, tmp_path, packed=True)
-        before = self._full_probe_results(spark, path, base, k=5)
-        out = rabitq.rebalance_index(spark, path, base, max_ratio=2.0)
-        assert out["split"]
-        codes = spark.read.parquet(f"{path}/codes")
-        assert dict(codes.dtypes)["code_packed"] == "binary"  # stayed packed
-        after = self._full_probe_results(spark, path, base, k=5)
-        assert before == after
-
     def test_delete_every_row_leaves_readable_empty_index(self, spark, tmp_path):
         from extended_rabitq_spark.operators import rabitq
 
@@ -821,6 +832,39 @@ class TestIndexMaintenance:
         left = spark.read.parquet(f"{path}/codes")  # must not raise
         assert left.count() == 0
         assert "cluster_id" in left.columns and "id" in left.columns
+        self._assert_no_staging(path)
+        # compacting the emptied index keeps it loadable
+        rabitq.compact_index(spark, path)
+        self._assert_no_staging(path)
+        codes, _, _ = rabitq.load_index(spark, path)  # must not raise
+        assert codes.count() == 0
+        assert "cluster_id" in codes.columns and "id" in codes.columns
+
+    def test_packed_index_is_refused_with_a_named_error(self, spark, tmp_path):
+        """An index saved with bit-packed codes (``"packed": true`` in
+        meta.json, a retired layout) fails at every entry point with a
+        ValueError that says to rebuild, not inside a search worker."""
+        import json
+        import os
+
+        from extended_rabitq_spark.operators import rabitq
+
+        path = str(tmp_path / "packed_idx")
+        os.makedirs(path)
+        with open(f"{path}/meta.json", "w") as f:
+            json.dump({"dim": 8, "D": 64, "total_bits": 4, "seed": 42,
+                       "metric": "l2", "packed": True}, f)
+        vecs = spark.createDataFrame([(0, [0.0] * 8)], "id long, vec array<float>")
+        qs = vecs.select(F.col("id").alias("qid"), F.col("vec").alias("qvec"))
+        for call in (
+            lambda: rabitq.load_index(spark, path),
+            lambda: rabitq.load_index_bucketed(spark, "t", path),
+            lambda: rabitq.append_to_index(vecs, path),
+            lambda: rabitq.rebalance_index(spark, path, vecs),
+            lambda: rabitq.search_index(spark, path, qs),
+        ):
+            with pytest.raises(ValueError, match="rebuild the index"):
+                call()
 
     def test_rebalance_rejects_stale_base(self, spark, tmp_path):
         import pytest as _pytest
