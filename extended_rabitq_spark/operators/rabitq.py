@@ -423,7 +423,8 @@ def _replace_partitions(path: str, rows: DataFrame, cluster_ids) -> None:
     directories move out and the staged ones move in.  Partitions not
     named are never opened or rewritten.  When no partition is left, a
     schema-only table is written so the next load still infers the
-    schema.
+    schema; the next rewrite or :func:`append_to_index` that brings a
+    partition back removes it.
 
     The swap is renames, so no *torn* partition is ever visible on a
     POSIX FS, but it is not atomic: a reader listing between the renames
@@ -445,10 +446,23 @@ def _replace_partitions(path: str, rows: DataFrame, cluster_ids) -> None:
         if name.startswith("cluster_id="):
             os.rename(f"{stage}/{name}", f"{codes}/{name}")
     shutil.rmtree(stage)
-    if not _partition_ids(path):
+    if _partition_ids(path):
+        _drop_schema_only_file(path)
+    else:
         rows.sparkSession.createDataFrame([], rows.schema).write.mode(
             "overwrite"
         ).parquet(codes)
+
+
+def _drop_schema_only_file(path: str) -> None:
+    """Remove the schema-only root file (and its checksum) that
+    :func:`_replace_partitions` leaves in an emptied ``{path}/codes``,
+    once a ``cluster_id`` partition exists again, so no later load lists
+    or opens it.  Root ``part-`` files only ever come from that write."""
+    codes = f"{path}/codes"
+    for name in os.listdir(codes):
+        if name.startswith(("part-", ".part-")):
+            os.remove(f"{codes}/{name}")
 
 
 def _save_side_artifacts(spark, centroids: DataFrame, meta: dict, path: str) -> None:
@@ -522,6 +536,8 @@ def append_to_index(
         mips_m=meta.get("mips_norm"),
     )
     index_df.write.mode("append").partitionBy("cluster_id").parquet(f"{path}/codes")
+    if _partition_ids(path):
+        _drop_schema_only_file(path)
 
 
 def centroids_with_rotation(
@@ -1067,12 +1083,21 @@ def _vector_matrix(col: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
     return out, ok
 
 
-def _driver_queries(rows: list, dim: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Collected (qid, qvec) rows → (qids, Q n × dim, ok), in row order.
-    The broadcast scorer probes from Q and the broadcast rerank folds
-    against it, so a batch is converted once per search."""
-    qids = np.array([int(r[0]) for r in rows], dtype=np.int64)
-    Q, ok = _vector_matrix(pa.array([r[1] for r in rows], pa.list_(pa.float64())), dim)
+def _driver_queries(
+    batch: pa.Table | list, dim: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A collected (qid, qvec) batch → (qids, Q n × dim, ok), in row
+    order.  ``batch`` is the Arrow table of ``DataFrame.toArrow()`` or a
+    caller's (qid, qvec) rows, which are first put in the same Arrow
+    form.  The broadcast scorer probes from Q and the broadcast rerank
+    folds against it, so a batch is converted once per search."""
+    if not isinstance(batch, pa.Table):
+        batch = pa.table({
+            "qid": pa.array([r[0] for r in batch], pa.int64()),
+            "qvec": pa.array([r[1] for r in batch], pa.list_(pa.float64())),
+        })
+    qids = batch.column("qid").combine_chunks().cast(pa.int64()).to_numpy()
+    Q, ok = _vector_matrix(batch.column("qvec").combine_chunks(), dim)
     return qids, Q, ok
 
 
@@ -1731,9 +1756,9 @@ def _scored_candidates(
     rerank_queries).
 
     A broadcast route collects the batch once — ``query_rows`` when
-    given, else one collect job — and the scorer and the exact rerank
-    share it: ``rerank_queries`` is the Spark broadcast of that query
-    matrix for :func:`_finalize_topk` when the plan broadcasts the
+    given, else one ``toArrow`` job — and the scorer and the exact
+    rerank share it: ``rerank_queries`` is the Spark broadcast of that
+    query matrix for :func:`_finalize_topk` when the plan broadcasts the
     rerank, else None.  ``centroid_rows`` only feeds the broadcast
     scorer; the cogroup scorer ignores it and ``query_rows``."""
     spark = queries.sparkSession
@@ -1748,7 +1773,7 @@ def _scored_candidates(
     if plan.broadcast_scorer or plan.broadcast_rerank:
         q = _driver_queries(
             query_rows if query_rows is not None
-            else queries.select("qid", "qvec").collect(),
+            else queries.select("qid", "qvec").toArrow(),
             int(meta["dim"]),
         )
     if plan.broadcast_scorer:

@@ -324,6 +324,27 @@ class TestExactRerank:
             for key in want:
                 assert repr(got[key]) == repr(want[key]), key
 
+    def test_driver_queries_arrow_equals_rows(self, spark):
+        """The batch collected as Arrow (``toArrow``) and the same batch
+        as caller rows (``collect``) convert to bitwise the same qids,
+        Q and ok — NULL, short, long, NULL-coordinate, NaN and inf rows
+        included, for float and double vectors."""
+        from extended_rabitq_spark.operators import rabitq
+
+        nan, inf = float("nan"), float("inf")
+        rows = [(1, [1.0, 2.0, 3.0, 4.0]), (2, None), (3, [1.0, 2.0]),
+                (4, [nan, 1.0, 2.0, 3.0]), (5, [1.0, None, 3.0, 4.0]),
+                (6, [1.5, 2.5, 3.5, 4.5, 5.5]), (7, [inf, -0.0, 1e-30, 3.0]),
+                (8, [])]
+        for typ in ("float", "double"):
+            df = spark.createDataFrame(rows, f"qid long, qvec array<{typ}>")
+            got = rabitq._driver_queries(df.toArrow(), 4)
+            want = rabitq._driver_queries(df.collect(), 4)
+            assert got[0].tolist() == list(range(1, 9))
+            assert got[2].tolist() == [True, False, False, True, False, True, True, False]
+            for g, w in zip(got, want):
+                assert g.dtype == w.dtype and g.tobytes() == w.tobytes(), typ
+
     def test_reranked_plan_shuffles_no_vectors(self, spark):
         """A reranked search on the broadcast routes computes the exact
         distance map-side: no exchange in its plan carries an array."""

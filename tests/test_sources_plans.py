@@ -839,6 +839,19 @@ class TestIndexMaintenance:
         codes, _, _ = rabitq.load_index(spark, path)  # must not raise
         assert codes.count() == 0
         assert "cluster_id" in codes.columns and "id" in codes.columns
+        # rows come back: the schema-only root file goes (Hadoop's hidden
+        # .crc checksums aside, only partitions and _SUCCESS are left)
+        import os
+
+        rabitq.append_to_index(base.where(F.col("id") < 5), path)
+        rabitq.compact_index(spark, path)
+        self._assert_no_staging(path)
+        names = [n for n in os.listdir(f"{path}/codes") if not n.startswith(".")]
+        assert names and all(
+            n == "_SUCCESS" or n.startswith("cluster_id=") for n in names
+        ), names
+        codes, _, _ = rabitq.load_index(spark, path)
+        assert sorted(r.id for r in codes.select("id").collect()) == list(range(5))
 
     def test_packed_index_is_refused_with_a_named_error(self, spark, tmp_path):
         """An index saved with bit-packed codes (``"packed": true`` in
