@@ -1043,21 +1043,38 @@ def _l2_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return acc
 
 
+# query×centroid distances per block of the probe fold: the running sum
+# and the step's temporary (2 × 128 KB of float64) stay cache-resident
+_PROBE_BLOCK = 1 << 14
+
+
 def _probe_order(
     Q: np.ndarray, cmat: np.ndarray, cids: np.ndarray, take: int
 ) -> np.ndarray:
     """W1 for a block of queries Q (g × dim) → g × min(take, K) indices
     into ``cids`` of each query's nearest centroids (``cmat``, K × dim),
     ties to the lowest cluster_id: the order of ``ivf.select_probes``'
-    window, bitwise (see :func:`_l2_fold`).  Both Arrow scorers probe
-    through here.  Blocked over queries to bound the g·K temporaries."""
-    take = min(take, len(cids))
-    blk = max(1, (1 << 22) // max(len(cids), 1))
+    window, bitwise — each distance is :func:`_l2_fold`'s IEEE operations
+    in its order.  Both Arrow scorers probe through here.
+
+    The fold runs over blocks of about ``_PROBE_BLOCK`` distances, on
+    transposed copies of Q and cmat so each step reads one contiguous
+    row of each."""
+    K = len(cids)
+    take = min(take, K)
+    blk = max(1, _PROBE_BLOCK // max(K, 1))
+    Qt, Ct = np.ascontiguousarray(Q.T), np.ascontiguousarray(cmat.T)
     order = np.empty((len(Q), take), dtype=np.int64)
     for s in range(0, len(Q), blk):
-        d2 = _l2_fold(Q[s : s + blk, None, :], cmat[None, :, :])
+        qb = Qt[:, s : s + blk]
+        acc = np.zeros((qb.shape[1], K))
+        d = np.empty_like(acc)
+        for j in range(len(Qt)):
+            np.subtract.outer(qb[j], Ct[j], out=d)
+            np.multiply(d, d, out=d)
+            acc += d
         order[s : s + blk] = np.lexsort(
-            (np.broadcast_to(cids, d2.shape), d2), axis=1
+            (np.broadcast_to(cids, acc.shape), acc), axis=1
         )[:, :take]
     return order
 
@@ -1162,8 +1179,9 @@ def _arrow_scored_broadcast(
     batches go to the cogroup scorer, which has no driver bound.  Codes
     are LEFT-SEMI-joined with the tiny distinct-probed-cluster table (no
     row duplication) and scored per cluster with one BLAS matmul against
-    the whole probing-query matrix.  ``queries`` is the batch as
-    :func:`_driver_queries` converted it.
+    the whole probing-query matrix; when every centroid's cluster is
+    probed, the codes are scanned without that semi-join.  ``queries`` is
+    the batch as :func:`_driver_queries` converted it.
     """
     spark = codes.sparkSession
     D = meta["D"]
@@ -1203,14 +1221,19 @@ def _arrow_scored_broadcast(
             np.array(ranks[c_idx], dtype=np.int64),
         )
     b_qr = spark.sparkContext.broadcast(by_cluster)
-    # LocalRelation-backed probed-key list (r11): the broadcast build
-    # reads in-plan rows, no Python-RDD worker job (see localdf)
-    keys_df = F.broadcast(
-        local_rows_df(
-            spark, [(int(c),) for c in sorted(by_cluster)], "cluster_id int"
+    cand = codes
+    if len(by_cluster) < len(cids):
+        # partition pruning: only probed clusters' codes are read.  When
+        # every cluster is probed nothing is left to prune, and the
+        # semi-join would cost a broadcast job.  LocalRelation-backed
+        # probed-key list (r11): the broadcast build reads in-plan rows,
+        # no Python-RDD worker job (see localdf)
+        keys_df = F.broadcast(
+            local_rows_df(
+                spark, [(int(c),) for c in sorted(by_cluster)], "cluster_id int"
+            )
         )
-    )
-    cand = codes.join(keys_df, on="cluster_id", how="leftsemi")
+        cand = codes.join(keys_df, on="cluster_id", how="leftsemi")
 
     total_bits = meta["total_bits"]
 
@@ -1226,7 +1249,12 @@ def _arrow_scored_broadcast(
             ids = pdf["id"].to_numpy()
             outs = []
             for cid, idx in pdf.groupby("cluster_id", sort=False).indices.items():
-                qg, QR, y2, pr = qr_[int(cid)]
+                # without the semi-join, rows of an unprobed cluster (or of
+                # a cluster_id with no centroid) reach here: no query scores them
+                probed = qr_.get(int(cid))
+                if probed is None:
+                    continue
+                qg, QR, y2, pr = probed
                 est, lb = _score_cluster_np(
                     S[idx], x2[idx], fip[idx], ferr[idx], QR, y2, estimator, D
                 )
@@ -1234,7 +1262,8 @@ def _arrow_scored_broadcast(
                     est, lb, qg, ids[idx], pr if with_probe_rank else None,
                     per_cluster_cut,
                 ))
-            yield pd.DataFrame({c: np.concatenate([o[c] for o in outs]) for c in outs[0]})
+            if outs:
+                yield pd.DataFrame({c: np.concatenate([o[c] for o in outs]) for c in outs[0]})
 
     return cand.mapInPandas(
         score, _SCORED_SCHEMA_PR if with_probe_rank else _SCORED_SCHEMA
@@ -1542,38 +1571,36 @@ def _finalize_topk(
         raise ValueError(
             f"refine_mode must be 'rank' or 'threshold', got {refine_mode!r}"
         )
-    shortlist = scored
+    # SQL text: each selectExpr/where is one py4j call, where the Column
+    # API makes one per name, sort order and window spec
+    cut = refine_mode == "rank" and refine is not None
     if refine_mode == "threshold":
         shortlist = _threshold_shortlist(scored, k)
-    elif refine is not None:
-        w_lb = Window.partitionBy("qid").orderBy(F.col("est_lb").asc(), F.col("id").asc())
-        shortlist = (
-            scored.withColumn("_r", F.row_number().over(w_lb))
-            .where(F.col("_r") <= refine * k)
-            .drop("_r")
-        )
+    elif cut:
+        # under a rerank the cut keeps only the (qid, id) the rerank reads
+        # (its _r rides along unread); otherwise the final projection drops _r
+        shortlist = scored.selectExpr(
+            *(("*",) if rerank_base is None else ("qid", "id")),
+            "row_number() OVER (PARTITION BY qid ORDER BY est_lb, id) AS _r",
+        ).where(f"_r <= {int(refine * k)}")
+    else:
+        shortlist = scored
     if rerank_base is not None:
+        keys = shortlist if cut else shortlist.select("qid", "id")
         pairs = rerank_base.select("id", "vec")
         if rerank_queries is None:
-            pairs = pairs.join(shortlist.select("qid", "id"), on="id").join(
+            pairs = pairs.join(keys, on="id").join(
                 queries.select("qid", "qvec"), on="qid"
             )
         else:
-            pairs = pairs.join(F.broadcast(shortlist.select("qid", "id")), on="id")
+            pairs = pairs.join(F.broadcast(keys), on="id")
         shortlist = _exact_rerank(pairs, dim, rerank_queries)
-    w = Window.partitionBy("qid").orderBy(F.col("est_dist").asc(), F.col("id").asc())
-    # rank + output order in one projection (r11): one fewer eager plan
-    # analysis per search build (the withColumn/where/select chain
-    # re-analyzed the whole scored-candidate plan each op)
-    return (
-        shortlist.select(
-            "qid",
-            F.row_number().over(w).cast("long").alias("rank"),
-            "id",
-            "est_dist",
-        )
-        .where(F.col("rank") <= k)
-    )
+    return shortlist.selectExpr(
+        "qid",
+        "CAST(row_number() OVER (PARTITION BY qid ORDER BY est_dist, id) AS BIGINT) AS rank",
+        "id",
+        "est_dist",
+    ).where(f"`rank` <= {int(k)}")
 
 
 def _sql_scored(
@@ -1705,8 +1732,9 @@ def _plan_search(
 ) -> _SearchPlan:
     """Choose every route of a RaBitQ search from sizes alone.
 
-    ``nq`` is the query count, or a callable that counts them (a Spark
-    job), called at most once and only when a rule reads it;
+    ``nq`` is the query count, or a callable that counts them
+    (:func:`_row_count`), called at most once and only when a rule reads
+    it;
     ``shortlist`` is the rerank rows per query (``refine·k``; k, its
     floor, without a rank cut; None without an exact rerank);
     ``threshold`` is T =
@@ -1735,6 +1763,18 @@ def _plan_search(
     )
 
 
+def _row_count(df: DataFrame) -> int:
+    """Rows of ``df``: the row count in its optimized plan's statistics
+    when Spark has one, else one count() job.  Spark's count is exact
+    for a materialized cached batch or a local relation; under a limit
+    it is an upper bound, and catalog statistics can be stale.  The
+    count only routes a plan, and routes are row-identical, so a wrong
+    statistic costs speed, never rows — the trade Spark's own broadcast
+    planning makes."""
+    known = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+    return int(known.get()) if known.isDefined() else df.count()
+
+
 def _scored_candidates(
     queries: DataFrame,
     codes: DataFrame,
@@ -1751,8 +1791,9 @@ def _scored_candidates(
 ) -> tuple[DataFrame, Broadcast | None]:
     """Phase 1 of every search entry point, on canonical (qid, qvec)
     queries: plan the routes (:func:`_plan_search`; nq is
-    ``len(query_rows)`` or one count() job) and score on the planned
-    scorer → ((qid, id, est_dist, est_lb [, probe_rank]),
+    ``len(query_rows)``, else Spark's exact row count when the plan has
+    one, else one count() job — see :func:`_row_count`) and score on the
+    planned scorer → ((qid, id, est_dist, est_lb [, probe_rank]),
     rerank_queries).
 
     A broadcast route collects the batch once — ``query_rows`` when
@@ -1765,7 +1806,8 @@ def _scored_candidates(
     # T in bytes, as Spark's own join planner reads the setting
     conf = spark._jsparkSession.sessionState().conf()
     plan = _plan_search(
-        len(query_rows) if query_rows is not None else queries.count,
+        len(query_rows) if query_rows is not None
+        else functools.partial(_row_count, queries),
         nprobe, meta, shortlist, int(conf.autoBroadcastJoinThreshold()),
         probes_injected=probes is not None,
     )
@@ -1836,16 +1878,19 @@ def rabitq_search(
       ``probes`` are injected; else the cogroup Arrow scorer (no driver
       collect of the query side — unbounded NQ);
     - the cogroup scorer skips probe selection and the codes semi-join
-      when nprobe ≥ K;
+      when nprobe ≥ K, the broadcast scorer the semi-join when the batch
+      probes every cluster;
     - the exact rerank broadcasts the shortlist into the base scan and
       ships the query vectors the driver holds iff
       nq·(8·dim + 16·refine·k) ≤ T; else plain equi-joins.  Either way
       the distance is computed map-side and the top-k exchange carries
       distances, not vectors.
 
-    nq is ``len(query_rows)`` when given, else one count() job, paid
-    only when a rule needs it.  A broadcast route collects the queries
-    once (one job) unless ``query_rows`` holds them.
+    nq is ``len(query_rows)`` when given, else Spark's exact row count
+    when the plan has one (a materialized cached batch), else one
+    count() job, paid only when a rule needs it.  A broadcast route
+    collects the queries once (one job) unless ``query_rows`` holds
+    them.
 
     ``centroid_rows`` / ``query_rows``: driver-resident
     ``centroids.select("cluster_id", "centroid").collect()`` and (qid,
