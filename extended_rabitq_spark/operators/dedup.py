@@ -749,8 +749,8 @@ def _ann_self_join_scored_pairs(
     # action — the scored-shortlist evaluation — so the barrier bought
     # nothing and cost a standalone driver-blocking job + block store per run
     # (measured 1.7s of a ~5.3s warm wall at sf0.1).  Production
-    # serving still persists indexes (save_index / save_index_bucketed);
-    # a REUSED in-session index should be staged by the caller.
+    # serving still persists indexes (save_index); a REUSED in-session
+    # index should be staged by the caller.
     cents_full = centroids_with_rotation(spark, cents, meta)
     if nprobe is None:
         nprobe = n_clusters

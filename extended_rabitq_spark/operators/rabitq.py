@@ -466,48 +466,14 @@ def _drop_schema_only_file(path: str) -> None:
 
 
 def _save_side_artifacts(spark, centroids: DataFrame, meta: dict, path: str) -> None:
-    """Rotated-centroid side table + meta.json (shared by the
-    partitioned and bucketed index sinks)."""
+    """Rotated-centroid side table + meta.json (written by
+    :func:`save_index` and refreshed by :func:`rebalance_index`)."""
     centroids_with_rotation(spark, centroids, meta).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{path}/centroids")
     os.makedirs(path, exist_ok=True)
     with open(f"{path}/meta.json", "w") as f:
         json.dump(meta, f)
-
-
-def save_index_bucketed(
-    index_df: DataFrame,
-    centroids: DataFrame,
-    meta: dict,
-    table: str,
-    path: str,
-    n_buckets: int = 64,
-) -> None:
-    """S4 co-location variant: codes as a BUCKETED (+ sorted) table on
-    cluster_id instead of a partitioned path.  A bucketed scan reports
-    HashPartitioning(cluster_id), which satisfies the cogroup scorer's
-    required distribution - the probed codes no longer shuffle at query
-    time (the one data-sized exchange the cogroup path had; asserted in
-    tests/test_sources_plans.py).  At 100 TB this moves the codes
-    shuffle from every query batch to once at index build.
-
-    Trade-off vs :func:`save_index`: bucketing needs the session
-    catalog (saveAsTable) and bucket count is fixed at write time;
-    cluster_id filter pushdown still prunes at scan.  Side artifacts
-    (centroids/meta.json) live at ``path`` as before."""
-    index_df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, "cluster_id"
-    ).sortBy("cluster_id").saveAsTable(table)
-    _save_side_artifacts(index_df.sparkSession, centroids, meta, path)
-
-
-def load_index_bucketed(
-    spark: SparkSession, table: str, path: str
-) -> tuple[DataFrame, DataFrame, dict]:
-    """Load the bucketed-table index: (codes, centroids_full, meta)."""
-    meta = _read_meta(path)
-    return spark.table(table), spark.read.parquet(f"{path}/centroids"), meta
 
 
 def append_to_index(
@@ -1162,6 +1128,7 @@ def _arrow_scored_broadcast(
     meta: dict,
     nprobe: int,
     queries: tuple[np.ndarray, np.ndarray, np.ndarray],
+    shipped: Broadcast,
     estimator: str,
     per_cluster_cut: int | None = None,
     with_probe_rank: bool = False,
@@ -1171,58 +1138,50 @@ def _arrow_scored_broadcast(
     (+ ``probe_rank`` when ``with_probe_rank`` — the 1-based rank of the
     candidate's cluster in its query's probe order, for sweep reuse).
 
-    Probe selection runs driver-side in numpy (the same move as the
-    reference materializing the probe list, inc/index/IVF.hpp:303-304),
-    producing a broadcast ``cluster_id → (qids, QR matrix, y2)`` map.
-    That map bounds NQ by driver memory — :func:`_plan_search` picks
-    this scorer only while the map fits the broadcast threshold; bigger
-    batches go to the cogroup scorer, which has no driver bound.  Codes
-    are LEFT-SEMI-joined with the tiny distinct-probed-cluster table (no
-    row duplication) and scored per cluster with one BLAS matmul against
-    the whole probing-query matrix; when every centroid's cluster is
-    probed, the codes are scanned without that semi-join.  ``queries`` is
-    the batch as :func:`_driver_queries` converted it.
+    ``queries`` is the batch as :func:`_driver_queries` converted it and
+    ``shipped`` its Spark broadcast, the one copy of the query vectors a
+    search sends (the exact rerank reads it too).  Probe selection runs
+    driver-side in numpy, which only materializes the probe list, as
+    the reference does (inc/index/IVF.hpp:303-304): the (query, probe)
+    pairs grouped by cluster, one stable argsort, broadcast with the
+    probed clusters' padded centroids and P.  Each task builds a probed
+    cluster's rotated query residuals ``(qpad[q] − cpad[c]) @ P.T`` inside
+    that cluster's scan, like ``HASearcher::search_cluster``
+    (inc/index/HASearcher.hpp:82-113), and scores them with one BLAS
+    matmul against the cluster's codes.  A batch whose residual rows
+    would not fit the broadcast threshold goes to the cogroup scorer
+    (:func:`_plan_search`).  Codes are LEFT-SEMI-joined with the
+    probed-cluster ids (no row duplication) unless every centroid's
+    cluster is probed.
     """
     spark = codes.sparkSession
     D = meta["D"]
     dim = meta["dim"]
-    P = rotation_matrix(D, meta["seed"])
-    qids, qmat, q_ok = queries
+    _, qmat, q_ok = queries
     if not q_ok.all():
         raise ValueError(
             f"rabitq_search: every query vector needs {dim} non-NULL coordinates"
         )
     # serving loops hit the same index every micro-batch: a pre-collected
     # centroid list (rabitq_search(centroid_rows=...)) skips one
-    # collect JOB per batch — at micro-batch sizes the scheduling floor,
-    # not the compute, is the latency (VERDICT r7 item 7)
+    # collect per batch
     cent_rows = (centroid_rows if centroid_rows is not None
                  else centroids.select("cluster_id", "centroid").collect())
     cids = np.array([int(r[0]) for r in cent_rows])
     cmat = np.stack([np.array(r[1], dtype=np.float64) for r in cent_rows])  # K × dim
     order = _probe_order(qmat, cmat, cids, nprobe)  # W1, driver-side
-    qpad = np.zeros((len(qids), D))
-    qpad[:, :dim] = qmat
-    cpad = np.zeros((len(cids), D))
-    cpad[:, :dim] = cmat
-    by_cluster: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-    members: dict[int, list[int]] = {}
-    ranks: dict[int, list[int]] = {}
-    for i in range(len(qids)):
-        for r, c_idx in enumerate(order[i]):
-            members.setdefault(int(c_idx), []).append(i)
-            ranks.setdefault(int(c_idx), []).append(r + 1)
-    for c_idx, qidx in members.items():
-        QR = (qpad[qidx] - cpad[c_idx]) @ P.T  # g × D rotated residuals
-        by_cluster[int(cids[c_idx])] = (
-            qids[qidx],
-            QR,
-            (QR * QR).sum(axis=1),
-            np.array(ranks[c_idx], dtype=np.int64),
-        )
-    b_qr = spark.sparkContext.broadcast(by_cluster)
+    # group the (query, probe) pairs by cluster, queries ascending in each
+    pairs = np.argsort(order.ravel(), kind="stable")
+    probed, starts = np.unique(order.ravel()[pairs], return_index=True)
+    qrow, rank = np.divmod(pairs, order.shape[1])
+    cpad = np.zeros((len(probed), D))
+    cpad[:, :dim] = cmat[probed]
+    probe = spark.sparkContext.broadcast((
+        cids[probed], np.append(starts, len(pairs)), qrow, rank + 1, cpad,
+        rotation_matrix(D, meta["seed"]),
+    ))
     cand = codes
-    if len(by_cluster) < len(cids):
+    if len(probed) < len(cids):
         # partition pruning: only probed clusters' codes are read.  When
         # every cluster is probed nothing is left to prune, and the
         # semi-join would cost a broadcast job.  LocalRelation-backed
@@ -1230,7 +1189,7 @@ def _arrow_scored_broadcast(
         # no Python-RDD worker job (see localdf)
         keys_df = F.broadcast(
             local_rows_df(
-                spark, [(int(c),) for c in sorted(by_cluster)], "cluster_id int"
+                spark, [(int(c),) for c in sorted(cids[probed])], "cluster_id int"
             )
         )
         cand = codes.join(keys_df, on="cluster_id", how="leftsemi")
@@ -1238,7 +1197,11 @@ def _arrow_scored_broadcast(
     total_bits = meta["total_bits"]
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qr_ = b_qr.value
+        qids, Q, _ = shipped.value
+        pcids, bounds, qrow, rank, cpad, P = probe.value
+        qpad = np.zeros((len(Q), D))
+        qpad[:, :dim] = Q
+        seg = {c: s for s, c in enumerate(pcids.tolist())}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1251,16 +1214,19 @@ def _arrow_scored_broadcast(
             for cid, idx in pdf.groupby("cluster_id", sort=False).indices.items():
                 # without the semi-join, rows of an unprobed cluster (or of
                 # a cluster_id with no centroid) reach here: no query scores them
-                probed = qr_.get(int(cid))
-                if probed is None:
+                s = seg.get(int(cid))
+                if s is None:
                     continue
-                qg, QR, y2, pr = probed
+                span = slice(bounds[s], bounds[s + 1])
+                q = qrow[span]
+                QR = (qpad[q] - cpad[s]) @ P.T  # g × D rotated residuals
                 est, lb = _score_cluster_np(
-                    S[idx], x2[idx], fip[idx], ferr[idx], QR, y2, estimator, D
+                    S[idx], x2[idx], fip[idx], ferr[idx], QR,
+                    (QR * QR).sum(axis=1), estimator, D,
                 )
                 outs.append(_scored_columns(
-                    est, lb, qg, ids[idx], pr if with_probe_rank else None,
-                    per_cluster_cut,
+                    est, lb, qids[q], ids[idx],
+                    rank[span] if with_probe_rank else None, per_cluster_cut,
                 ))
             if outs:
                 yield pd.DataFrame({c: np.concatenate([o[c] for o in outs]) for c in outs[0]})
@@ -1419,12 +1385,9 @@ def _arrow_scored_cogroup(
     plan — nothing is left to prune.
 
     Cost vs the broadcast scorer: the probed codes shuffle once for the
-    cogroup (the broadcast path reads them in place) — UNLESS the index
-    was saved with :func:`save_index_bucketed`, whose bucketed scan
-    already satisfies the cogroup distribution (plan-asserted: the
-    codes-side exchange disappears).  A hot cluster's matmul is chunked
-    internally so memory stays bounded (skew shows up as task time,
-    exactly like the reference's per-cluster OpenMP loop).
+    cogroup (the broadcast path reads them in place).  A hot cluster's
+    matmul is chunked internally so memory stays bounded (skew shows up
+    as task time, exactly like the reference's per-cluster OpenMP loop).
     """
     D = meta["D"]
     if with_probe_rank and probes is not None and "probe_rank" not in probes.columns:
@@ -1743,8 +1706,8 @@ def _plan_search(
 
     - scorer: the cogroup scorer when ``probes`` are injected (its
       probe prep is DataFrame-native); otherwise the broadcast scorer
-      iff its per-(query, probe) residual map fits:
-      nq·nprobe·(8·D + 24) ≤ T.
+      iff the rotated residual rows it builds, one per (query, probe)
+      pair across its tasks, fit: nq·nprobe·(8·D + 24) ≤ T.
     - rerank: broadcast iff the (qid, id) shortlist plus the query
       vectors fit: nq·(8·dim + 16·shortlist) ≤ T; else the shuffle
       equi-joins (see :func:`_finalize_topk`).
@@ -1797,11 +1760,14 @@ def _scored_candidates(
     rerank_queries).
 
     A broadcast route collects the batch once — ``query_rows`` when
-    given, else one ``toArrow`` job — and the scorer and the exact
-    rerank share it: ``rerank_queries`` is the Spark broadcast of that
-    query matrix for :func:`_finalize_topk` when the plan broadcasts the
-    rerank, else None.  ``centroid_rows`` only feeds the broadcast
-    scorer; the cogroup scorer ignores it and ``query_rows``."""
+    given, else one ``toArrow`` job — and makes the search's one Spark
+    broadcast of it (:func:`_driver_queries`), which the broadcast
+    scorer and the exact rerank both read: ``rerank_queries`` is that
+    broadcast when the plan broadcasts the rerank, else None.
+    ``centroid_rows`` only feeds the broadcast scorer; the cogroup
+    scorer ignores it and ``query_rows``, and gives raw (cluster_id,
+    centroid) centroids their rotated column first
+    (:func:`centroids_with_rotation`)."""
     spark = queries.sparkSession
     # T in bytes, as Spark's own join planner reads the setting
     conf = spark._jsparkSession.sessionState().conf()
@@ -1811,27 +1777,30 @@ def _scored_candidates(
         nprobe, meta, shortlist, int(conf.autoBroadcastJoinThreshold()),
         probes_injected=probes is not None,
     )
-    q = None
+    shipped = None
     if plan.broadcast_scorer or plan.broadcast_rerank:
         q = _driver_queries(
             query_rows if query_rows is not None
             else queries.select("qid", "qvec").toArrow(),
             int(meta["dim"]),
         )
+        shipped = spark.sparkContext.broadcast(q)
     if plan.broadcast_scorer:
         scored = _arrow_scored_broadcast(
-            codes, centroids, meta, nprobe, q, estimator,
+            codes, centroids, meta, nprobe, q, shipped, estimator,
             per_cluster_cut=per_cluster_cut,
             with_probe_rank=with_probe_rank,
             centroid_rows=centroid_rows,
         )
     else:
+        if "centroid_rot" not in centroids.columns:
+            centroids = centroids_with_rotation(spark, centroids, meta)
         scored = _arrow_scored_cogroup(
             queries, codes, centroids, meta, nprobe, "qid", "qvec", estimator,
             probes, per_cluster_cut=per_cluster_cut,
             with_probe_rank=with_probe_rank,
         )
-    return scored, (spark.sparkContext.broadcast(q) if plan.broadcast_rerank else None)
+    return scored, (shipped if plan.broadcast_rerank else None)
 
 
 def rabitq_search(
@@ -1873,15 +1842,17 @@ def rabitq_search(
     the batch size and ``spark.sql.autoBroadcastJoinThreshold`` (T), and
     every route returns the same rows (asserted in tests):
 
-    - the broadcast Arrow scorer (driver-side probe prep, the
-      reference's own move) iff nq·nprobe·(8·D + 24) ≤ T and no
-      ``probes`` are injected; else the cogroup Arrow scorer (no driver
-      collect of the query side — unbounded NQ);
+    - the broadcast Arrow scorer iff nq·nprobe·(8·D + 24) ≤ T and no
+      ``probes`` are injected: the driver picks the probes (the
+      reference's own move) and ships them with the query matrix, and
+      each task builds its clusters' query residuals; else the cogroup
+      Arrow scorer (no driver collect of the query side — unbounded
+      NQ), which also takes raw (cluster_id, centroid) centroids;
     - the cogroup scorer skips probe selection and the codes semi-join
       when nprobe ≥ K, the broadcast scorer the semi-join when the batch
       probes every cluster;
     - the exact rerank broadcasts the shortlist into the base scan and
-      ships the query vectors the driver holds iff
+      reads the query vectors from the search's one query broadcast iff
       nq·(8·dim + 16·refine·k) ≤ T; else plain equi-joins.  Either way
       the distance is computed map-side and the top-k exchange carries
       distances, not vectors.
@@ -1890,7 +1861,7 @@ def rabitq_search(
     when the plan has one (a materialized cached batch), else one
     count() job, paid only when a rule needs it.  A broadcast route
     collects the queries once (one job) unless ``query_rows`` holds
-    them.
+    them, and ships them once.
 
     ``centroid_rows`` / ``query_rows``: driver-resident
     ``centroids.select("cluster_id", "centroid").collect()`` and (qid,

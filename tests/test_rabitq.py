@@ -848,7 +848,7 @@ class TestCogroupScorer:
         """The shuffle rerank (the queries=corpus scale route) must
         be row-identical to the broadcast rerank.  Both runs take the
         cogroup scorer: a threshold of exactly the rerank's bytes fits
-        the rerank but not the scorer's residual map."""
+        the rerank but not the scorer's residual rows."""
         from extended_rabitq_spark.operators import rabitq
         from extended_rabitq_spark.plans import inspect as I
 
@@ -870,7 +870,7 @@ class TestCogroupScorer:
         idx.unpersist()
 
     def test_auto_routing_by_batch_size(self, spark):
-        """The planner sends a batch whose residual map fits the broadcast
+        """The planner sends a batch whose residual rows fit the broadcast
         threshold to the broadcast scorer and any other to the cogroup
         scorer; both produce the same results."""
         from extended_rabitq_spark.plans import inspect as I
@@ -958,6 +958,129 @@ class TestCogroupScorer:
                                        query_rows=rows, **kw)
             _assert_rank_identical(_res_map(got), _res_map(ref), tol=0.0)
         cached.unpersist()
+        idx.unpersist()
+
+    def test_broadcast_scorer_arithmetic_is_pinned(self, spark):
+        """The broadcast scorer's candidates are bitwise a numpy reference:
+        per probed cluster, the queries probing it in ascending order,
+        (qpad − cpad) @ P.T and _score_cluster_np against the cluster's
+        codes — (qid, id, est_dist, est_lb, probe_rank) at tol 0.0, for
+        both estimators."""
+        from extended_rabitq_spark.operators import rabitq
+
+        base, qs, idx, cents_full, meta = _search_fixture(spark)
+        D, dim, nprobe = meta["D"], meta["dim"], 3
+        P = rabitq.rotation_matrix(D, meta["seed"])
+        cent = cents_full.select("cluster_id", "centroid").collect()
+        cids = np.array([r[0] for r in cent])
+        cpad = np.zeros((len(cent), D))
+        cpad[:, :dim] = [r[1] for r in cent]
+        qids, Q, _ = rabitq._driver_queries(qs.toArrow(), dim)
+        qpad = np.zeros((len(Q), D))
+        qpad[:, :dim] = Q
+        order = rabitq._probe_order(Q, cpad[:, :dim], cids, nprobe)
+        codes = {}
+        for r in idx.collect():
+            codes.setdefault(r.cluster_id, []).append(r)
+        for estimator in ("searcher", "high_acc"):
+            want = {}
+            for c in range(len(cids)):
+                qi, rank = np.nonzero(order == c)
+                rows = codes.get(int(cids[c]))
+                if len(qi) == 0 or rows is None:
+                    continue
+                QR = (qpad[qi] - cpad[c]) @ P.T
+                S = np.array([r.code for r in rows], dtype=np.float64) + 0.5 - (
+                    1 << (meta["total_bits"] - 1)
+                )
+                est, lb = rabitq._score_cluster_np(
+                    S, np.array([r.x2 for r in rows]),
+                    np.array([r.f_ip_ex for r in rows]),
+                    np.array([r.f_err for r in rows]),
+                    QR, (QR * QR).sum(axis=1), estimator, D,
+                )
+                for i, r in enumerate(rows):
+                    for j, q in enumerate(qi):
+                        want[(int(qids[q]), r.id)] = (
+                            est[i, j], lb[i, j], int(rank[j]) + 1
+                        )
+            with broadcast_threshold(spark, FITS_ALL):
+                scored, _ = rabitq._scored_candidates(
+                    qs, idx, cents_full, meta, nprobe, estimator,
+                    with_probe_rank=True,
+                )
+            got = {
+                (r.qid, r.id): (r.est_dist, r.est_lb, r.probe_rank)
+                for r in scored.collect()
+            }
+            assert got == want and len(want) > 0, estimator
+        idx.unpersist()
+
+    def test_broadcast_route_ships_the_query_matrix_once(self, spark, monkeypatch):
+        """A reranked search on the broadcast routes makes one Spark
+        broadcast holding the query matrix, which the scorer and the
+        exact rerank share, and no broadcast as large as the batch's
+        nq × nprobe × D rotated residuals."""
+        from pyspark import SparkContext
+
+        from extended_rabitq_spark.operators import rabitq
+
+        base, _, idx, cents_full, meta = _search_fixture(spark)
+        nq, nprobe, dim = 200, 3, meta["dim"]
+        rng = np.random.default_rng(3)
+        Q = rng.standard_normal((nq, dim))
+        qs = spark.createDataFrame(
+            [(i, [float(x) for x in Q[i]]) for i in range(nq)],
+            "qid long, qvec array<double>",
+        )
+        payloads = []
+        broadcast = SparkContext.broadcast
+
+        def recording(sc, value):
+            payloads.append(value)
+            return broadcast(sc, value)
+
+        def arrays(obj):
+            if isinstance(obj, np.ndarray):
+                yield obj
+            elif isinstance(obj, (tuple, list)):
+                for o in obj:
+                    yield from arrays(o)
+            elif isinstance(obj, dict):
+                for o in obj.values():
+                    yield from arrays(o)
+
+        monkeypatch.setattr(SparkContext, "broadcast", recording)
+        res = _search_at(spark, FITS_ALL, qs, idx, cents_full, meta,
+                         nprobe=nprobe, k=5, refine=4, rerank_base=base)
+        assert res.count() == nq * 5
+        monkeypatch.undo()
+        held = [
+            sum(a.size for a in arrays(p) if a.dtype == np.float64)
+            for p in payloads
+        ]
+        assert max(held) < nq * nprobe * meta["D"], held
+        with_q = [
+            p for p in payloads
+            if any(a.shape == Q.shape and (a == Q).all() for a in arrays(p))
+        ]
+        assert len(with_q) == 1, held
+        idx.unpersist()
+
+    def test_cogroup_scorer_takes_raw_centroids(self, spark):
+        """Raw (cluster_id, centroid) centroids, which the broadcast scorer
+        reads, give the cogroup scorer — with its own probes and with
+        injected ones — the rows of the rotated side table."""
+        from extended_rabitq_spark.operators.ivf import select_probes
+
+        base, qs, idx, cents_full, meta = _search_fixture(spark)
+        raw = cents_full.select("cluster_id", "centroid")
+        probes = select_probes(qs, raw, 3, dim=int(meta["dim"]))
+        for injected in (None, probes):
+            kw = dict(nprobe=3, k=5, refine=4, rerank_base=base, probes=injected)
+            rot = _search_at(spark, FITS_NONE, qs, idx, cents_full, meta, **kw)
+            got = _search_at(spark, FITS_NONE, qs, idx, raw, meta, **kw)
+            _assert_rank_identical(_res_map(got), _res_map(rot), tol=0.0)
         idx.unpersist()
 
     def test_precollected_centroid_rows_identical(self, spark):

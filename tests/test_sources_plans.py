@@ -464,61 +464,6 @@ class TestIndexLifecycle:
             assert len(files) == 1, d
 
 
-class TestBucketedIndex:
-    def test_bucketed_codes_skip_cogroup_shuffle(self, spark, tmp_path):
-        """save_index_bucketed: the bucketed scan satisfies the cogroup
-        scorer's distribution, so the probed CODES never shuffle — only
-        the tiny qprobe side does.  Results identical to the
-        path-partitioned index."""
-        from extended_rabitq_spark.operators import ivf, rabitq
-
-        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        base = emb.where(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
-        idx, meta = rabitq.build_index(base, cents, total_bits=4)
-        # a fresh session's in-memory catalog forgets managed tables but
-        # their warehouse directories persist — clear both
-        spark.sql("DROP TABLE IF EXISTS t_codes_bucketed")
-        import shutil
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(f"{wh}/t_codes_bucketed", ignore_errors=True)
-        rabitq.save_index_bucketed(
-            idx, cents, meta, "t_codes_bucketed", str(tmp_path / "side"), n_buckets=8
-        )
-        codes_b, cents_b, meta_b = rabitq.load_index_bucketed(
-            spark, "t_codes_bucketed", str(tmp_path / "side")
-        )
-        qs = emb.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-        )
-        scored_b = rabitq._arrow_scored_cogroup(
-            qs, codes_b, cents_b, meta_b, 3, "qid", "qvec", "searcher", None
-        )
-        scored_p = rabitq._arrow_scored_cogroup(
-            qs, idx, rabitq.centroids_with_rotation(spark, cents, meta), meta,
-            3, "qid", "qvec", "searcher", None,
-        )
-
-        def cluster_exchanges(df):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return sum(
-                1 for line in plan.splitlines()
-                if "Exchange hashpartitioning(cluster_id" in line
-            )
-
-        n_plain, n_bucketed = cluster_exchanges(scored_p), cluster_exchanges(scored_b)
-        # the bucketed scan absorbs the codes-side exchange; the tiny
-        # qprobe side still shuffles (exact counts vary with the keys
-        # `distinct` subplan, so assert the co-location delta)
-        assert n_bucketed == n_plain - 1, (n_plain, n_bucketed)
-        a = sorted((r.qid, r.id, round(r.est_dist, 9)) for r in scored_b.collect())
-        b = sorted((r.qid, r.id, round(r.est_dist, 9)) for r in scored_p.collect())
-        assert a == b and len(a) > 0
-        spark.sql("DROP TABLE IF EXISTS t_codes_bucketed")
-
-
 def test_ingest_handles_spaces_and_glob_chars_in_names(spark, tmp_path):
     """binaryFile reports URIs (percent-encoded): shard names with
     spaces must still map to their id offsets; ingest_file treats its
@@ -871,7 +816,6 @@ class TestIndexMaintenance:
         qs = vecs.select(F.col("id").alias("qid"), F.col("vec").alias("qvec"))
         for call in (
             lambda: rabitq.load_index(spark, path),
-            lambda: rabitq.load_index_bucketed(spark, "t", path),
             lambda: rabitq.append_to_index(vecs, path),
             lambda: rabitq.rebalance_index(spark, path, vecs),
             lambda: rabitq.search_index(spark, path, qs),
