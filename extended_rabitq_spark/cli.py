@@ -98,17 +98,14 @@ def cmd_search(spark: SparkSession, a: argparse.Namespace) -> int:
     # Fail at the dispatch boundary, not deep inside plan analysis: the
     # sweep harness below is RaBitQ-specific; other index kinds serve
     # through operators.rabitq.search_index (which dispatches on kind).
-    _mp = _os.path.join(a.index, "meta.json")
-    if _os.path.exists(_mp):
-        with open(_mp) as _f:
-            _kind = _json.load(_f).get("kind")
-        if _kind is not None and _kind != "rabitq":
-            raise SystemExit(
-                f"search: index at {a.index} has kind={_kind!r}; the sweep "
-                "harness is RaBitQ-only — query it via "
-                "extended_rabitq_spark.operators.rabitq.search_index (one-"
-                "call serving, kind-dispatched) instead"
-            )
+    _kind = rabitq._read_meta(a.index).get("kind")
+    if _kind is not None and _kind != "rabitq":
+        raise SystemExit(
+            f"search: index at {a.index} has kind={_kind!r}; the sweep "
+            "harness is RaBitQ-only — query it via "
+            "extended_rabitq_spark.operators.rabitq.search_index (one-"
+            "call serving, kind-dispatched) instead"
+        )
 
     codes, cents_full, meta = rabitq.load_index(spark, a.index)
     queries = _vectors(spark, a.queries).select(
@@ -209,8 +206,7 @@ def cmd_search(spark: SparkSession, a: argparse.Namespace) -> int:
             import json
 
             met = got.recall >= a.target_recall
-            with open(f"{a.index}/meta.json") as fh:
-                m = json.load(fh)
+            m = rabitq._read_meta(a.index)
             m["tuned_nprobe"] = int(np_sel)
             m["tuned_recall"] = round(float(got.recall), 6)
             m["tuned_target"] = float(a.target_recall)

@@ -108,33 +108,6 @@ def batch_windowed_event_counts(spark: SparkSession, sf_dir: str, window: str = 
     )
 
 
-def streaming_knn_serve(
-    spark: SparkSession,
-    query_stream: DataFrame,
-    index_path: str,
-    nprobe: int = 3,
-    k: int = 10,
-) -> DataFrame:
-    """Micro-batch ANN serving: each micro-batch of queries (qid, qvec)
-    runs the two-phase RaBitQ search against the saved index via
-    ``foreachBatch``-style composition.  Returned DataFrame is the
-    *transformed stream*; attach your sink with ``writeStream``.
-
-    (Real-time single-digit-ms serving needs specialized infra — this is
-    the honest Spark micro-batch analog, per BASELINE.json's note.)
-    """
-    from ..operators.rabitq import load_index, rabitq_search
-
-    codes, centroids, meta = load_index(spark, index_path)
-    codes = codes.persist()
-
-    def _serve(batch_df: DataFrame, _epoch: int) -> None:
-        res = rabitq_search(batch_df, codes, centroids, meta, nprobe=nprobe, k=k)
-        res.write.format("noop").mode("overwrite").save()
-
-    return query_stream, _serve  # caller wires: stream.writeStream.foreachBatch(_serve)
-
-
 def synthetic_query_stream(
     spark: SparkSession, rows_per_batch: int, dim: int, num_partitions: int = 2
 ) -> DataFrame:
@@ -212,12 +185,6 @@ def serve_latency_benchmark(
     codes, centroids, meta = load_index(spark, index_path)
     codes = codes.persist()
     codes.count()
-    # probe artifact persisted across batches (VERDICT r7 item 7): the
-    # broadcast scorer collects centroids per batch for driver-side
-    # probe selection — without this, every micro-batch re-reads the
-    # centroid parquet; with it, the per-batch collect is a memory scan
-    centroids = centroids.persist()
-    centroids.count()
     # collect the (small, immutable) centroid table ONCE — the broadcast
     # scorer's per-batch probe selection then runs on this driver-local
     # list instead of paying a collect job every micro-batch

@@ -183,7 +183,8 @@ def test_streaming_topk_pool_matches_batch(spark, tmp_path):
 
 def test_serve_latency_benchmark(spark, tmp_path):
     """Rate-source serving benchmark: deterministic micro-batches flow
-    through the saved index; every batch reports k results per query."""
+    through the saved index; every batch reports k results per query,
+    and the run leaves no persisted RDD behind."""
     import pyspark.sql.functions as F
 
     from extended_rabitq_spark.operators import ivf, rabitq
@@ -198,9 +199,11 @@ def test_serve_latency_benchmark(spark, tmp_path):
     path = str(tmp_path / "idx")
     rabitq.save_index(index_df, cents, meta, path)
 
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     stats = serve_latency_benchmark(
         spark, path, rows_per_batch=20, n_batches=2, nprobe=3, k=5
     )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     assert len(stats) >= 2
     for s in stats[:2]:
         assert s["n_queries"] == 20

@@ -1,5 +1,7 @@
 """Candidate-volume experiment for the ANN self-join dedup (VERDICT r9
-item 6, follow-up to tools/ann_dedup_phases.py).
+item 6, follow-up to the r9 phase-wall audit of the same self-join;
+``tools/opt_measure.py time dedup_embedding_ann`` now reports that split
+per plan operator).
 
 The phase audit shows the self-join search (phase 3) dominates the wall,
 and its cost is candidate volume = (nprobe / n_clusters) · N² estimate

@@ -1,13 +1,16 @@
-"""Round-10 optimization measurement harness.
+"""Optimization measurement harness.
 
 Times individual registered queries in THIS process (one fresh JVM per
 invocation — invoke once per comparable batch) with the bench's exact
 methodology (noop sink, one untimed cold pass, WARM_REPS timed reps,
 stray-persist release between reps), and/or dumps ``explain("formatted")``
-plans to ``plans/<round>/`` (default r11; --round overrides).
+plans to ``plans/<round>/`` (default r11; --round overrides).  Each timed
+query also reports the ``extended_rabitq_spark.profile`` of its last warm
+rep (jobs, stages, tasks, executor and shuffle totals, per-operator SQL
+metrics); the profile is read after that rep's timer stops.
 
 Usage:
-    python tools/opt_measure.py time  q1 q2 ...      # cold + warm medians
+    python tools/opt_measure.py time  q1 q2 ...      # cold + warm medians + profile
     python tools/opt_measure.py plan  q1 q2 ...      # plans/r10/<q>_<tag>.txt
     python tools/opt_measure.py both  q1 q2 ...
 Options:
@@ -23,6 +26,7 @@ import json
 import os
 import sys
 import time
+from contextlib import nullcontext
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -36,11 +40,11 @@ def main() -> None:
     sf_dir = opts.get("--sf") or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(opts.get("--reps") or "3")
     tag = opts.get("--tag") or "before"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+    from extended_rabitq_spark.profile import profile
     from extended_rabitq_spark.session import get_spark
 
-    spark = get_spark("opt-measure", cpus=cpus)
+    spark = get_spark("opt-measure")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
@@ -93,13 +97,15 @@ def main() -> None:
             rec["cold"] = round(time.perf_counter() - t0, 3)
             release_stray_state(baseline)
             walls = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                walls.append(time.perf_counter() - t0)
+            for rep in range(reps):
+                with profile(spark) if rep == reps - 1 else nullcontext() as prof:
+                    t0 = time.perf_counter()
+                    qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+                    walls.append(time.perf_counter() - t0)
                 release_stray_state(baseline)
             rec["warm_median"] = round(sorted(walls)[len(walls) // 2], 3)
             rec["warm_all"] = [round(w, 3) for w in walls]
+            rec["profile"] = prof
         out[name] = rec
         print(json.dumps({name: rec}), flush=True)
     print("OPT_MEASURE " + json.dumps(out))
