@@ -75,24 +75,20 @@ def exact_probe_search(
     indexed_base: DataFrame,
     probes: DataFrame,
     k: int,
-    qid: str = "qid",
-    qvec: str = "qvec",
-    id_: str = "id",
-    vec: str = "vec",
 ) -> DataFrame:
     """:func:`ivf.ivf_search` with an injected probe list (same J3
     equi-join shape — partition pruning on a partitioned index, the
     100 TB base never shuffles).  Output: (qid, rank, id, dist)."""
     cand = indexed_base.join(
-        F.broadcast(probes.select(qid, "cluster_id")), on="cluster_id", how="inner"
-    ).join(F.broadcast(queries.select(qid, qvec)), on=qid, how="inner")
-    dist = distance_col("l2", qvec, vec)
-    w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(id_).asc())
+        F.broadcast(probes.select("qid", "cluster_id")), on="cluster_id", how="inner"
+    ).join(F.broadcast(queries.select("qid", "qvec")), on="qid", how="inner")
+    dist = distance_col("l2", "qvec", "vec")
+    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
-        cand.select(F.col(qid), F.col(id_), dist.alias("dist"))
+        cand.select(F.col("qid"), F.col("id"), dist.alias("dist"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(qid, "rank", id_, "dist")
+        .select("qid", "rank", "id", "dist")
     )
 
 
@@ -105,7 +101,6 @@ def escalation_verdicts(
     k: int,
     margin: float = 0.0,
     dist_col: str = "dist",
-    qid: str = "qid",
 ) -> DataFrame:
     """Per-query escalation verdict → (qid, n_lo, distk, min_bound,
     escalate).
@@ -140,7 +135,7 @@ def escalation_verdicts(
             f"margin must be finite and >= 0, got {margin!r} "
             "(use a large finite value, e.g. 1e18, to escalate everything)"
         )
-    got = res_lo.groupBy(F.col(qid)).agg(
+    got = res_lo.groupBy("qid").agg(
         F.count("*").alias("n_lo"),
         F.max(F.when(F.col("rank") <= k, F.col(dist_col))).alias("distk"),
     )
@@ -152,15 +147,15 @@ def escalation_verdicts(
     tails = (
         probes_hi.where(F.col("probe_rank") > nprobe_lo)
         .join(radii, on="cluster_id", how="inner")  # no radius row = empty cell
-        .groupBy(F.col(qid))
+        .groupBy("qid")
         .agg(F.min(bound).alias("min_bound"))
     )
     return (
-        query_ids.select(qid)
-        .join(got, on=qid, how="left")
-        .join(tails, on=qid, how="left")
+        query_ids.select("qid")
+        .join(got, on="qid", how="left")
+        .join(tails, on="qid", how="left")
         .select(
-            qid,
+            "qid",
             F.coalesce(F.col("n_lo"), F.lit(0)).cast("long").alias("n_lo"),
             "distk",
             "min_bound",
@@ -184,7 +179,6 @@ def _adaptive(
     k: int,
     margin: float,
     dist_col: str,
-    qid: str,
     return_stats: bool,
 ):
     """Shared escalation driver: cheap pass → verdicts → escalated pass →
@@ -211,8 +205,8 @@ def _adaptive(
         probes_hi.where(F.col("probe_rank") <= nprobe_lo)
     ).persist()  # read by the verdicts AND the union
     verd = escalation_verdicts(
-        queries.select(qid), res_lo, probes_hi, radii,
-        nprobe_lo, k, margin, dist_col=dist_col, qid=qid,
+        queries.select("qid"), res_lo, probes_hi, radii,
+        nprobe_lo, k, margin, dist_col=dist_col,
     ).persist()
     # the one triggering job: populates all three caches above and tells
     # us whether the hi pass is needed at all (count is contract-bounded
@@ -221,17 +215,17 @@ def _adaptive(
     if n_esc == 0:
         out = res_lo
     else:
-        esc = verd.where(F.col("escalate")).select(qid)
+        esc = verd.where(F.col("escalate")).select("qid")
         res_hi = search_fn(
-            probes_hi.join(F.broadcast(esc), on=qid, how="leftsemi")
+            probes_hi.join(F.broadcast(esc), on="qid", how="leftsemi")
         )
         out = res_lo.join(
-            F.broadcast(esc), on=qid, how="left_anti"
+            F.broadcast(esc), on="qid", how="left_anti"
         ).unionByName(res_hi)
     if not return_stats:
         return out
     stats = verd.select(
-        qid, "n_lo", "escalate",
+        "qid", "n_lo", "escalate",
         F.when(F.col("escalate"), F.lit(nprobe_hi))
         .otherwise(F.lit(nprobe_lo)).cast("long").alias("nprobe_eff"),
     )
@@ -246,10 +240,6 @@ def ivf_search_adaptive(
     nprobe_lo: int,
     nprobe_hi: int,
     margin: float = 0.0,
-    qid: str = "qid",
-    qvec: str = "qvec",
-    id_: str = "id",
-    vec: str = "vec",
     return_stats: bool = False,
 ) -> DataFrame:
     """Exact-IVF adaptive search → (qid, rank, id, dist) [+ stats].
@@ -258,15 +248,15 @@ def ivf_search_adaptive(
     (the convergence certificate is a theorem for exact distances —
     pinned bitwise in tests), at the cost of ``nprobe_lo`` probes for
     every certified query."""
-    probes_hi = select_probes(queries, centroids, nprobe_hi, qid=qid, qvec=qvec)
-    radii = cell_radii_exact(indexed_base, centroids, vec=vec)
+    probes_hi = select_probes(queries, centroids, nprobe_hi)
+    radii = cell_radii_exact(indexed_base, centroids)
     return _adaptive(
         queries, probes_hi, radii,
         lambda p: exact_probe_search(
-            queries.join(F.broadcast(p.select(qid).distinct()), on=qid, how="leftsemi"),
-            indexed_base, p, k, qid=qid, qvec=qvec, id_=id_, vec=vec,
+            queries.join(F.broadcast(p.select("qid").distinct()), on="qid", how="leftsemi"),
+            indexed_base, p, k,
         ),
-        nprobe_lo, nprobe_hi, k, margin, "dist", qid, return_stats,
+        nprobe_lo, nprobe_hi, k, margin, "dist", return_stats,
     )
 
 
@@ -279,8 +269,6 @@ def rabitq_search_adaptive(
     nprobe_lo: int,
     nprobe_hi: int,
     margin: float = 0.0,
-    qid: str = "qid",
-    qvec: str = "qvec",
     return_stats: bool = False,
     **search_kw,
 ) -> DataFrame:
@@ -296,16 +284,15 @@ def rabitq_search_adaptive(
     ``search_kw`` forwards to :func:`rabitq.rabitq_search` (estimator,
     refine, refine_mode, ...)."""
     probes_hi = select_probes(
-        queries, centroids.select("cluster_id", "centroid"), nprobe_hi,
-        qid=qid, qvec=qvec,
+        queries, centroids.select("cluster_id", "centroid"), nprobe_hi
     )
     radii = cell_radii_from_codes(codes)
     return _adaptive(
         queries, probes_hi, radii,
         lambda p: rabitq_ops.rabitq_search(
-            queries.join(F.broadcast(p.select(qid).distinct()), on=qid, how="leftsemi"),
+            queries.join(F.broadcast(p.select("qid").distinct()), on="qid", how="leftsemi"),
             codes, centroids, meta,
-            nprobe=nprobe_hi, k=k, probes=p, qid=qid, qvec=qvec, **search_kw,
+            nprobe=nprobe_hi, k=k, probes=p, **search_kw,
         ),
-        nprobe_lo, nprobe_hi, k, margin, "est_dist", qid, return_stats,
+        nprobe_lo, nprobe_hi, k, margin, "est_dist", return_stats,
     )

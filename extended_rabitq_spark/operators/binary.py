@@ -67,59 +67,52 @@ def pack_sign_bits(df: DataFrame, vec: str = "vec", id_: str = "id") -> DataFram
     )
 
 
-def hamming_knn(
-    queries: DataFrame, base: DataFrame, k: int,
-    qid: str = "qid", qvec: str = "qvec", id_: str = "id", vec: str = "vec",
-) -> DataFrame:
+def hamming_knn(queries: DataFrame, base: DataFrame, k: int) -> DataFrame:
     """Exact Hamming top-k over sign codes → (qid, rank, id, hamming).
 
     ``hamming`` is BIGINT — integer end-to-end, no float folds."""
     pairs = base.crossJoin(F.broadcast(queries))
-    w = Window.partitionBy(qid).orderBy(F.col("hamming").asc(), F.col(id_).asc())
+    w = Window.partitionBy("qid").orderBy(F.col("hamming").asc(), F.col("id").asc())
     return (
-        pairs.select(F.col(qid), F.col(id_), F.expr(V.hamming(qvec, vec)).alias("hamming"))
+        pairs.select("qid", "id", F.expr(V.hamming("qvec", "vec")).alias("hamming"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(qid, "rank", id_, "hamming")
+        .select("qid", "rank", "id", "hamming")
     )
 
 
-def hamming_knn_packed(
-    queries: DataFrame, base: DataFrame, k: int,
-    qid: str = "qid", qvec: str = "qvec", id_: str = "id", vec: str = "vec",
-) -> DataFrame:
+def hamming_knn_packed(queries: DataFrame, base: DataFrame, k: int) -> DataFrame:
     """Scale twin of :func:`hamming_knn`: distance = Σ bit_count(xor) over
     the packed words (32 sign bits per BIGINT — see
     :func:`pack_sign_bits`).  Value-equal by construction (tested)."""
-    qb = pack_sign_bits(queries, vec=qvec, id_=qid).withColumnRenamed("words", "qwords")
-    bb = pack_sign_bits(base, vec=vec, id_=id_)
+    qb = pack_sign_bits(queries, vec="qvec", id_="qid").withColumnRenamed("words", "qwords")
+    bb = pack_sign_bits(base)
     pairs = bb.crossJoin(F.broadcast(qb))
     ham = (
         "CAST(aggregate(zip_with(qwords, words, (a, b) -> bit_count(a ^ b)), "
         "0, (acc, v) -> acc + v) AS BIGINT)"
     )
-    w = Window.partitionBy(qid).orderBy(F.col("hamming").asc(), F.col(id_).asc())
+    w = Window.partitionBy("qid").orderBy(F.col("hamming").asc(), F.col("id").asc())
     return (
-        pairs.select(F.col(qid), F.col(id_), F.expr(ham).alias("hamming"))
+        pairs.select("qid", "id", F.expr(ham).alias("hamming"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(qid, "rank", id_, "hamming")
+        .select("qid", "rank", "id", "hamming")
     )
 
 
 def hamming_rerank_knn(
-    queries: DataFrame, base: DataFrame, coarse_k: int, k: int,
-    qid: str = "qid", qvec: str = "qvec", id_: str = "id", vec: str = "vec",
+    queries: DataFrame, base: DataFrame, coarse_k: int, k: int
 ) -> DataFrame:
     """Two-phase binary search → (qid, rank, id, dist): Hamming shortlist
     (ties → smaller id), exact fp32 L2 re-rank of the shortlist only."""
-    cand = hamming_knn(queries, base, k=coarse_k, qid=qid, qvec=qvec, id_=id_, vec=vec)
-    short = cand.join(F.broadcast(queries), qid).select(qid, id_, qvec)
-    wf = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(id_).asc())
+    cand = hamming_knn(queries, base, k=coarse_k)
+    short = cand.join(F.broadcast(queries), "qid").select("qid", "id", "qvec")
+    wf = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
-        base.join(F.broadcast(short), id_)
-        .select(F.col(qid), F.col(id_), F.expr(V.l2sq(qvec, vec)).alias("dist"))
+        base.join(F.broadcast(short), "id")
+        .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))
         .withColumn("rank", F.row_number().over(wf).cast("long"))
         .where(F.col("rank") <= k)
-        .select(qid, "rank", id_, "dist")
+        .select("qid", "rank", "id", "dist")
     )

@@ -215,8 +215,6 @@ def select_probes(
     queries: DataFrame,
     centroids: DataFrame,
     nprobe: int,
-    qid: str = "qid",
-    qvec: str = "qvec",
     metric: str = "l2",
     dim: int | None = None,
 ) -> DataFrame:
@@ -224,12 +222,12 @@ def select_probes(
     (inc/index/Initializer.hpp:55-68 partial-sort, as a window).
     Output: (qid, probe_rank, cluster_id, cdist)."""
     pairs = queries.crossJoin(F.broadcast(centroids))
-    dist = distance_col(metric, qvec, "centroid", dim)
-    w = Window.partitionBy(qid).orderBy(F.col("cdist").asc(), F.col("cluster_id").asc())
+    dist = distance_col(metric, "qvec", "centroid", dim)
+    w = Window.partitionBy("qid").orderBy(F.col("cdist").asc(), F.col("cluster_id").asc())
     return (
-        pairs.select(F.col(qid), F.col("cluster_id"), dist.alias("cdist"))
+        pairs.select(F.col("qid"), F.col("cluster_id"), dist.alias("cdist"))
         .select(
-            F.col(qid), F.col("cluster_id"), F.col("cdist"),
+            F.col("qid"), F.col("cluster_id"), F.col("cdist"),
             F.row_number().over(w).cast("long").alias("probe_rank"),
         )
         .where(F.col("probe_rank") <= nprobe)
@@ -285,8 +283,6 @@ def select_probes_hier(
     n_coarse: int,
     coarse_probe: int,
     mode: str = "kmeans",
-    qid: str = "qid",
-    qvec: str = "qvec",
     metric: str = "l2",
     seed: int = 42,
 ) -> DataFrame:
@@ -313,21 +309,19 @@ def select_probes_hier(
         queries,
         ccent.select(F.col("coarse_id").alias("cluster_id"), "centroid"),
         coarse_probe,
-        qid=qid,
-        qvec=qvec,
         metric=metric,
-    ).select(qid, F.col("cluster_id").alias("coarse_id"))
+    ).select("qid", F.col("cluster_id").alias("coarse_id"))
     cand = (
         csel.join(F.broadcast(membership), on="coarse_id")
         .join(F.broadcast(centroids), on="cluster_id")
-        .join(queries.select(qid, qvec), on=qid)
+        .join(queries.select("qid", "qvec"), on="qid")
     )
-    dist = distance_col(metric, qvec, "centroid")
-    w = Window.partitionBy(qid).orderBy(F.col("cdist").asc(), F.col("cluster_id").asc())
+    dist = distance_col(metric, "qvec", "centroid")
+    w = Window.partitionBy("qid").orderBy(F.col("cdist").asc(), F.col("cluster_id").asc())
     return (
-        cand.select(F.col(qid), F.col("cluster_id"), dist.alias("cdist"))
+        cand.select(F.col("qid"), F.col("cluster_id"), dist.alias("cdist"))
         .select(
-            F.col(qid), F.col("cluster_id"), F.col("cdist"),
+            F.col("qid"), F.col("cluster_id"), F.col("cdist"),
             F.row_number().over(w).cast("long").alias("probe_rank"),
         )
         .where(F.col("probe_rank") <= nprobe)
@@ -340,10 +334,6 @@ def ivf_search(
     centroids: DataFrame,
     nprobe: int,
     k: int,
-    qid: str = "qid",
-    qvec: str = "qvec",
-    id_: str = "id",
-    vec: str = "vec",
     metric: str = "l2",
     dim: int | None = None,
 ) -> DataFrame:
@@ -356,20 +346,18 @@ def ivf_search(
     only probed clusters (inc/index/IVF.hpp:313-321).
     Output: (qid, rank, id, dist).
     """
-    probes = select_probes(
-        queries, centroids, nprobe, qid=qid, qvec=qvec, metric=metric, dim=dim
-    )
+    probes = select_probes(queries, centroids, nprobe, metric=metric, dim=dim)
     cand = indexed_base.join(
-        F.broadcast(probes.select(qid, "cluster_id")), on="cluster_id", how="inner"
-    ).join(F.broadcast(queries.select(qid, qvec)), on=qid, how="inner")
-    dist = distance_col(metric, qvec, vec, dim)
-    w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(id_).asc())
+        F.broadcast(probes.select("qid", "cluster_id")), on="cluster_id", how="inner"
+    ).join(F.broadcast(queries.select("qid", "qvec")), on="qid", how="inner")
+    dist = distance_col(metric, "qvec", "vec", dim)
+    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
-        cand.select(F.col(qid), F.col(id_), dist.alias("dist"))
+        cand.select(F.col("qid"), F.col("id"), dist.alias("dist"))
         .select(
-            F.col(qid),
+            F.col("qid"),
             F.row_number().over(w).cast("long").alias("rank"),
-            F.col(id_),
+            F.col("id"),
             F.col("dist"),
         )
         .where(F.col("rank") <= k)
@@ -620,8 +608,6 @@ def graph_probes(
     graph: dict,
     nprobe: int,
     ef: int | None = None,
-    qid: str = "qid",
-    qvec: str = "qvec",
 ) -> DataFrame:
     """W2 query side: per-query approximate top-nprobe centroids by beam
     search over the broadcast graph — same output contract as
@@ -662,7 +648,7 @@ def graph_probes(
                 # threshold (inc/index/IVF.hpp:157-161), vectorized
                 # across the whole query batch instead of per-query
                 # graph walks.
-                Q = np.array(pdf[qvec].tolist(), dtype=np.float64)
+                Q = np.array(pdf["qvec"].tolist(), dtype=np.float64)
                 V = vecs.astype(np.float64)
                 d = ((Q * Q).sum(1)[:, None] + (V * V).sum(1)[None, :]
                      - 2.0 * (Q @ V.T))
@@ -673,14 +659,14 @@ def graph_probes(
                 g = len(Q)
                 rows = np.arange(g)[:, None]
                 yield pd.DataFrame(
-                    {qid: np.repeat(pdf[qid].to_numpy(), np_take),
+                    {"qid": np.repeat(pdf["qid"].to_numpy(), np_take),
                      "probe_rank": np.tile(np.arange(1, np_take + 1), g),
                      "cluster_id": ids[order].ravel().astype(np.int32),
                      "cdist": d[rows, order].ravel()}
                 )
                 continue
             out_qid, out_rank, out_cid, out_d = [], [], [], []
-            for q_id, q_vec in zip(pdf[qid], pdf[qvec]):
+            for q_id, q_vec in zip(pdf["qid"], pdf["qvec"]):
                 q = np.asarray(list(q_vec), dtype=np.float64)
                 found = _beam_search(q, vecs, adj, entries, ef_val, nprobe)
                 # final order: (dist, cluster_id), same tie-break as W1
@@ -691,9 +677,9 @@ def graph_probes(
                     out_cid.append(cid)
                     out_d.append(d)
             yield pd.DataFrame(
-                {qid: out_qid, "probe_rank": out_rank,
+                {"qid": out_qid, "probe_rank": out_rank,
                  "cluster_id": out_cid, "cdist": out_d}
             )
 
-    out_schema = f"{qid} long, probe_rank long, cluster_id int, cdist double"
-    return queries.select(qid, qvec).mapInPandas(search, out_schema)
+    out_schema = "qid long, probe_rank long, cluster_id int, cdist double"
+    return queries.select("qid", "qvec").mapInPandas(search, out_schema)

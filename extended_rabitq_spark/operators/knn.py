@@ -60,10 +60,6 @@ def _pairwise_dist(
     metric: str,
     queries: DataFrame,
     base: DataFrame,
-    qid: str,
-    qvec: str,
-    id_: str,
-    vec: str,
     dim: int | None,
 ) -> tuple[DataFrame, DataFrame, F.Column]:
     """Quadratic-stage distance prep shared by exact_knn / range_search:
@@ -73,10 +69,10 @@ def _pairwise_dist(
     (functions.vector.cosine_sim_staged).  Other metrics pass through
     untouched."""
     if metric != "cosine":
-        return queries, base, distance_col(metric, qvec, vec, dim)
-    q = queries.select(qid, qvec).withColumn("_qn", F.expr(V.norm(qvec)))
-    b = base.select(id_, vec).withColumn("_bn", F.expr(V.norm(vec)))
-    dist = F.expr(f"1.0 - ({V.cosine_sim_staged(qvec, vec, '_qn', '_bn')})")
+        return queries, base, distance_col(metric, "qvec", "vec", dim)
+    q = queries.select("qid", "qvec").withColumn("_qn", F.expr(V.norm("qvec")))
+    b = base.select("id", "vec").withColumn("_bn", F.expr(V.norm("vec")))
+    dist = F.expr(f"1.0 - ({V.cosine_sim_staged('qvec', 'vec', '_qn', '_bn')})")
     return q, b, dist
 
 
@@ -85,10 +81,6 @@ def exact_knn(
     base: DataFrame,
     k: int,
     metric: str = "l2",
-    qid: str = "qid",
-    qvec: str = "qvec",
-    id_: str = "id",
-    vec: str = "vec",
     dim: int | None = None,
 ) -> DataFrame:
     """Declarative exact KNN → (qid, rank, id, dist).
@@ -98,20 +90,20 @@ def exact_knn(
     in the ratio metric, inc/utils/tools.hpp:28-40).  ``dim``: unrolled
     codegen distance (bitwise-identical; see distance_col).
     """
-    queries, base, dist = _pairwise_dist(metric, queries, base, qid, qvec, id_, vec, dim)
+    queries, base, dist = _pairwise_dist(metric, queries, base, dim)
     pairs = base.crossJoin(F.broadcast(queries))
-    w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(id_).asc())
+    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     # One projection for rank + output order instead of the
     # withColumn/where/select chain (r11): every DataFrame op re-analyzes
     # the accumulated plan eagerly, and the unrolled distance tree makes
     # each pass ~25-35ms of driver time per build — same plan semantics,
     # one fewer analysis pass.
     return (
-        pairs.select(F.col(qid), F.col(id_), dist.alias("dist"))
+        pairs.select(F.col("qid"), F.col("id"), dist.alias("dist"))
         .select(
-            F.col(qid),
+            F.col("qid"),
             F.row_number().over(w).cast("long").alias("rank"),
-            F.col(id_),
+            F.col("id"),
             F.col("dist"),
         )
         .where(F.col("rank") <= k)
@@ -123,10 +115,6 @@ def exact_knn_combined(
     base: DataFrame,
     k: int,
     metric: str = "l2",
-    qid: str = "qid",
-    qvec: str = "qvec",
-    id_: str = "id",
-    vec: str = "vec",
     dim: int | None = None,
 ) -> DataFrame:
     """Scale-path exact KNN with map-side partial top-k (see module doc).
@@ -134,7 +122,7 @@ def exact_knn_combined(
     Semantically identical to :func:`exact_knn` (same distances, same
     tie-break); verified against it in tests/test_knn.py.
     """
-    q_rows = queries.select(qid, qvec).collect()  # NQ is small by contract
+    q_rows = queries.select("qid", "qvec").collect()  # NQ is small by contract
     if not q_rows:
         schema = "qid long, rank long, id long, dist double"
         return base.sparkSession.createDataFrame([], schema)
@@ -150,8 +138,8 @@ def exact_knn_combined(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.array(pdf[vec].tolist(), dtype=np.float64)  # B × D
-            ids = pdf[id_].to_numpy(dtype=np.int64)
+            X = np.array(pdf["vec"].tolist(), dtype=np.float64)  # B × D
+            ids = pdf["id"].to_numpy(dtype=np.int64)
             if metric == "l2":
                 d = q_sq[:, None] + (X * X).sum(axis=1)[None, :] - 2.0 * (Q @ X.T)
             elif metric == "ip":
@@ -172,23 +160,23 @@ def exact_knn_combined(
             qi, xi = np.nonzero(d <= thresh[:, None])
             yield pd.DataFrame({"qid": QID[qi], "id": ids[xi], "dist_np": d[qi, xi]})
 
-    cand = base.select(id_, vec).mapInPandas(partial_topk, "qid long, id long, dist_np double")
+    cand = base.select("id", "vec").mapInPandas(partial_topk, "qid long, id long, dist_np double")
     # Recompute the distance declaratively on the tiny candidate set so the
     # final output is bit-identical to exact_knn (numpy's BLAS-order sums
     # differ in low bits; they only *select* candidates, never score them).
     cand = (
-        cand.join(base.select(id_, vec), on=id_, how="inner")
-        .join(F.broadcast(queries.select(qid, qvec)), on=qid, how="inner")
+        cand.join(base.select("id", "vec"), on="id", how="inner")
+        .join(F.broadcast(queries.select("qid", "qvec")), on="qid", how="inner")
         .select(
-            F.col(qid), F.col(id_),
-            distance_col(metric, qvec, vec, dim).alias("dist"),
+            F.col("qid"), F.col("id"),
+            distance_col(metric, "qvec", "vec", dim).alias("dist"),
         )
     )
-    w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(id_).asc())
+    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
         cand.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select(qid, "rank", id_, "dist")
+        .select("qid", "rank", "id", "dist")
     )
 
 
@@ -197,10 +185,6 @@ def range_search(
     base: DataFrame,
     radius2: float,
     metric: str = "l2",
-    qid: str = "qid",
-    qvec: str = "qvec",
-    id_: str = "id",
-    vec: str = "vec",
     dim: int | None = None,
 ) -> DataFrame:
     """Range query: every base row within squared distance ``radius2``
@@ -209,10 +193,10 @@ def range_search(
     exact form: broadcast NLJ + filter — no window, so unlike top-k the
     output size is data-dependent and the plan is a pure map-side
     filter after the join (scales with the TRUE result size)."""
-    queries, base, dist = _pairwise_dist(metric, queries, base, qid, qvec, id_, vec, dim)
+    queries, base, dist = _pairwise_dist(metric, queries, base, dim)
     pairs = base.crossJoin(F.broadcast(queries))
     return (
-        pairs.select(F.col(qid), F.col(id_), dist.alias("dist"))
+        pairs.select(F.col("qid"), F.col("id"), dist.alias("dist"))
         .where(F.col("dist") <= radius2)
     )
 
@@ -221,11 +205,6 @@ def maxsim_topk(
     queries: DataFrame,
     entities: DataFrame,
     k: int = 3,
-    gid: str = "gid",
-    qid: str = "qid",
-    qvec: str = "qvec",
-    ent: str = "ent",
-    vec: str = "vec",
 ) -> DataFrame:
     """Late-interaction multi-vector scoring (ColBERT-style MaxSim; no
     reference counterpart — the multi-vector generalization of its
@@ -251,10 +230,7 @@ def maxsim_topk(
     is the oracle twin.
     """
     d = entities.crossJoin(F.broadcast(queries)).select(
-        F.col(gid).alias("gid"),
-        F.col(qid).alias("qid"),
-        F.col(ent).alias("ent"),
-        F.expr(V.dot(qvec, vec)).alias("ip"),
+        "gid", "qid", "ent", F.expr(V.dot("qvec", "vec")).alias("ip")
     )
     m = d.groupBy("gid", "qid", "ent").agg(
         F.round(F.max("ip"), 6).cast("decimal(38,6)").alias("ms")

@@ -486,6 +486,7 @@ def save_ivfpq_index(
     from .ivf import assign_clusters
 
     spark = base.sparkSession
+    base = _require_width(base, "vec", m * dsub, "save_ivfpq_index")
     assigned = assign_clusters(base, centroids)
     res = assigned.join(F.broadcast(centroids), "cluster_id").select(
         "id", "cluster_id", F.expr(V.sub("vec", "centroid")).alias("rvec")
@@ -538,6 +539,7 @@ def search_ivfpq_index(
     codes = spark.read.parquet(f"{path}/codes")
     centroids = spark.read.parquet(f"{path}/centroids")
     codebooks = spark.read.parquet(f"{path}/codebooks")
+    queries = _require_width(queries, "qvec", m * dsub, "search_ivfpq_index")
     probes = select_probes(queries, centroids, nprobe)
     sub_codes = codes.join(
         F.broadcast(probes.select("qid", "cluster_id")), "cluster_id"

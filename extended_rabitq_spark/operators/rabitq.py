@@ -222,9 +222,7 @@ def _mips_aug_expr(vec: str, m: float) -> str:
     )
 
 
-def prepare_queries_for_metric(
-    queries: DataFrame, meta: dict, qvec: str = "qvec"
-) -> DataFrame:
+def prepare_queries_for_metric(queries: DataFrame, meta: dict) -> DataFrame:
     """Apply an index's metric-specific query-side transform (from its
     meta): cosine L2-normalizes, ip appends the zero MIPS coordinate,
     l2 is the identity.  The single place that knows how a query enters
@@ -233,13 +231,13 @@ def prepare_queries_for_metric(
     CLI's graph-probed search)."""
     metric = meta.get("metric", "l2")
     if metric == "cosine":
-        return queries.withColumn(qvec, F.expr(V.l2_normalize(qvec)))
+        return queries.withColumn("qvec", F.expr(V.l2_normalize("qvec")))
     if metric == "ip":
         return queries.withColumn(
-            qvec,
+            "qvec",
             F.expr(
-                f"concat(transform({qvec}, x -> CAST(x AS DOUBLE)), "
-                f"array(CAST(0.0 AS DOUBLE)))"
+                "concat(transform(qvec, x -> CAST(x AS DOUBLE)), "
+                "array(CAST(0.0 AS DOUBLE)))"
             ),
         )
     return queries
@@ -784,8 +782,6 @@ def search_index(
     k: int = 10,
     nprobe: int | None = None,
     rerank_base: DataFrame | None = None,
-    qid: str = "qid",
-    qvec: str = "qvec",
     use_graph: bool | None = None,
     **search_kw,
 ) -> DataFrame:
@@ -829,9 +825,8 @@ def search_index(
         if nprobe is None:
             n_cents = spark.read.parquet(f"{path}/centroids").count()
             nprobe = max(1, n_cents // 16)
-        qdf = queries.select(F.col(qid).alias("qid"), F.col(qvec).alias("qvec"))
         return pq.search_ivfpq_index(
-            spark, path, qdf, nprobe=int(nprobe), k=k,
+            spark, path, queries.select("qid", "qvec"), nprobe=int(nprobe), k=k,
             rerank_base=rerank_base, **search_kw,
         )
 
@@ -857,17 +852,13 @@ def search_index(
 
         graph = ivf.load_centroid_graph(spark, path)
         # probes computed in the saved graph's geometry (same move as the
-        # CLI's --use-graph path); emitted with canonical qid — the
-        # original queries pass through rabitq_search untouched
-        gq = prepare_queries_for_metric(
-            queries.select(F.col(qid).alias("qid"), F.col(qvec).alias("qvec")),
-            meta,
-        )
+        # CLI's --use-graph path) — the original queries pass through
+        # rabitq_search untouched
+        gq = prepare_queries_for_metric(queries.select("qid", "qvec"), meta)
         probes = ivf.graph_probes(gq, graph, int(nprobe))
     return rabitq_search(
         queries, codes, cents_full, meta, nprobe=int(nprobe), k=k,
-        rerank_base=rerank_base, qid=qid, qvec=qvec, probes=probes,
-        **search_kw,
+        rerank_base=rerank_base, probes=probes, **search_kw,
     )
 
 
@@ -876,7 +867,7 @@ def search_index(
 # --------------------------------------------------------------------------
 
 
-def rotate_queries(queries: DataFrame, meta: dict, qid: str = "qid", qvec: str = "qvec") -> DataFrame:
+def rotate_queries(queries: DataFrame, meta: dict) -> DataFrame:
     """P2 on the query side: pad + rotate all queries in one Arrow-batched
     matmul (≡ the reference's single batch rotation,
     src/test_search.cpp:83-92).  → (qid, qrot ARRAY<DOUBLE>)."""
@@ -891,9 +882,9 @@ def rotate_queries(queries: DataFrame, meta: dict, qid: str = "qid", qvec: str =
             if len(pdf) == 0:
                 continue
             Q = np.zeros((len(pdf), D), dtype=np.float64)
-            Q[:, :dim] = np.array(pdf[qvec].tolist(), dtype=np.float64)
+            Q[:, :dim] = np.array(pdf["qvec"].tolist(), dtype=np.float64)
             QR = Q @ P_.T
-            yield pd.DataFrame({"qid": pdf[qid].to_numpy(), "qrot": list(QR)})
+            yield pd.DataFrame({"qid": pdf["qid"].to_numpy(), "qrot": list(QR)})
 
     return queries.mapInPandas(rot, "qid long, qrot array<double>")
 
@@ -1241,8 +1232,6 @@ def _fused_qprobe(
     centroids: DataFrame,
     meta: dict,
     nprobe: int,
-    qid: str,
-    qvec: str,
     with_probe_rank: bool = False,
 ) -> tuple[DataFrame, bool]:
     """Query-side prep of the cogroup scorer fused into ONE Arrow pass →
@@ -1297,7 +1286,7 @@ def _fused_qprobe(
                 continue
             for s in range(0, len(pdf), qblk):
                 blk = pdf.iloc[s : s + qblk]
-                Qraw = np.array(blk[qvec].tolist(), dtype=np.float64)  # g × dim
+                Qraw = np.array(blk["qvec"].tolist(), dtype=np.float64)  # g × dim
                 g = Qraw.shape[0]
                 Qpad = np.zeros((g, D))
                 Qpad[:, :dim] = Qraw
@@ -1308,7 +1297,7 @@ def _fused_qprobe(
                     sel = _probe_order(Qraw, cmat_, cids_, take)
                 qr = QR[:, None, :] - crot_[sel]  # g × take × D
                 cols = {
-                    "qid": np.repeat(blk[qid].to_numpy(), take),
+                    "qid": np.repeat(blk["qid"].to_numpy(), take),
                     "cluster_id": cids_[sel].ravel().astype(np.int32),
                     "qr": list(qr.reshape(g * take, D)),
                 }
@@ -1321,7 +1310,7 @@ def _fused_qprobe(
     schema = "qid long, cluster_id int, qr array<double>"
     if with_probe_rank:
         schema += ", probe_rank long"
-    return queries.select(qid, qvec).mapInPandas(prep, schema), full
+    return queries.select("qid", "qvec").mapInPandas(prep, schema), full
 
 
 def _probe_residuals(
@@ -1329,17 +1318,15 @@ def _probe_residuals(
     probes: DataFrame,
     centroids: DataFrame,
     meta: dict,
-    qid: str,
-    qvec: str,
     with_probe_rank: bool = False,
 ) -> DataFrame:
     """Declarative query prep for a probe DataFrame → (qid, cluster_id,
     qr [, probe_rank]): rotate the queries (P2), join them to their
     probes and subtract each probed cluster's rotated centroid."""
-    qrot = rotate_queries(queries, meta, qid=qid, qvec=qvec)
+    qrot = rotate_queries(queries, meta)
     rank_cols = [F.col("probe_rank")] if with_probe_rank else []
     return (
-        probes.select(F.col(qid).alias("qid"), "cluster_id", *rank_cols)
+        probes.select("qid", "cluster_id", *rank_cols)
         .join(qrot, on="qid")
         .join(F.broadcast(centroids.select("cluster_id", "centroid_rot")), on="cluster_id")
         .select(
@@ -1357,8 +1344,6 @@ def _arrow_scored_cogroup(
     centroids: DataFrame,
     meta: dict,
     nprobe: int,
-    qid: str,
-    qvec: str,
     estimator: str,
     probes: DataFrame | None = None,
     per_cluster_cut: int | None = None,
@@ -1397,12 +1382,11 @@ def _arrow_scored_cogroup(
         # in one Arrow pass, zero query-side shuffles — see _fused_qprobe;
         # bitwise-identical to the rotate/window/join chain it replaced)
         qprobe, full = _fused_qprobe(
-            queries, centroids, meta, nprobe, qid, qvec,
-            with_probe_rank=with_probe_rank,
+            queries, centroids, meta, nprobe, with_probe_rank=with_probe_rank
         )
     else:
         qprobe, full = _probe_residuals(
-            queries, probes, centroids, meta, qid, qvec, with_probe_rank
+            queries, probes, centroids, meta, with_probe_rank
         ), False
     cand = codes
     if not full:
@@ -1572,8 +1556,6 @@ def _sql_scored(
     centroids: DataFrame,
     meta: dict,
     nprobe: int,
-    qid: str,
-    qvec: str,
     estimator: str,
     probes: DataFrame | None = None,
 ) -> DataFrame:
@@ -1594,10 +1576,10 @@ def _sql_scored(
     if probes is None:  # W1 exact; callers may inject graph_probes (W2)
         probes = select_probes(
             queries, centroids.select("cluster_id", "centroid"), nprobe,
-            qid=qid, qvec=qvec, dim=int(meta["dim"]),
+            dim=int(meta["dim"]),
         )
     # Stage 1: per-(qid, cluster) rotated residual + moments
-    qprobe = _probe_residuals(queries, probes, centroids, meta, qid, qvec).select(
+    qprobe = _probe_residuals(queries, probes, centroids, meta).select(
         "qid",
         "cluster_id",
         "qr",
@@ -1641,14 +1623,10 @@ def _prepare_search_inputs(
     queries: DataFrame,
     rerank_base: DataFrame | None,
     meta: dict,
-    qid: str,
-    qvec: str,
-    probes: DataFrame | None = None,
     query_rows: list | None = None,
-) -> tuple[DataFrame, DataFrame | None, DataFrame | None, str, str]:
+) -> tuple[DataFrame, DataFrame | None]:
     """Shared search-entry prep (every search entry point — one
-    definition so their row-identical contracts can't drift):
-    canonicalize qid/qvec column names (on injected probes too), apply
+    definition so their row-identical contracts can't drift): apply
     the metric-aware query transform (cosine: unit-sphere L2 ≡ cosine
     ranking, dist = 2·(1−cos); ip: MIPS augmentation ‖q'−x'‖² = ‖q‖² +
     M² − 2⟨q,x⟩ — both monotone, tie-preserving), and move the rerank
@@ -1660,12 +1638,7 @@ def _prepare_search_inputs(
             f"(this index: {meta.get('metric')!r}) — the cosine/ip "
             "query transforms would be bypassed on the raw rows"
         )
-    if qid != "qid" or qvec != "qvec":
-        queries = queries.select(F.col(qid).alias("qid"), F.col(qvec).alias("qvec"))
-        if probes is not None and qid != "qid" and qid in probes.columns:
-            probes = probes.withColumnRenamed(qid, "qid")
-        qid, qvec = "qid", "qvec"
-    queries = prepare_queries_for_metric(queries, meta, qvec)
+    queries = prepare_queries_for_metric(queries, meta)
     if rerank_base is not None:
         if meta.get("metric") == "cosine":
             rerank_base = rerank_base.withColumn(
@@ -1675,7 +1648,7 @@ def _prepare_search_inputs(
             rerank_base = rerank_base.withColumn(
                 "vec", F.expr(_mips_aug_expr("vec", float(meta["mips_norm"])))
             )
-    return queries, rerank_base, probes, qid, qvec
+    return queries, rerank_base
 
 
 class _SearchPlan(NamedTuple):
@@ -1796,7 +1769,7 @@ def _scored_candidates(
         if "centroid_rot" not in centroids.columns:
             centroids = centroids_with_rotation(spark, centroids, meta)
         scored = _arrow_scored_cogroup(
-            queries, codes, centroids, meta, nprobe, "qid", "qvec", estimator,
+            queries, codes, centroids, meta, nprobe, estimator,
             probes, per_cluster_cut=per_cluster_cut,
             with_probe_rank=with_probe_rank,
         )
@@ -1812,8 +1785,6 @@ def rabitq_search(
     k: int,
     refine: int | None = 4,
     rerank_base: DataFrame | None = None,
-    qid: str = "qid",
-    qvec: str = "qvec",
     estimator: str = "searcher",
     probes: DataFrame | None = None,
     centroid_rows: list | None = None,
@@ -1872,8 +1843,8 @@ def rabitq_search(
     an L2-metric index; ``centroid_rows`` is unused when the plan picks
     the cogroup scorer.
     """
-    queries, rerank_base, probes, qid, qvec = _prepare_search_inputs(
-        queries, rerank_base, meta, qid, qvec, probes, query_rows
+    queries, rerank_base = _prepare_search_inputs(
+        queries, rerank_base, meta, query_rows
     )
     if refine_mode == "threshold":
         # the adaptive distk threshold is defined over the FULL candidate
@@ -1900,8 +1871,6 @@ def rabitq_threshold_stats(
     meta: dict,
     nprobe: int,
     k: int,
-    qid: str = "qid",
-    qvec: str = "qvec",
     estimator: str = "searcher",
 ) -> DataFrame:
     """Adaptive-prune activity attestation → (qid, n_pool, n_kept):
@@ -1918,7 +1887,7 @@ def rabitq_threshold_stats(
     outcomes are reproducible (same argument as rabitq_recall_counts).
     One pass over the pool — the marking windows and the counts share
     a single hashpartitioning(qid) exchange, no persist needed."""
-    queries = _prepare_search_inputs(queries, None, meta, qid, qvec)[0]
+    queries = _prepare_search_inputs(queries, None, meta)[0]
     scored, _ = _scored_candidates(queries, codes, centroids, meta, nprobe, estimator)
     return _threshold_marked(scored, k).groupBy("qid").agg(
         F.count("*").cast("long").alias("n_pool"),
@@ -1935,8 +1904,6 @@ def rabitq_search_sweep(
     k: int,
     refine: int | None = 4,
     rerank_base: DataFrame | None = None,
-    qid: str = "qid",
-    qvec: str = "qvec",
     estimator: str = "searcher",
     refine_mode: str = "rank",
     centroid_rows: list | None = None,
@@ -1967,8 +1934,8 @@ def rabitq_search_sweep(
     """
     if not nprobes:
         raise ValueError("rabitq_search_sweep: empty nprobe grid")
-    queries, rerank_base, _, qid, qvec = _prepare_search_inputs(
-        queries, rerank_base, meta, qid, qvec, query_rows=query_rows
+    queries, rerank_base = _prepare_search_inputs(
+        queries, rerank_base, meta, query_rows
     )
     np_max = max(nprobes)
     if refine_mode == "threshold":
@@ -1999,8 +1966,6 @@ def rabitq_range_search(
     radius2: float,
     nprobe: int,
     rerank_base: DataFrame,
-    qid: str = "qid",
-    qvec: str = "qvec",
     estimator: str = "searcher",
     probes: DataFrame | None = None,
     slack: float = 3.0,
@@ -2036,18 +2001,16 @@ def rabitq_range_search(
             "rabitq_range_search: metric='ip' indexes have no global "
             "radius semantics (per-query MIPS offset); use top-k search"
         )
-    queries, rerank_base, probes, qid, qvec = _prepare_search_inputs(
-        queries, rerank_base, meta, qid, qvec, probes
-    )
+    queries, rerank_base = _prepare_search_inputs(queries, rerank_base, meta)
     scored, _ = _scored_candidates(
         queries, codes, centroids, meta, nprobe, estimator, probes=probes
     )
     widened = F.col("est_dist") - slack * (F.col("est_dist") - F.col("est_lb"))
-    cand = scored.where(widened <= radius2).select(qid, "id")
+    cand = scored.where(widened <= radius2).select("qid", "id")
     return (
         rerank_base.join(F.broadcast(cand), on="id")
-        .join(F.broadcast(queries.select(qid, qvec)), on=qid)
-        .select(F.col(qid), F.col("id"),
-                distance_col("l2", qvec, "vec").alias("dist"))
+        .join(F.broadcast(queries.select("qid", "qvec")), on="qid")
+        .select(F.col("qid"), F.col("id"),
+                distance_col("l2", "qvec", "vec").alias("dist"))
         .where(F.col("dist") <= radius2)
     )

@@ -108,6 +108,40 @@ class TestWidthGuard:
         with pytest.raises(Exception, match="pq_adc_knn: vector NULL"):
             pq.pq_adc_knn(q, b, cb, M, DSUB, coarse_k=10, k=5).collect()
 
+    @staticmethod
+    def _defective(df, key, vec, defect):
+        """Row ``key`` of ``df`` gets a NULL or a 40-wide (short) vector."""
+        bad = F.lit(None) if defect == "NULL" else F.slice(vec, 1, 40)
+        return df.withColumn(vec, F.when(F.col(key) == 15, bad).otherwise(F.col(vec)))
+
+    @pytest.mark.parametrize("defect, msg", [
+        ("NULL", "vector NULL"), ("short", "vector width != m\\*dsub = 64"),
+    ], ids=["null", "short"])
+    def test_saved_index_build_rejects_bad_base(self, spark, tmp_path, defect, msg):
+        """save_ivfpq_index guards its base like ivfpq_knn: a NULL or
+        short vector fails the write instead of being encoded."""
+        _, b, _ = _frames(spark, nq=5)
+        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        cents = ivf_ops.label_centroids(emb.where(F.col("vec_id") >= 5))
+        b = self._defective(b, "id", "vec", defect)
+        with pytest.raises(Exception, match=f"save_ivfpq_index: {msg}"):
+            pq.save_ivfpq_index(b, cents, str(tmp_path / "idx"), m=M, dsub=DSUB)
+
+    @pytest.mark.parametrize("defect, msg", [
+        ("NULL", "vector NULL"), ("short", "vector width != m\\*dsub = 64"),
+    ], ids=["null", "short"])
+    def test_saved_index_search_rejects_bad_queries(self, spark, tmp_path, defect, msg):
+        """search_ivfpq_index guards its queries with dim = m·dsub from
+        meta.json: a NULL or short query fails instead of scoring NULL."""
+        q, b, _ = _frames(spark, nq=20)
+        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        cents = ivf_ops.label_centroids(emb.where(F.col("vec_id") >= 20))
+        path = str(tmp_path / "idx")
+        pq.save_ivfpq_index(b, cents, path, m=M, dsub=DSUB)
+        q = self._defective(q, "qid", "qvec", defect)
+        with pytest.raises(Exception, match=f"search_ivfpq_index: {msg}"):
+            pq.search_ivfpq_index(spark, path, q, nprobe=2, coarse_k=10, k=5).collect()
+
     def test_matching_width_unchanged(self, spark):
         """The guard keeps every row: results identical to brute force
         at full coarse_k (the exactness theorem test, re-asserted with

@@ -616,10 +616,8 @@ def _sql_search(qs, idx, cents_full, meta, nprobe, k, refine=4,
     """The declarative reference search: _sql_scored + the shared phase 2."""
     from extended_rabitq_spark.operators import rabitq
 
-    q, rb, _, qid, qvec = rabitq._prepare_search_inputs(
-        qs, rerank_base, meta, "qid", "qvec"
-    )
-    scored = rabitq._sql_scored(q, idx, cents_full, meta, nprobe, qid, qvec, estimator)
+    q, rb = rabitq._prepare_search_inputs(qs, rerank_base, meta)
+    scored = rabitq._sql_scored(q, idx, cents_full, meta, nprobe, estimator)
     return rabitq._finalize_topk(scored, q, k, refine, rb, dim=int(meta["dim"]))
 
 
@@ -788,9 +786,7 @@ class TestCogroupScorer:
 
         base, qs, idx, cents_full, meta = _search_fixture(spark)
         for nprobe, full in ((3, False), (99, True)):
-            fused, fused_full = rabitq._fused_qprobe(
-                qs, cents_full, meta, nprobe, "qid", "qvec"
-            )
+            fused, fused_full = rabitq._fused_qprobe(qs, cents_full, meta, nprobe)
             assert fused_full == full
             qrot = rabitq.rotate_queries(qs, meta)
             if full:
@@ -1173,7 +1169,7 @@ class TestCogroupScorer:
             ).collect()
         }
         # independent recount straight off the scored pool + shortlist
-        q2 = _prepare_search_inputs(qs, None, meta, "qid", "qvec")[0]
+        q2 = _prepare_search_inputs(qs, None, meta)[0]
         scored = _scored_candidates(
             q2, idx, cents_full, meta, nprobe, "searcher"
         )[0].persist()
@@ -1558,58 +1554,28 @@ class TestRangeSearch:
         assert exact == fast and len(exact) > 0
 
 
-class TestCustomColumnNames:
-    def test_search_and_range_accept_renamed_query_columns(self, spark):
+class TestCanonicalColumns:
+    def test_wrongly_named_query_frame_fails_at_analysis(self, spark):
+        """Queries are (qid, qvec): a frame named (query_id, qv) raises
+        Spark's AnalysisException naming `qid` on the driver while the
+        plan is built (no action is called here), on both scorer routes
+        and in the exact KNN, never from a Python worker."""
         import pyspark.sql.functions as F
+        from pyspark.errors import AnalysisException
 
-        from conftest import SF_SMOKE
-        from extended_rabitq_spark.operators import ivf, rabitq
+        from extended_rabitq_spark.operators import knn, rabitq
 
-        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        base = emb.where(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
-        idx, meta = rabitq.build_index(base, cents, total_bits=4)
-        cf = rabitq.centroids_with_rotation(spark, cents, meta)
-        qs = emb.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
-        res = rabitq.rabitq_search(
-            qs, idx, cf, meta, nprobe=3, k=5,
-            qid="query_id", qvec="qv", rerank_base=base,
-        ).collect()
-        assert len(res) == 50
-        rng = rabitq.rabitq_range_search(
-            qs, idx, cf, meta, radius2=1.6, nprobe=cents.count(),
-            rerank_base=base, qid="query_id", qvec="qv",
-        ).collect()
-        assert len(rng) > 0
-
-
-def test_custom_qid_with_injected_graph_probes(spark):
-    """Custom qid name + injected probes must canonicalize together."""
-    import pyspark.sql.functions as F
-
-    from conftest import SF_SMOKE
-    from extended_rabitq_spark.operators import ivf, rabitq
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    base = emb.where(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-    )
-    cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
-    idx, meta = rabitq.build_index(base, cents, total_bits=4)
-    cf = rabitq.centroids_with_rotation(spark, cents, meta)
-    qs = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    graph = ivf.build_centroid_graph(cents, M=8)
-    gp = ivf.graph_probes(qs, graph, nprobe=3, qid="query_id", qvec="qv")
-    res = rabitq.rabitq_search(
-        qs, idx, cf, meta, nprobe=3, k=5, qid="query_id", qvec="qv", probes=gp
-    ).collect()
-    assert len(res) == 50
+        base, qs, idx, cents_full, meta = _search_fixture(spark)
+        bad = qs.select(F.col("qid").alias("query_id"), F.col("qvec").alias("qv"))
+        for threshold in (FITS_ALL, FITS_NONE):
+            with broadcast_threshold(spark, threshold), \
+                    pytest.raises(AnalysisException, match="`qid`"):
+                rabitq.rabitq_search(
+                    bad, idx, cents_full, meta, nprobe=3, k=5, rerank_base=base
+                )
+        with pytest.raises(AnalysisException, match="`qid`"):
+            knn.exact_knn(bad, base, k=5)
+        idx.unpersist()
 
 
 class TestCosineMetricIndex:
