@@ -35,11 +35,11 @@ fraction, which is the quantity this operator exists to shrink.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ivf import select_probes
-from .knn import distance_col
+from .knn import distance_col, topk
 from . import rabitq as rabitq_ops
 
 
@@ -82,14 +82,7 @@ def exact_probe_search(
     cand = indexed_base.join(
         F.broadcast(probes.select("qid", "cluster_id")), on="cluster_id", how="inner"
     ).join(F.broadcast(queries.select("qid", "qvec")), on="qid", how="inner")
-    dist = distance_col("l2", "qvec", "vec")
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cand.select(F.col("qid"), F.col("id"), dist.alias("dist"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "id", "dist")
-    )
+    return topk(cand.select("qid", "id", distance_col("l2", "qvec", "vec").alias("dist")), k)
 
 
 def escalation_verdicts(

@@ -35,10 +35,11 @@ touched only by the rank-bounded rerank join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from .knn import rerank_exact, topk
 
 
 def binary_codes(df: DataFrame, vec: str = "vec", id_: str = "id") -> DataFrame:
@@ -72,12 +73,9 @@ def hamming_knn(queries: DataFrame, base: DataFrame, k: int) -> DataFrame:
 
     ``hamming`` is BIGINT — integer end-to-end, no float folds."""
     pairs = base.crossJoin(F.broadcast(queries))
-    w = Window.partitionBy("qid").orderBy(F.col("hamming").asc(), F.col("id").asc())
-    return (
-        pairs.select("qid", "id", F.expr(V.hamming("qvec", "vec")).alias("hamming"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "id", "hamming")
+    return topk(
+        pairs.select("qid", "id", F.expr(V.hamming("qvec", "vec")).alias("hamming")),
+        k, by="hamming",
     )
 
 
@@ -92,13 +90,7 @@ def hamming_knn_packed(queries: DataFrame, base: DataFrame, k: int) -> DataFrame
         "CAST(aggregate(zip_with(qwords, words, (a, b) -> bit_count(a ^ b)), "
         "0, (acc, v) -> acc + v) AS BIGINT)"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("hamming").asc(), F.col("id").asc())
-    return (
-        pairs.select("qid", "id", F.expr(ham).alias("hamming"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "id", "hamming")
-    )
+    return topk(pairs.select("qid", "id", F.expr(ham).alias("hamming")), k, by="hamming")
 
 
 def hamming_rerank_knn(
@@ -106,13 +98,4 @@ def hamming_rerank_knn(
 ) -> DataFrame:
     """Two-phase binary search → (qid, rank, id, dist): Hamming shortlist
     (ties → smaller id), exact fp32 L2 re-rank of the shortlist only."""
-    cand = hamming_knn(queries, base, k=coarse_k)
-    short = cand.join(F.broadcast(queries), "qid").select("qid", "id", "qvec")
-    wf = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        base.join(F.broadcast(short), "id")
-        .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))
-        .withColumn("rank", F.row_number().over(wf).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "id", "dist")
-    )
+    return rerank_exact(hamming_knn(queries, base, k=coarse_k), queries, base, k)

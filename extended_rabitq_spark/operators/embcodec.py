@@ -60,8 +60,9 @@ def knn_int8_rerank(
     phase 1 ranks by L2 on the dequantized codes (the cheap scan — at 100 TB
     the fp32 column stays in cold storage and only ``array<tinyint>`` codes
     are read, 4× less IO), keeps ``coarse_k`` per query; phase 2 recomputes
-    the EXACT fp32 distance on those candidates only (a bounded semi-join —
-    never a second full scan) and keeps top ``k``.
+    the EXACT fp32 distance on those candidates only
+    (:func:`knn.rerank_exact`: the shortlist broadcasts into the fp32 scan,
+    which is never shuffled) and keeps top ``k``.
 
     This is the scalar-quantization serving pattern (the SQ analog of the
     RaBitQ estimate→rerank pipeline, E1-E3 of SURVEY §2): estimate on codes,
@@ -72,9 +73,8 @@ def knn_int8_rerank(
 
     ``queries``: (qid, qvec); ``base``: (id, vec) fp32.
     """
-    from pyspark.sql import Window
-
     from ..functions import vector as V
+    from .knn import rerank_exact, topk
 
     # Materialize scale → codes → dequantized array as COLUMNS in staged
     # projections: embedding a compound expression inside zip_with would
@@ -86,34 +86,10 @@ def knn_int8_rerank(
     dq = dequantize_embeddings_int8(
         quantize_embeddings_int8(base, vec="vec"), vec="dvec"
     )
-    cand = (
-        dq.crossJoin(F.broadcast(queries))
-        .select(
-            "qid", "id", "qvec",
-            F.expr(V.l2sq("qvec", "dvec")).alias("dist_q"),
-        )
-        .withColumn(
-            "crank",
-            F.row_number()
-            .over(Window.partitionBy("qid").orderBy(F.col("dist_q").asc(), F.col("id").asc()))
-            .cast("bigint"),
-        )
-        .where(F.col("crank") <= coarse_k)
+    cand = dq.crossJoin(F.broadcast(queries)).select(
+        "qid", "id", F.expr(V.l2sq("qvec", "dvec")).alias("dist_q")
     )
-    # Exact rerank: broadcast the tiny (qid, id, qvec) shortlist so the
-    # fp32 base is scanned in place, never shuffled (the same shape as
-    # rabitq's rerank_base join).
-    out = (
-        base.join(F.broadcast(cand.select("qid", "id", "qvec")), "id")
-        .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))
-        .withColumn(
-            "rank",
-            F.row_number()
-            .over(Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc()))
-            .cast("bigint"),
-        )
-    )
-    return out.where(F.col("rank") <= k).select("qid", "rank", "id", "dist")
+    return rerank_exact(topk(cand, coarse_k, by="dist_q"), queries, base, k)
 
 
 def d_knn_int8_rerank(nq: int = 10, coarse_k: int = 50, k: int = 10) -> str:

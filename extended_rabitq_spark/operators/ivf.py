@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..localdf import local_rows_df
-from .knn import distance_col
+from .knn import distance_col, topk
 
 
 def label_centroids(base: DataFrame, vec: str = "embedding", label: str = "label") -> DataFrame:
@@ -351,17 +351,7 @@ def ivf_search(
         F.broadcast(probes.select("qid", "cluster_id")), on="cluster_id", how="inner"
     ).join(F.broadcast(queries.select("qid", "qvec")), on="qid", how="inner")
     dist = distance_col(metric, "qvec", "vec", dim)
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cand.select(F.col("qid"), F.col("id"), dist.alias("dist"))
-        .select(
-            F.col("qid"),
-            F.row_number().over(w).cast("long").alias("rank"),
-            F.col("id"),
-            F.col("dist"),
-        )
-        .where(F.col("rank") <= k)
-    )
+    return topk(cand.select("qid", "id", dist.alias("dist")), k)
 
 
 def sampled_kmeans_centroids(

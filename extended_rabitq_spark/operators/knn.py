@@ -20,7 +20,11 @@ Two Spark physical strategies:
   ``inc/index/fastscan/FastScan.hpp``).
 
 Tie-breaking is ``ORDER BY dist, id`` — a deterministic total order; the
-reference keeps first-inserted on exact ties (SURVEY §4.2.1).
+reference keeps first-inserted on exact ties (SURVEY §4.2.1).  Every
+per-query top-k in the engine is :func:`topk`, which writes that order
+once, with NULL distances (a NULL or short vector) ranked last as the
+DuckDB oracles rank them; every estimate → exact-rerank operator
+finishes through :func:`rerank_exact`.
 """
 
 from __future__ import annotations
@@ -54,6 +58,35 @@ def distance_col(metric: str, a: str, b: str, dim: int | None = None) -> F.Colum
     functions.vector._unrolled_fold).  Measured win applies to the l2
     kernel only; see _METRIC_EXPRS note."""
     return F.expr(_METRIC_EXPRS[metric](a, b, dim))
+
+
+def topk(df: DataFrame, k: int, by: str = "dist") -> DataFrame:
+    """Per-query top-k → (qid, rank, id, <by>): ``row_number()`` over
+    ``<by> ASC NULLS LAST, id ASC`` per qid, kept while rank ≤ k.  Spark
+    sorts ASC with NULLs first; the oracles (DuckDB) sort them last, so
+    the order is spelled out.  SQL text: one selectExpr and one where,
+    one py4j call each."""
+    return df.selectExpr(
+        "qid",
+        f"CAST(row_number() OVER (PARTITION BY qid ORDER BY {by} ASC NULLS LAST, "
+        "id ASC) AS BIGINT) AS rank",
+        "id",
+        by,
+    ).where(f"`rank` <= {int(k)}")
+
+
+def rerank_exact(
+    shortlist: DataFrame, queries: DataFrame, base: DataFrame, k: int
+) -> DataFrame:
+    """Exact re-rank of a (qid, id) shortlist → (qid, rank, id, dist): the
+    shortlist picks up its query vectors from the broadcast queries, then
+    broadcasts into the base scan, so the (id, vec) base is read in place
+    and never shuffled; dist is the full-width squared L2."""
+    short = shortlist.select("qid", "id").join(
+        F.broadcast(queries.select("qid", "qvec")), "qid"
+    )
+    pairs = base.select("id", "vec").join(F.broadcast(short), "id")
+    return topk(pairs.select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist")), k)
 
 
 def _pairwise_dist(
@@ -92,22 +125,7 @@ def exact_knn(
     """
     queries, base, dist = _pairwise_dist(metric, queries, base, dim)
     pairs = base.crossJoin(F.broadcast(queries))
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    # One projection for rank + output order instead of the
-    # withColumn/where/select chain (r11): every DataFrame op re-analyzes
-    # the accumulated plan eagerly, and the unrolled distance tree makes
-    # each pass ~25-35ms of driver time per build — same plan semantics,
-    # one fewer analysis pass.
-    return (
-        pairs.select(F.col("qid"), F.col("id"), dist.alias("dist"))
-        .select(
-            F.col("qid"),
-            F.row_number().over(w).cast("long").alias("rank"),
-            F.col("id"),
-            F.col("dist"),
-        )
-        .where(F.col("rank") <= k)
-    )
+    return topk(pairs.select("qid", "id", dist.alias("dist")), k)
 
 
 def exact_knn_combined(
@@ -172,12 +190,7 @@ def exact_knn_combined(
             distance_col(metric, "qvec", "vec", dim).alias("dist"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "id", "dist")
-    )
+    return topk(cand, k)
 
 
 def range_search(

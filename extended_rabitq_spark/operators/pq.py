@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from ..staging import stage_eager as _stage_eager, stage_lazy as _stage_lazy
 
 from ..functions import vector as V
+from .knn import rerank_exact, topk
 
 
 def _require_width(df: DataFrame, vec: str, dim: int, ctx: str) -> DataFrame:
@@ -143,26 +144,10 @@ def pq_adc_knn(
     base = _require_width(base, "vec", dim, "pq_adc_knn")
     queries = _require_width(queries, "qvec", dim, "pq_adc_knn")
     decoded = pq_decode(pq_encode(base, codebooks, m, dsub), codebooks)
-    wc = Window.partitionBy("qid").orderBy(F.col("dist_q").asc(), F.col("id").asc())
-    cand = (
-        decoded.crossJoin(F.broadcast(queries))
-        .select("qid", "id", "qvec", F.expr(V.l2sq("qvec", "dvec", dim)).alias("dist_q"))
-        .select("qid", "id", "qvec", F.row_number().over(wc).cast("bigint").alias("crank"))
-        .where(F.col("crank") <= coarse_k)
+    cand = decoded.crossJoin(F.broadcast(queries)).select(
+        "qid", "id", F.expr(V.l2sq("qvec", "dvec", dim)).alias("dist_q")
     )
-    wf = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    # Exact rerank stays FULL-WIDTH (no dim hint) as defense in depth:
-    # _require_width already rejects m*dsub != size(vec), the one case
-    # where an unrolled dim would truncate the "exact" distances.  The
-    # shortlist is qid×coarse_k rows, so the HOF kernel costs nothing.
-    out = (
-        base.join(F.broadcast(cand.select("qid", "id", "qvec")), "id")
-        .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))
-        .select(
-            "qid", F.row_number().over(wf).cast("bigint").alias("rank"), "id", "dist"
-        )
-    )
-    return out.where(F.col("rank") <= k)
+    return rerank_exact(topk(cand, coarse_k, by="dist_q"), queries, base, k)
 
 
 def residual_octant_codebooks(res_subs: DataFrame) -> DataFrame:
@@ -289,27 +274,12 @@ def ivfpq_knn(
             ).alias("avec"),
         )
     )
-    wc = Window.partitionBy("qid").orderBy(F.col("dist_q").asc(), F.col("id").asc())
     cand = (
         approx.join(F.broadcast(probes.select("qid", "cluster_id")), "cluster_id")
         .join(F.broadcast(queries), "qid")
-        .select("qid", "id", "qvec", F.expr(V.l2sq("qvec", "avec", dim)).alias("dist_q"))
-        .select("qid", "id", "qvec", F.row_number().over(wc).cast("bigint").alias("crank"))
-        .where(F.col("crank") <= coarse_k)
+        .select("qid", "id", F.expr(V.l2sq("qvec", "avec", dim)).alias("dist_q"))
     )
-    wf = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    # Exact rerank stays FULL-WIDTH (no dim hint) as defense in depth:
-    # _require_width already rejects m*dsub != size(vec), the one case
-    # where an unrolled dim=m*dsub would truncate the exact distances;
-    # the shortlist is tiny, so the HOF kernel costs nothing.
-    return (
-        base.join(F.broadcast(cand.select("qid", "id", "qvec")), "id")
-        .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))
-        .select(
-            "qid", F.row_number().over(wf).cast("bigint").alias("rank"), "id", "dist"
-        )
-        .where(F.col("rank") <= k)
-    )
+    return rerank_exact(topk(cand, coarse_k, by="dist_q"), queries, base, k)
 
 
 def _lloyd_subspace(X, ksub: int, iters: int, seed: int):
@@ -565,28 +535,13 @@ def search_ivfpq_index(
         "qid", "id",
         F.expr("zip_with(centroid, dvec, (x, y) -> CAST(x AS DOUBLE) + CAST(y AS DOUBLE))").alias("avec"),
     )
-    wc = Window.partitionBy("qid").orderBy(F.col("dist_q").asc(), F.col("id").asc())
-    cand = (
-        apx.join(F.broadcast(queries), "qid")
-        .select("qid", "id", "qvec", F.expr(V.l2sq("qvec", "avec")).alias("dist_q"))
-        .withColumn("crank", F.row_number().over(wc).cast("bigint"))
-        .where(F.col("crank") <= coarse_k)
+    cand = apx.join(F.broadcast(queries), "qid").select(
+        "qid", "id", F.expr(V.l2sq("qvec", "avec")).alias("dist_q")
     )
     if rerank_base is None:
-        wf = Window.partitionBy("qid").orderBy(F.col("dist_q").asc(), F.col("id").asc())
-        return (
-            cand.withColumn("rank", F.row_number().over(wf).cast("bigint"))
-            .where(F.col("rank") <= k)
-            .select("qid", "rank", "id", F.col("dist_q").alias("dist"))
-        )
-    wf = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        rerank_base.join(F.broadcast(cand.select("qid", "id", "qvec")), "id")
-        .select("qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist"))
-        .withColumn("rank", F.row_number().over(wf).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "id", "dist")
-    )
+        # the first min(k, coarse_k) of the shortlist's own (dist_q, id) order
+        return topk(cand, min(k, coarse_k), by="dist_q").withColumnRenamed("dist_q", "dist")
+    return rerank_exact(topk(cand, coarse_k, by="dist_q"), queries, rerank_base, k)
 
 
 def opq_adc_knn(

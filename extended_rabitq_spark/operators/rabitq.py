@@ -64,6 +64,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..functions import vector as V
 from ..localdf import local_rows_df
 from .ivf import select_probes
+from .knn import topk
 
 DEFAULT_SEED = 42
 
@@ -790,8 +791,11 @@ def search_index(
     :func:`rabitq_search` with the index's OWN recorded defaults.
 
     - ``nprobe``: defaults to the persisted ``tuned_nprobe`` (written by
-      ``search --target-recall --save-tuned``); warns when the recorded
-      tune missed its target (``tuned_target_met`` false); falls back to
+      ``search --target-recall --save-tuned``), served under the phase-2
+      config the tune measured (``tuned_refine`` and ``tuned_refine_mode``
+      unless the caller passes ``refine``/``refine_mode``); warns when the
+      recorded tune missed its target (``tuned_target_met`` false) or ran
+      with a rerank that no ``rerank_base`` reproduces; falls back to
       ``max(1, K/16)`` — the reference's published operating points
       cluster around nprobe ≈ K/1000..K/100, but an untuned index gets a
       recall-leaning default.
@@ -833,16 +837,29 @@ def search_index(
     codes, cents_full, meta = load_index(spark, path)
     if nprobe is None:
         nprobe = meta.get("tuned_nprobe")
-        if nprobe is not None and not meta.get("tuned_target_met", True):
-            warnings.warn(
-                f"search_index({path}): persisted tuned_nprobe={nprobe} "
-                f"missed its recall target "
-                f"(tuned_recall={meta.get('tuned_recall')}, "
-                f"tuned_target={meta.get('tuned_target')}) — re-tune or "
-                "pass nprobe explicitly",
-                stacklevel=2,
-            )
-        if nprobe is None:
+        if nprobe is not None:
+            # tuned_recall holds only under the phase-2 config it was
+            # measured with
+            for key in ("refine", "refine_mode"):
+                if f"tuned_{key}" in meta:
+                    search_kw.setdefault(key, meta[f"tuned_{key}"])
+            if meta.get("tuned_rerank") and rerank_base is None:
+                warnings.warn(
+                    f"search_index({path}): persisted tuned_nprobe={nprobe} "
+                    "was tuned with an exact rerank — pass rerank_base to "
+                    "reach its tuned_recall",
+                    stacklevel=2,
+                )
+            if not meta.get("tuned_target_met", True):
+                warnings.warn(
+                    f"search_index({path}): persisted tuned_nprobe={nprobe} "
+                    f"missed its recall target "
+                    f"(tuned_recall={meta.get('tuned_recall')}, "
+                    f"tuned_target={meta.get('tuned_target')}) — re-tune or "
+                    "pass nprobe explicitly",
+                    stacklevel=2,
+                )
+        else:
             nprobe = max(1, cents_full.count() // 16)
     probes = None
     if use_graph is None:
@@ -1445,8 +1462,9 @@ def _threshold_marked(scored: DataFrame, k: int) -> DataFrame:
     share one hashpartitioning(qid) exchange.  Shared by the search
     path (:func:`_threshold_shortlist`) and the attestation stats
     (:func:`rabitq_threshold_stats`) so the two can never drift."""
+    # knn.topk's order, so the final top-k reuses this window's sort
     w_est = Window.partitionBy("qid").orderBy(
-        F.col("est_dist").asc(), F.col("id").asc()
+        F.col("est_dist").asc_nulls_last(), F.col("id").asc()
     )
     w_q = Window.partitionBy("qid")
     return (
@@ -1542,12 +1560,7 @@ def _finalize_topk(
         else:
             pairs = pairs.join(F.broadcast(keys), on="id")
         shortlist = _exact_rerank(pairs, dim, rerank_queries)
-    return shortlist.selectExpr(
-        "qid",
-        "CAST(row_number() OVER (PARTITION BY qid ORDER BY est_dist, id) AS BIGINT) AS rank",
-        "id",
-        "est_dist",
-    ).where(f"`rank` <= {int(k)}")
+    return topk(shortlist, k, by="est_dist")
 
 
 def _sql_scored(

@@ -348,49 +348,23 @@ def mrl_prefix_knn(
     This is the MRL/truncation serving pattern for Matryoshka-trained
     embeddings: the coarse phase touches ``prefix/D`` of the vector
     bytes.  At 100 TB you materialize the prefix as its own (zone-mapped)
-    column so phase 1 prunes IO columnar-ly; phase 2 is a candidate
-    semi-join of NQ·coarse_k rows — never a second full scan.
+    column so phase 1 prunes IO columnar-ly; phase 2
+    (:func:`knn.rerank_exact`) broadcasts the NQ·coarse_k shortlist into
+    the base scan, so full vectors are read in place and never shuffled.
 
     Semantics (not an approximation of something else) are pinned by the
     oracle: the same two-phase plan expressed in SQL, bitwise."""
     from ..functions import vector as V
+    from .knn import rerank_exact, topk
 
-    cand = (
-        base.crossJoin(F.broadcast(queries))
-        .select(
-            "qid",
-            "id",
-            "qvec",
-            "vec",
-            F.expr(
-                V.l2sq(f"slice(qvec, 1, {prefix})", f"slice(vec, 1, {prefix})")
-            ).alias("dist_p"),
-        )
-        .withColumn(
-            "crank",
-            F.row_number()
-            .over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("dist_p").asc(), F.col("id").asc()
-                )
-            )
-            .cast("bigint"),
-        )
-        .where(F.col("crank") <= coarse_k)
+    cand = base.crossJoin(F.broadcast(queries)).select(
+        "qid",
+        "id",
+        F.expr(
+            V.l2sq(f"slice(qvec, 1, {prefix})", f"slice(vec, 1, {prefix})")
+        ).alias("dist_p"),
     )
-    final = cand.select(
-        "qid", "id", F.expr(V.l2sq("qvec", "vec")).alias("dist")
-    ).withColumn(
-        "rank",
-        F.row_number()
-        .over(
-            Window.partitionBy("qid").orderBy(
-                F.col("dist").asc(), F.col("id").asc()
-            )
-        )
-        .cast("bigint"),
-    )
-    return final.where(F.col("rank") <= k).select("qid", "rank", "id", "dist")
+    return rerank_exact(topk(cand, coarse_k, by="dist_p"), queries, base, k)
 
 
 def d_mrl_prefix_knn(

@@ -773,8 +773,6 @@ def mine_hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     index shortlist (knn_filtered_rabitq's semi-join shape)."""
     from ..functions import vector as V
 
-    from pyspark.sql import Window
-
     # staged per-row norms for the cos gate + unrolled l2 (r10): the
     # NQ·N stage pays one unrolled l2 + one dot fold per pair instead
     # of one HOF l2 + three folds — bitwise-identical
@@ -787,10 +785,4 @@ def mine_hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(V.l2sq("qvec", "vec", dim)).alias("dist"),
         F.expr(V.cosine_sim_staged("qvec", "vec", "_qn", "_bn")).alias("cos"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        pairs.where(F.col("cos") < 0.92)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= K)
-        .select("qid", "rank", "id", "dist")
-    )
+    return knn.topk(pairs.where(F.col("cos") < 0.92), K)

@@ -1906,6 +1906,53 @@ class TestSearchIndexSugar:
         _assert_rank_identical(_res_map(got_ng), _res_map(exp))
         idx.unpersist()
 
+    def test_search_index_serves_tuned_phase2(self, spark, tmp_path, monkeypatch):
+        """The persisted tuned_nprobe is served under the phase-2 config
+        the tune measured (tuned_refine, tuned_refine_mode) unless the
+        caller passes its own; a tune run with a rerank warns when no
+        rerank_base is given."""
+        import json as _json
+        import warnings
+
+        from extended_rabitq_spark.operators import rabitq
+
+        base, qs, idx, cents_full, meta = _search_fixture(spark)
+        path = str(tmp_path / "tunedidx")
+        rabitq.save_index(idx, cents_full.select("cluster_id", "centroid"), meta, path)
+        idx.unpersist()
+        with open(f"{path}/meta.json") as fh:
+            m = _json.load(fh)
+        m.update(tuned_nprobe=3, tuned_target_met=True, tuned_refine=None,
+                 tuned_refine_mode="threshold", tuned_rerank=True)
+        with open(f"{path}/meta.json", "w") as fh:
+            _json.dump(m, fh)
+        seen = []
+        monkeypatch.setattr(
+            rabitq, "rabitq_search", lambda *a, **kw: seen.append(kw) or "res"
+        )
+
+        def serve(**kw):
+            with warnings.catch_warnings(record=True) as w:
+                warnings.simplefilter("always")
+                assert rabitq.search_index(spark, path, qs, k=5, **kw) == "res"
+            return seen[-1], [str(x.message) for x in w]
+
+        kw, msgs = serve()
+        assert kw["nprobe"] == 3
+        assert kw["refine"] is None and kw["refine_mode"] == "threshold"
+        assert any("tuned with an exact rerank" in x for x in msgs)
+
+        kw, msgs = serve(rerank_base=base, refine=2, refine_mode="rank")
+        assert kw["refine"] == 2 and kw["refine_mode"] == "rank"
+        assert not any("exact rerank" in x for x in msgs)
+
+        # an explicit nprobe is not the tuned operating point: no tuned
+        # phase-2 config rides along
+        kw, msgs = serve(nprobe=2)
+        assert kw["nprobe"] == 2
+        assert "refine" not in kw and "refine_mode" not in kw
+        assert not msgs
+
 
 class TestRecallCountsAttestation:
     """rabitq_recall_counts: the approximate path's hashable driver row."""
