@@ -760,15 +760,15 @@ def main() -> None:
             .limit(500)
             .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
         )
+        # rotate (and collect) the centroids once, outside the timed searches
+        cents_full2 = rabitq_ops.centroids_with_rotation(spark, cents2, meta2)
         rows = harness.nprobe_sweep(
             queries2,
             base2,
-            cents2,
+            lambda nprobe: rabitq_ops.rabitq_search(
+                queries2, index2, cents_full2, meta2, nprobe=nprobe, k=10
+            ),
             k=10,
-            mode="rabitq",
-            index_df=index2,
-            centroids_full=rabitq_ops.centroids_with_rotation(spark, cents2, meta2),
-            meta=meta2,
         )
         results_dir = os.environ.get("SPARK_GRAFT_RESULTS_DIR")
         if results_dir:

@@ -92,12 +92,13 @@ def cmd_search(spark: SparkSession, a: argparse.Namespace) -> int:
     import json as _json
     import os as _os
 
-    from .harness import nprobe_sweep, save_results_csv, tune_nprobe
+    from .harness import DEFAULT_GRID, nprobe_sweep, save_results_csv, tune_nprobe
     from .operators import rabitq
 
-    # Fail at the dispatch boundary, not deep inside plan analysis: the
-    # sweep harness below is RaBitQ-specific; other index kinds serve
-    # through operators.rabitq.search_index (which dispatches on kind).
+    # Fail at the dispatch boundary, not deep inside plan analysis: this
+    # command sweeps a RaBitQ index only (the harness itself times any
+    # search(nprobe)); other index kinds serve through
+    # operators.rabitq.search_index (which dispatches on kind).
     _kind = rabitq._read_meta(a.index).get("kind")
     if _kind is not None and _kind != "rabitq":
         raise SystemExit(
@@ -112,24 +113,13 @@ def cmd_search(spark: SparkSession, a: argparse.Namespace) -> int:
         F.col("id").alias("qid"), F.col("vec").alias("qvec")
     )
     base = _vectors(spark, a.base)
-    centroids = cents_full.select("cluster_id", "centroid")
-    grid = [int(x) for x in a.grid.split(",")] if a.grid else None
+    grid = [int(x) for x in a.grid.split(",")] if a.grid else DEFAULT_GRID
     metric = meta.get("metric", "l2")
-    probes_factory = None
-    if getattr(a, "amortized", False) and a.use_graph:
+    if a.amortized and a.use_graph:
         raise SystemExit(
             "search: --amortized is incompatible with --use-graph "
             "(graph probes carry no probe ranks)"
         )
-    if a.use_graph:
-        from .operators import ivf
-
-        graph = ivf.load_centroid_graph(spark, a.index)
-        # enter the saved graph's geometry: ip graphs are (d+1)-dim
-        # MIPS-augmented, cosine's normalize is a harmless no-op for
-        # ranking (per-query positive scale), l2 is the identity
-        gq = rabitq.prepare_queries_for_metric(queries, meta)
-        probes_factory = lambda np_: ivf.graph_probes(gq, graph, np_)  # noqa: E731
     gt_df = None
     if getattr(a, "gt_parquet", None):
         # the reference's compute_gt.py/test_search split: GT is computed
@@ -180,19 +170,52 @@ def cmd_search(spark: SparkSession, a: argparse.Namespace) -> int:
                 _json.dump({**prov, "prov_key": prov_key, "k": a.k}, _f)
             gt_df = spark.read.parquet(a.gt_parquet)
             print(f"search: computed + cached GT -> {a.gt_parquet}")
-    if a.target_recall is not None:
-        np_sel, rows = tune_nprobe(
-            queries, base, centroids, target_recall=a.target_recall,
-            k=a.k, grid=grid, mode="rabitq",
-            index_df=codes, centroids_full=cents_full, meta=meta,
-            metric=metric, probes_factory=probes_factory, rounds=a.rounds,
-            amortized=a.amortized, gt=gt_df,
-            # the tuned nprobe must be measured under the SAME phase-2
-            # config it will serve with — a γ/rerank mismatch would pick
-            # an nprobe whose recorded recall the serving path can't hit
-            refine=a.refine if a.refine > 0 else None,
-            rerank=a.rerank, refine_mode=a.refine_mode,
+    # the tuned nprobe must be measured under the SAME phase-2 config it
+    # will serve with — a γ/rerank mismatch would pick an nprobe whose
+    # recorded recall the serving path can't hit
+    phase2 = dict(
+        k=a.k, refine=a.refine if a.refine > 0 else None,
+        rerank_base=base if a.rerank else None, refine_mode=a.refine_mode,
+    )
+    pool_scored = None
+    if a.amortized:
+        pool, pool_scored = rabitq.rabitq_search_sweep(
+            queries, codes, cents_full, meta, nprobes=grid, **phase2
         )
+        search = pool.__getitem__
+    else:
+        from .operators import ivf
+
+        # exact top-nprobe centroid ranking unless graph probes are asked for
+        graph = None
+        if a.use_graph:
+            graph = ivf.load_centroid_graph(spark, a.index)
+            # enter the saved graph's geometry: ip graphs are (d+1)-dim
+            # MIPS-augmented, cosine's normalize is a harmless no-op for
+            # ranking (per-query positive scale), l2 is the identity
+            gq = rabitq.prepare_queries_for_metric(queries, meta)
+
+        def search(nprobe: int) -> DataFrame:
+            probes = None if graph is None else ivf.graph_probes(gq, graph, nprobe)
+            return rabitq.rabitq_search(
+                queries, codes, cents_full, meta, nprobe=nprobe,
+                probes=probes, **phase2,
+            )
+
+    sweep = dict(
+        k=a.k, grid=grid, rounds=a.rounds, metric=metric,
+        mips_norm=meta.get("mips_norm"), warmup=a.warmup, gt=gt_df,
+        wall_stat=a.wall_stat,
+    )
+    try:
+        if a.target_recall is None:
+            rows = nprobe_sweep(queries, base, search, **sweep)
+        else:
+            np_sel, rows = tune_nprobe(queries, base, search, a.target_recall, **sweep)
+    finally:
+        if pool_scored is not None:
+            pool_scored.unpersist()
+    if a.target_recall is not None:
         got = next(r for r in rows if r.nprobe == np_sel)
         print(f"tuned nprobe={np_sel} recall={got.recall:.5f} "
               f"(target {a.target_recall})")
@@ -226,15 +249,6 @@ def cmd_search(spark: SparkSession, a: argparse.Namespace) -> int:
                     f"target {a.target_recall}; saved tuned_nprobe={np_sel} "
                     f"with tuned_target_met=false -> {a.index}/meta.json"
                 )
-    else:
-        rows = nprobe_sweep(
-            queries, base, centroids, k=a.k, grid=grid, mode="rabitq",
-            index_df=codes, centroids_full=cents_full, meta=meta,
-            rounds=a.rounds, probes_factory=probes_factory, metric=metric,
-            amortized=a.amortized, rerank=a.rerank, warmup=a.warmup,
-            refine=a.refine if a.refine > 0 else None, gt=gt_df,
-            refine_mode=a.refine_mode, wall_stat=a.wall_stat,
-        )
     print("nprobe,QPS,recall,ratio")
     for r in rows:
         print(f"{r.nprobe},{r.qps:.2f},{r.recall:.5f},{r.ratio:.5f}")

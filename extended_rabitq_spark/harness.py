@@ -4,7 +4,9 @@ builds the nprobe grid; ``:155-199`` sweeps until recall > 0.997 or a
 plateau; ``:97-134`` averages rounds).
 
 This is driver-side control flow over Spark jobs, exactly like the
-reference's main() — the per-setting work is fully distributed.
+reference's main() — the per-setting work is fully distributed.  The
+caller hands the sweep its search, one ``search(nprobe)`` callable per
+method, so the harness names no index or operator.
 """
 
 from __future__ import annotations
@@ -12,15 +14,14 @@ from __future__ import annotations
 import statistics
 import time
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import metrics
 from .functions import vector as V
-from .operators import ivf as ivf_ops
 from .operators import knn as knn_ops
-from .operators import rabitq as rabitq_ops
 
 DEFAULT_GRID = [1, 2, 3, 5, 8, 12, 16]
 RECALL_SATURATION = 0.997  # src/test_search.cpp:190-196
@@ -39,85 +40,61 @@ class SweepRow:
 def nprobe_sweep(
     queries: DataFrame,
     base: DataFrame,
-    centroids: DataFrame,
+    search: Callable[[int], DataFrame],
     k: int = 10,
     grid: list[int] | None = None,
-    mode: str = "ivf",
-    index_df: DataFrame | None = None,
-    centroids_full: DataFrame | None = None,
-    meta: dict | None = None,
     rounds: int = 1,
-    estimator: str = "searcher",
-    probes_factory=None,
     recall_stop: float = RECALL_SATURATION,
     metric: str = "l2",
-    amortized: bool = False,
-    refine: int | None = 4,
-    rerank: bool = False,
+    mips_norm: float | None = None,
     warmup: bool = False,
     gt: DataFrame | None = None,
-    refine_mode: str = "rank",
     wall_stat: str = "median",
 ) -> list[SweepRow]:
-    """Sweep the nprobe grid ascending; stop at recall saturation or
-    plateau.  mode='ivf' scans exact distances over probed clusters;
-    mode='rabitq' runs the quantized two-phase search (requires index_df,
-    centroids_full, meta from build_index/save_index).
+    """Time ``search`` over the nprobe grid, ascending and without
+    repeats; stop at recall saturation or plateau.
+
+    ``search(nprobe)`` is the caller's search at one grid point → a
+    (qid, rank, id, dist | est_dist) DataFrame of the top-k per query in
+    ``queries`` (qid, qvec) over ``base`` (id, vec).  The harness only
+    times it and scores it; the caller chooses the method and its
+    settings (an IVF scan, a RaBitQ search with its refine/rerank
+    config or graph probes, or one point of a pre-scored sweep pool).
 
     Returns one row per executed setting with recall@k, mean distance
     ratio, and end-to-end queries/sec (whole-batch wall clock — the
     honest Spark analog of the reference's sequential QPS,
     BASELINE.md interpretation note).  The timed wall covers the SEARCH
-    — probe filter, phase-2 finalize, and materialization of the final
-    ranking — exactly what the reference brackets with its clock
+    — ``search(nprobe)`` and the materialization of its ranking —
+    exactly what the reference brackets with its clock
     (src/test_search.cpp:97-134); metric preparation (the E4
     exact-distance recompute of returned ids, recall/ratio joins) runs
     after the clock stops, as the reference's tools.hpp does (r9: rounds
     1-8 timed the recompute join too, which let the 1M base scan
-    dominate every wall and inverted the QPS-vs-nprobe shape).
+    dominate every wall and inverted the QPS-vs-nprobe shape).  An
+    ``est_dist`` result is re-scored with exact ``metric`` distances of
+    its ids before the ratio; the ranking itself is the search's.
 
-    ``probes_factory`` (mode='rabitq' only): ``nprobe -> probes
-    DataFrame`` injected into :func:`rabitq_search` — the W2 seam (e.g.
-    ``lambda np_: ivf.graph_probes(queries, graph, np_)`` with a graph
-    loaded from the index artifact), mirroring the reference's sweep
-    running through its HNSW initializer when K ≥ 20000.
-
-    ``amortized=True`` (mode='rabitq', no probes_factory): candidate
-    scoring runs ONCE at max(grid) via :func:`rabitq_search_sweep`
-    (probe-rank-tagged pool; per-point results row-identical — see its
-    tests); each grid point then only pays filter + phase-2.  The
-    FIRST executed point's wall absorbs the pool scoring, later points
-    are near-free — so per-row QPS is an amortization schedule, not a
-    standalone per-np throughput.  Best when the sweep will traverse
-    most of the grid (recall-target tuning); a sweep that stops at the
-    first point has over-scored by max(grid)/grid[0].
-
-    ``refine`` (mode='rabitq'): the E2 shortlist budget γ — keep the
-    γ·k best error-bound lower bounds per query before phase-2 (the
-    reference's sequential distk threshold is the adaptive analog;
-    rank-cut γ≥1 is a superset at equal budget).  ``rerank=True`` adds
-    the E4 exact re-rank: final ranks come from true distances of the
-    γ·k shortlist joined against ``base`` (broadcast shortlist — the
-    base table is scanned in place, never shuffled), instead of the
-    B-bit estimate.
+    ``metric='ip'`` needs ``mips_norm`` (the index meta's M, set by
+    rabitq.mips_prepare / build_index(metric='ip')): the ratio is taken
+    in the MIPS augmented-L2 geometry, where distances are nonnegative.
 
     ``warmup=True`` runs ONE untimed extra round of EVERY grid point
     (full pipeline, incl. the E4 ratio recompute) before that point's
-    timing: it absorbs JVM/codegen first-touch and — in amortized mode
-    — the shared pool scoring, so the QPS column reports steady-state
-    per-point throughput instead of a warm-up-ordering artifact (the
-    reference averages 3 rounds for the same reason,
+    timing: it absorbs JVM/codegen first-touch and — for a sweep-pool
+    search — the shared pool scoring, so the QPS column reports
+    steady-state per-point throughput instead of a warm-up-ordering
+    artifact (the reference averages 3 rounds for the same reason,
     src/test_search.cpp:97-134; VERDICT r7 item 3).  r9 (VERDICT r8
     item 5): warming only the FIRST point left np1/np2 reading 50/78
     QPS against a 210-237 plateau in the committed 1M sweep — each
     point's finalize plan JITs and touches persisted-pool partitions
-    of its own, so every point gets its own untimed round (in
-    amortized mode each extra round is only a filter + phase-2 over
-    the persisted pool).  The per-point wall is the MEDIAN of rounds
-    (noise-robust for rounds≥3); ``wall_stat='min'`` reports the
-    minimum instead — the consistent estimator under strictly-additive
-    interference (GC windows, co-tenant load), for boxes whose
-    throughput drifts on timescales longer than one point's rounds.
+    of its own, so every point gets its own untimed round.  The
+    per-point wall is the MEDIAN of rounds (noise-robust for
+    rounds≥3); ``wall_stat='min'`` reports the minimum instead — the
+    consistent estimator under strictly-additive interference (GC
+    windows, co-tenant load), for boxes whose throughput drifts on
+    timescales longer than one point's rounds.
 
     ``gt``: precomputed ground truth ``(qid, rank, id, dist)`` — the
     reference splits GT out of the sweep for exactly this reason
@@ -127,11 +104,17 @@ def nprobe_sweep(
     contract (the CLI's ``--gt-parquet`` writes a sidecar and checks it).
     The frame is persisted and unpersisted by this function.
     """
-    grid = grid or DEFAULT_GRID
+    grid = sorted(set(grid or DEFAULT_GRID))
     if wall_stat not in ("median", "min"):
         raise ValueError(f"nprobe_sweep: wall_stat must be 'median' or 'min', got {wall_stat!r}")
-    if metric != "l2" and mode == "ivf":
-        raise ValueError("nprobe_sweep: mode='ivf' supports metric='l2' only")
+    if metric == "ip" and mips_norm is None:
+        # A missing M would default the augmentation to ‖q‖² + 2·dist,
+        # which can go negative and turn every ratio into sqrt-of-negative
+        # NaN — fail loudly instead (ADVICE r4).
+        raise ValueError(
+            "nprobe_sweep(metric='ip') requires mips_norm "
+            "(meta['mips_norm'], set by rabitq.mips_prepare / build_index(metric='ip'))"
+        )
     nq = queries.count()
     if gt is None:
         # GT via the map-side-combined scan — identical output to the
@@ -162,54 +145,26 @@ def nprobe_sweep(
             )
         gt = gt.where(F.col("rank") <= k)
     gt.persist().count()
-    indexed = None
-    if mode == "ivf":
-        # scale assignment (≡ declarative assign_clusters by test)
-        indexed = ivf_ops.assign_clusters_combined(base, centroids)
-        indexed.persist().count()
-    sweep_pool = None
-    if amortized:
-        if mode != "rabitq" or probes_factory is not None:
-            raise ValueError(
-                "nprobe_sweep: amortized=True requires mode='rabitq' "
-                "without probes_factory"
-            )
-        sweep_pool, sweep_scored = rabitq_ops.rabitq_search_sweep(
-            queries, index_df, centroids_full, meta,
-            nprobes=list(grid), k=k, estimator=estimator, refine=refine,
-            rerank_base=base if rerank else None, refine_mode=refine_mode,
-        )
     out: list[SweepRow] = []
     prev_recall = -1.0
     try:
         for nprobe in grid:
             walls = []
             # warm-up: one untimed extra round of EVERY grid point
-            # (absorbs JVM first-touch, the amortized pool scoring, and
+            # (absorbs JVM first-touch, a sweep pool's scoring, and
             # each point's own finalize-plan JIT — VERDICT r8 item 5)
             extra = 1 if warmup else 0
             for _r in range(rounds + extra):
                 timed = _r >= extra
                 t0 = time.perf_counter()
-                if mode == "ivf":
-                    res = ivf_ops.ivf_search(queries, indexed, centroids, nprobe, k)
-                elif sweep_pool is not None:
-                    res = sweep_pool[nprobe]
-                else:
-                    res = rabitq_ops.rabitq_search(
-                        queries, index_df, centroids_full, meta, nprobe=nprobe, k=k,
-                        estimator=estimator, refine=refine,
-                        refine_mode=refine_mode,
-                        rerank_base=base if rerank else None,
-                        probes=None if probes_factory is None else probes_factory(nprobe),
-                    )
+                res = search(nprobe)
                 res.persist().count()
                 if timed:
                     walls.append(time.perf_counter() - t0)
                 if _r < rounds + extra - 1:
-                    # drop the result cache between rounds — in amortized
-                    # mode `res` is ONE DataFrame per grid point, and in
-                    # per-point mode identical plans can still hit the
+                    # drop the result cache between rounds — a sweep
+                    # pool's `res` is ONE DataFrame per grid point, and a
+                    # per-point search's identical plans can still hit the
                     # CacheManager's plan matching — either way later
                     # rounds would free-scan round 1's cached result and
                     # inflate QPS by up to rounds× (review r5); this also
@@ -257,16 +212,6 @@ def nprobe_sweep(
                 # geometry the index optimizes: aug² = ‖q‖² + M² − 2⟨q,x⟩
                 # = ‖q‖² + M² + 2·dist ≥ 0 — order-identical per query,
                 # so the reference's ≥1 ratio convention carries over.
-                mips_norm = (meta or {}).get("mips_norm")
-                if mips_norm is None:
-                    # A missing M would default the augmentation to
-                    # ‖q‖² + 2·dist, which can go negative and turn every
-                    # ratio into sqrt-of-negative NaN — fail loudly
-                    # instead (ADVICE r4).
-                    raise ValueError(
-                        "nprobe_sweep(metric='ip') requires meta['mips_norm'] "
-                        "(set by rabitq.mips_prepare / build_index(metric='ip'))"
-                    )
                 m2 = float(mips_norm) ** 2
                 qn = queries.select(
                     "qid", F.expr(V.l2sq_self("qvec")).alias("_qn2")
@@ -301,41 +246,25 @@ def nprobe_sweep(
             prev_recall = rec
     finally:
         gt.unpersist()
-        if indexed is not None:
-            indexed.unpersist()
-        if sweep_pool is not None:
-            sweep_scored.unpersist()
     return out
 
 
 def tune_nprobe(
     queries: DataFrame,
     base: DataFrame,
-    centroids: DataFrame,
+    search: Callable[[int], DataFrame],
     target_recall: float = 0.95,
-    k: int = 10,
-    grid: list[int] | None = None,
-    mode: str = "rabitq",
-    index_df: DataFrame | None = None,
-    centroids_full: DataFrame | None = None,
-    meta: dict | None = None,
-    estimator: str = "searcher",
-    metric: str = "l2",
-    probes_factory=None,
-    rounds: int = 1,
-    amortized: bool = False,
-    gt: DataFrame | None = None,
-    refine: int | None = 4,
-    rerank: bool = False,
-    refine_mode: str = "rank",
+    **sweep,
 ) -> tuple[int, list[SweepRow]]:
     """W5 serving knob: the smallest grid nprobe whose measured recall@k
     meets ``target_recall`` on the given validation queries → (nprobe,
-    executed sweep rows).  The sweep stops as soon as the target is met
-    (the reference's saturation loop, src/test_search.cpp:155-199, with
-    the target as the stop line instead of the fixed 0.997) — cheaper
-    than a full-grid sweep, and the returned rows document the achieved
-    (recall, ratio, QPS) at the chosen setting.
+    executed sweep rows).  This is :func:`nprobe_sweep` (``sweep`` holds
+    its other arguments) with the target as its stop line instead of the
+    fixed 0.997 (the reference's saturation loop,
+    src/test_search.cpp:155-199) — cheaper than a full-grid sweep, and
+    the returned rows document the achieved (recall, ratio, QPS) at the
+    chosen setting.  ``search`` must run the phase-2 config the index
+    will serve with, or the recorded recall will not transfer.
 
     If no grid point reaches the target (or recall plateaus first), the
     largest executed nprobe is returned — callers can check the rows'
@@ -346,13 +275,7 @@ def tune_nprobe(
     with it; re-tune when the index is rebuilt (like centroid
     retraining).
     """
-    rows = nprobe_sweep(
-        queries, base, centroids, k=k, grid=grid, mode=mode,
-        index_df=index_df, centroids_full=centroids_full, meta=meta,
-        estimator=estimator, recall_stop=target_recall, metric=metric,
-        probes_factory=probes_factory, rounds=rounds, amortized=amortized,
-        gt=gt, refine=refine, rerank=rerank, refine_mode=refine_mode,
-    )
+    rows = nprobe_sweep(queries, base, search, recall_stop=target_recall, **sweep)
     for r in rows:
         if r.recall >= target_recall:
             return r.nprobe, rows

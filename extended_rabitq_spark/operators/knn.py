@@ -138,7 +138,8 @@ def exact_knn_combined(
     """Scale-path exact KNN with map-side partial top-k (see module doc).
 
     Semantically identical to :func:`exact_knn` (same distances, same
-    tie-break); verified against it in tests/test_knn.py.
+    tie-break, NULL distances last); verified against it in
+    tests/test_knn.py.
     """
     q_rows = queries.select("qid", "qvec").collect()  # NQ is small by contract
     if not q_rows:
@@ -156,7 +157,13 @@ def exact_knn_combined(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.array(pdf["vec"].tolist(), dtype=np.float64)  # B × D
+            vecs = pdf["vec"]
+            ok = np.fromiter(
+                (v is not None and len(v) == Q.shape[1] for v in vecs), bool, len(vecs)
+            )
+            X = np.zeros((len(vecs), Q.shape[1]))  # B × D
+            if ok.any():
+                X[ok] = np.array(vecs[ok].tolist(), dtype=np.float64)
             ids = pdf["id"].to_numpy(dtype=np.int64)
             if metric == "l2":
                 d = q_sq[:, None] + (X * X).sum(axis=1)[None, :] - 2.0 * (Q @ X.T)
@@ -165,6 +172,11 @@ def exact_knn_combined(
             else:  # cosine distance
                 xn = np.sqrt((X * X).sum(axis=1))
                 d = 1.0 - (Q @ X.T) / (np.sqrt(q_sq)[:, None] * xn[None, :])
+            # A NULL, short or NULL-holding vector is scored NULL by the
+            # declarative distance and ranked last: it enters the
+            # selection as +inf, so it is kept only where a query runs
+            # out of scored rows, and the recompute below gives it NULL.
+            d[np.isnan(d) | ~ok] = np.inf
             kk = min(k, d.shape[1])
             # Keep EVERY row at or below the k-th smallest distance (plus a
             # relative epsilon for BLAS low-bit noise), not exactly k rows:

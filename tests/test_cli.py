@@ -81,6 +81,40 @@ def test_cli_full_lifecycle(spark, tmp_path, capsys):
     assert float(row[2]) >= 0.7 and float(row[3]) < 1.05
 
 
+def test_cli_search_amortized_matches_per_point(spark, tmp_path, capsys):
+    """--amortized hands the harness one scored sweep pool: the recall
+    and ratio columns equal the per-point sweep's, the CLI unpersists
+    the pool when the sweep is done, and --use-graph (graph probes carry
+    no probe ranks) is refused."""
+    rng = np.random.default_rng(5)
+    mat = rng.standard_normal((80, 8)).astype(np.float32)
+    src = str(tmp_path / "base.fvecs")
+    vecs_io.write_fvecs(src, mat)
+    base_pq = str(tmp_path / "base.parquet")
+    idx = str(tmp_path / "idx")
+    assert cli.main(["ingest", src, base_pq]) == 0
+    assert cli.main(["create-index", base_pq, idx, "--k", "4", "--b", "4"]) == 0
+    q_pq = str(tmp_path / "q.parquet")
+    spark.read.parquet(base_pq).where("id < 5").write.parquet(q_pq)
+    search = ["search", idx, q_pq, "--base", base_pq, "--k", "5", "--grid", "2,4"]
+
+    def recall_ratio(extra):
+        capsys.readouterr()
+        assert cli.main(search + extra) == 0
+        lines = capsys.readouterr().out.strip().splitlines()
+        assert lines[0] == "nprobe,QPS,recall,ratio"
+        return [(np_, rec, rat) for np_, _qps, rec, rat in
+                (ln.split(",") for ln in lines[1:])]
+
+    per_point = recall_ratio([])
+    assert [r[0] for r in per_point] == ["2", "4"]
+    n_persistent = len(spark.sparkContext._jsc.getPersistentRDDs())
+    assert recall_ratio(["--amortized"]) == per_point
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == n_persistent
+    with pytest.raises(SystemExit, match="incompatible with --use-graph"):
+        cli.main(search + ["--amortized", "--use-graph"])
+
+
 def test_cli_clean_corpus(tmp_path, capsys, spark):
     from conftest import SF_SMOKE
 

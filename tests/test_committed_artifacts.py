@@ -68,7 +68,7 @@ def test_committed_1m_adaptive_quality_columns_pinned():
 def sf01_sweep_points(spark):
     """Re-derive the sf0.1 nprobe∈{3,5} points exactly the way the
     committed CSV was produced (bench.py SPARK_GRAFT_SWEEP path →
-    harness.nprobe_sweep, mode='rabitq', defaults): seeded
+    harness.nprobe_sweep over rabitq_search, defaults): seeded
     label_centroids → build_index(B=4) → 500-query batch."""
     from extended_rabitq_spark import harness
     from extended_rabitq_spark.operators import ivf, rabitq
@@ -85,11 +85,12 @@ def sf01_sweep_points(spark):
     queries = (emb.where(F.col("vec_id") >= NQ).limit(500)
                .select(F.col("vec_id").alias("qid"),
                        F.col("embedding").alias("qvec")).cache())
+    cents_full = rabitq.centroids_with_rotation(spark, cents, meta)
     rows = harness.nprobe_sweep(
-        queries, base, cents, k=10, grid=[3, 5], mode="rabitq",
-        index_df=index_df,
-        centroids_full=rabitq.centroids_with_rotation(spark, cents, meta),
-        meta=meta,
+        queries, base,
+        lambda np_: rabitq.rabitq_search(queries, index_df, cents_full, meta,
+                                         nprobe=np_, k=10),
+        k=10, grid=[3, 5],
     )
     index_df.unpersist()
     return {r.nprobe: (r.recall, r.ratio) for r in rows}

@@ -71,6 +71,26 @@ def test_combined_ties_across_partitions(spark):
     assert a == b
 
 
+@pytest.mark.parametrize("k", [3, 199])
+def test_combined_null_and_short_vectors_match_declarative(spark, k):
+    """A NULL or short base vector has a NULL distance, ranked last: the
+    combined form keeps such rows where exact_knn does (k=199 of 200
+    reaches them) instead of failing in the numpy pre-selection."""
+    rng = np.random.default_rng(13)
+    rows = [(int(i), [float(x) for x in rng.standard_normal(16)]) for i in range(200)]
+    rows[57] = (57, None)
+    rows[91] = (91, rows[91][1][:8])
+    base = _df(spark, rows, "id long, vec array<double>").repartition(2)
+    queries = _df(spark, [(0, [float(x) for x in rng.standard_normal(16)])],
+                  "qid long, qvec array<double>")
+    a = _collect_sorted(knn.exact_knn(queries, base, k=k))
+    b = _collect_sorted(knn.exact_knn_combined(queries, base, k=k))
+    assert a == b
+    assert len(b) == k
+    if k == 199:
+        assert b[-1][2:] == (57, None)  # NULLs last, then id order
+
+
 def test_maxsim_topk_hand_computed(spark):
     """MaxSim late interaction on a hand-computable fixture: each query
     vector picks its best member vector per entity; the group sums the

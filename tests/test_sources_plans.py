@@ -186,7 +186,12 @@ class TestSweep:
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
         )
         cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
-        rows = nprobe_sweep(queries, base, cents, k=10, grid=[1, 3, 10])
+        indexed = ivf.assign_clusters_combined(base, cents).persist()
+        rows = nprobe_sweep(
+            queries, base, lambda np_: ivf.ivf_search(queries, indexed, cents, np_, 10),
+            k=10, grid=[1, 3, 10],
+        )
+        indexed.unpersist()
         recalls = [r.recall for r in rows]
         assert recalls == sorted(recalls), "recall must not decrease with nprobe"
         assert recalls[-1] > 0.99  # nprobe = K (all clusters) ≡ exact
@@ -207,10 +212,15 @@ class TestSweep:
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
         )
         cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
+        indexed = ivf.assign_clusters_combined(base, cents).persist()
+
+        def search(np_):
+            return ivf.ivf_search(queries, indexed, cents, np_, 10)
+
         # modest target: met before the full grid → early stop
         np_sel, rows = tune_nprobe(
-            queries, base, cents, target_recall=0.5, k=10,
-            grid=[1, 3, 10, 16], mode="ivf",
+            queries, base, search, target_recall=0.5, k=10,
+            grid=[1, 3, 10, 16],
         )
         chosen = next(r for r in rows if r.nprobe == np_sel)
         assert chosen.recall >= 0.5
@@ -221,15 +231,16 @@ class TestSweep:
         assert len(rows) < 4  # stopped before exhausting the grid
         # unreachable target: sweeps everything, returns the max
         np_all, rows_all = tune_nprobe(
-            queries, base, cents, target_recall=1.1, k=10,
-            grid=[1, 16], mode="ivf",
+            queries, base, search, target_recall=1.1, k=10, grid=[1, 16],
         )
         assert np_all == rows_all[-1].nprobe == 16
         assert rows_all[-1].recall <= 1.0
+        indexed.unpersist()
 
     def test_amortized_sweep_matches_per_point(self, spark):
-        """amortized=True (one probe-rank-tagged scored pool) must report
-        the SAME recall/ratio per grid point as the per-point sweep —
+        """A sweep-pool search (rabitq_search_sweep: one probe-rank-tagged
+        scored pool) must report the SAME recall/ratio per grid point as
+        the per-point sweep —
         only the wall-clock attribution differs."""
         from extended_rabitq_spark.harness import nprobe_sweep
         from extended_rabitq_spark.operators import ivf, rabitq
@@ -245,21 +256,23 @@ class TestSweep:
         idx, meta = rabitq.build_index(base, cents, total_bits=4)
         idx = idx.persist()
         cf = rabitq.centroids_with_rotation(spark, cents, meta)
-        kw = dict(k=10, grid=[2, 4], mode="rabitq", index_df=idx,
-                  centroids_full=cf, meta=meta, recall_stop=2.0)
-        plain = nprobe_sweep(queries, base, cents, **kw)
-        amort = nprobe_sweep(queries, base, cents, amortized=True, **kw)
+        kw = dict(k=10, grid=[2, 4], recall_stop=2.0)
+        plain = nprobe_sweep(
+            queries, base,
+            lambda np_: rabitq.rabitq_search(queries, idx, cf, meta, nprobe=np_, k=10),
+            **kw,
+        )
+        pool, scored = rabitq.rabitq_search_sweep(
+            queries, idx, cf, meta, nprobes=[2, 4], k=10
+        )
+        amort = nprobe_sweep(queries, base, pool.__getitem__, **kw)
+        scored.unpersist()
         assert [r.nprobe for r in plain] == [r.nprobe for r in amort]
         for p, a in zip(plain, amort):
             # identical result rows → identical metrics up to agg-order
             # float noise in the avg
             assert abs(p.recall - a.recall) < 1e-9
             assert abs(p.ratio - a.ratio) < 1e-9
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="amortized"):
-            nprobe_sweep(queries, base, cents, amortized=True,
-                         k=10, grid=[2], mode="ivf")
         idx.unpersist()
 
     def test_gt_cache_matches_recompute(self, spark):
@@ -280,27 +293,98 @@ class TestSweep:
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
         )
         cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
-        kw = dict(k=10, grid=[1, 3], mode="ivf", recall_stop=2.0)
-        plain = nprobe_sweep(queries, base, cents, **kw)
+        indexed = ivf.assign_clusters_combined(base, cents).persist()
+        kw = dict(k=10, grid=[1, 3], recall_stop=2.0)
+        search = lambda np_: ivf.ivf_search(queries, indexed, cents, np_, 10)  # noqa: E731
+        plain = nprobe_sweep(queries, base, search, **kw)
         deep_gt = knn.exact_knn_combined(queries, base, k=25)
-        cached = nprobe_sweep(queries, base, cents, gt=deep_gt, **kw)
+        cached = nprobe_sweep(queries, base, search, gt=deep_gt, **kw)
         assert [r.nprobe for r in plain] == [r.nprobe for r in cached]
         for p, c in zip(plain, cached):
             assert abs(p.recall - c.recall) < 1e-9
             assert abs(p.ratio - c.ratio) < 1e-9
         shallow = knn.exact_knn_combined(queries, base, k=5)
         with _pytest.raises(ValueError, match="ragged"):
-            nprobe_sweep(queries, base, cents, gt=shallow, **kw)
+            nprobe_sweep(queries, base, search, gt=shallow, **kw)
         # ragged cache (ADVICE r8): full depth for most queries but one
         # query missing entirely — a global max(rank) check passes this,
         # the per-query validation must not
         ragged = deep_gt.where(F.col("qid") != 0)
         with _pytest.raises(ValueError, match="ragged"):
-            nprobe_sweep(queries, base, cents, gt=ragged, **kw)
+            nprobe_sweep(queries, base, search, gt=ragged, **kw)
         # one query shallower than k, global max still >= k
         ragged2 = deep_gt.where((F.col("qid") != 1) | (F.col("rank") <= 5))
         with _pytest.raises(ValueError, match="ragged"):
-            nprobe_sweep(queries, base, cents, gt=ragged2, **kw)
+            nprobe_sweep(queries, base, search, gt=ragged2, **kw)
+        indexed.unpersist()
+
+    def test_sweep_runs_grid_ascending_without_repeats(self, spark):
+        """The grid is swept sorted and deduplicated, whatever order the
+        caller passes: a repeated point used to trip the plateau stop,
+        and a descending grid stopped at its first (largest) point, so
+        tune_nprobe could miss the smallest nprobe meeting its target.
+        On this fixture nprobe 1 / 3 / 16 read recall 0.15 / 0.41 / 1.0."""
+        from extended_rabitq_spark.harness import tune_nprobe
+        from extended_rabitq_spark.operators import ivf
+
+        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        base = emb.where(F.col("vec_id") >= 10).select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        )
+        queries = emb.where(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+        )
+        cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
+        indexed = ivf.assign_clusters_combined(base, cents).persist()
+
+        def search(np_):
+            return ivf.ivf_search(queries, indexed, cents, np_, 10)
+
+        np_sel, rows = tune_nprobe(
+            queries, base, search, target_recall=0.5, k=10, grid=[3, 3, 16]
+        )
+        assert [r.nprobe for r in rows] == [3, 16]
+        assert np_sel == 16 and rows[-1].recall >= 0.5
+        np_sel, rows = tune_nprobe(
+            queries, base, search, target_recall=0.3, k=10, grid=[16, 1, 3]
+        )
+        assert [r.nprobe for r in rows] == [1, 3]
+        assert np_sel == 3 and rows[0].recall < 0.3 <= rows[1].recall
+        indexed.unpersist()
+
+    @pytest.mark.parametrize(
+        "warmup, wall_stat", [(True, "median"), (False, "min"), (True, "min")]
+    )
+    def test_warmup_and_wall_stat_keep_metrics(self, spark, warmup, wall_stat):
+        """The untimed warm-up round and the min-of-rounds wall change
+        only the QPS column: recall and ratio equal the default run's.
+        An unknown wall_stat is refused."""
+        from extended_rabitq_spark.harness import nprobe_sweep
+        from extended_rabitq_spark.operators import ivf
+
+        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        base = emb.where(F.col("vec_id") >= 10).select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        )
+        queries = emb.where(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+        )
+        cents = ivf.label_centroids(emb.where(F.col("vec_id") >= 10))
+        indexed = ivf.assign_clusters_combined(base, cents).persist()
+        kw = dict(k=10, grid=[1, 3], recall_stop=2.0)
+        search = lambda np_: ivf.ivf_search(queries, indexed, cents, np_, 10)  # noqa: E731
+        plain = nprobe_sweep(queries, base, search, **kw)
+        timed = nprobe_sweep(
+            queries, base, search, rounds=2, warmup=warmup, wall_stat=wall_stat, **kw
+        )
+        assert [r.nprobe for r in timed] == [r.nprobe for r in plain] == [1, 3]
+        for p, t in zip(plain, timed):
+            assert abs(p.recall - t.recall) < 1e-9
+            assert abs(p.ratio - t.ratio) < 1e-9
+            assert t.qps > 0
+        with pytest.raises(ValueError, match="wall_stat"):
+            nprobe_sweep(queries, base, search, wall_stat="mean", **kw)
+        indexed.unpersist()
 
     def test_results_csv_sinks(self, tmp_path):
         """S7: the reference's two committed CSV artifacts —
